@@ -32,7 +32,9 @@ streaming watermarked windowed aggs, stateful dedup (TTL-evicted) and
           gap sessionization (event-time state)
 rat       category tables: chunk apply, color ramps, external RAT store
 cmdline   rios_spark_calcstats / rios_spark_printstats console scripts
-manifest  per-partition lineage + metrics manifest, resume scheduling
+plans     adaptive split, salted aggregation, the resume manifest, and
+          sizing: the one home of every input-size decision (footer
+          counts, fan-out width, broadcast and pair gates, GEMM budget)
 """
 
 __version__ = "0.3.0"

@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from rios_spark.plans import sizing
+
 
 def cosine_sim_col(a: Column | str, b: Column | str) -> Column:
     """Cosine similarity of two array<float> columns with built-in
@@ -48,24 +50,18 @@ def _normalize(mat: np.ndarray) -> np.ndarray:
     return mat / norms
 
 
-# Max elements in any one similarity matrix (queries x data) — bounds
-# per-task memory no matter how large the Arrow batch or the broadcast
-# data side is (round-1 VERDICT #4 applied to the cosine path too).
-ANN_GEMM_BUDGET = 8_000_000
-
-
 def _topk_cosine(
     qm: np.ndarray, dm: np.ndarray, dids: np.ndarray, k: int
 ) -> tuple[np.ndarray, np.ndarray]:
     """Exact top-k by cosine for each row of qm against dm (both
     L2-normalized), chunking query rows so the similarity matrix stays
-    <= ANN_GEMM_BUDGET elements. Returns (ids, sims) of shape (nq, kk),
+    <= sizing.GEMM_BUDGET elements. Returns (ids, sims) of shape (nq, kk),
     kk = min(k, len(dm)), sorted desc with (-sim, id) tie-break."""
     nq, nd = len(qm), len(dm)
     kk = min(k, nd)
     out_i = np.empty((nq, kk), np.int64)
     out_s = np.empty((nq, kk), np.float64)
-    step = max(1, ANN_GEMM_BUDGET // max(nd, 1))
+    step = max(1, sizing.GEMM_BUDGET // max(nd, 1))
     for s in range(0, nq, step):
         e = min(s + step, nq)
         sim = qm[s:e] @ dm.T
@@ -125,84 +121,6 @@ def cosine_topk_bruteforce(
     return queries.select(q_id, q_emb).mapInPandas(kern, schema)
 
 
-# Driver-side footer reads are ~ms each; past this many files a
-# distributed count() is cheaper than a serial driver loop.
-FAST_COUNT_MAX_FILES = 256
-
-
-def _metadata_row_count(df: DataFrame) -> int | None:
-    """Row count from parquet footers, or None when it cannot be proven
-    safe. Only a plan that is count-preserving down to a bare file scan
-    qualifies (Project/SubqueryAlias wrappers only — a Filter/Join/
-    Aggregate changes multiplicity); only local parquet files are read
-    (remote stores fall back to the distributed count)."""
-    try:
-        node = df._jdf.queryExecution().optimizedPlan()
-        while True:
-            name = node.getClass().getSimpleName()
-            if name in ("Project", "SubqueryAlias"):
-                node = node.children().head()
-            elif name.startswith("LogicalRelation"):
-                files = df.inputFiles()
-                if not files or len(files) > FAST_COUNT_MAX_FILES:
-                    return None
-                import pyarrow.parquet as pq
-
-                total = 0
-                for f in files:
-                    if not f.startswith("file:") or not f.endswith(".parquet"):
-                        return None
-                    path = f[7:] if f.startswith("file://") else f[5:]
-                    total += pq.ParquetFile(path).metadata.num_rows
-                return total
-            else:
-                return None
-    except Exception:
-        return None
-
-
-def fast_count(df: DataFrame) -> int:
-    """Count for DISPATCH decisions (r3 VERDICT #4: the auto-dispatch
-    paid a full count() job before choosing a plan — ~0.14 s of the
-    embedding_topk regression). A bare parquet scan answers from file
-    footers driver-side; anything else runs the normal distributed
-    count. Always exact — never an estimate."""
-    n = _metadata_row_count(df)
-    return df.count() if n is None else n
-
-
-# below this many rows per task, fan-out costs more than it buys: each
-# extra partition spins a python worker (~10 ms) while the kernel's
-# per-row cost is microseconds
-ENSURE_PARALLELISM_ROWS_PER_TASK = 2048
-
-
-def ensure_parallelism(
-    df: DataFrame, min_parts: int | None = None, rows_hint: int | None = None
-) -> DataFrame:
-    """Repartition a DataFrame that is under-parallelized for a
-    broadcast-side Arrow kernel. A small-SF parquet table often arrives
-    as ONE scan partition (a single file under maxPartitionBytes), so a
-    mapInPandas kernel runs on one core; at production scale the input
-    already has many partitions and this is a no-op — the round-trip
-    shuffle only ever happens on inputs small enough that it is cheap.
-
-    rows_hint (optional, caller-known row count or upper bound) sizes
-    the fan-out: a 20-row query frame repartitioned to 32 partitions
-    pays ~0.3 s spinning 32 python workers for microseconds of kernel
-    work (the r3 embedding_topk dispatch overhead), so tiny frames stay
-    put and mid-size frames fan out only as wide as ~2048 rows/task."""
-    spark = df.sparkSession
-    target = min_parts or spark.sparkContext.defaultParallelism
-    if rows_hint is not None:
-        target = min(target, max(1, rows_hint // ENSURE_PARALLELISM_ROWS_PER_TASK))
-        if target <= 1:
-            return df
-    if df.rdd.getNumPartitions() < max(2, target // 2):
-        return df.repartition(target)
-    return df
-
-
 def cosine_topk(
     queries: DataFrame,
     data: DataFrame,
@@ -225,16 +143,16 @@ def cosine_topk(
     q_emb = kwargs.get("q_emb", "embedding")
     d_id = kwargs.get("d_id", "vec_id")
     d_emb = kwargs.get("d_emb", "embedding")
-    n = fast_count(data)
+    n = sizing.fast_count(data)
     if n <= broadcast_threshold:
         pdf = data.select(d_id, d_emb).toPandas()
         # caller hint first; else a free footer count when the query
         # plan is provably count-preserving (None = no hint, never a job)
         q_hint = kwargs.get("q_rows_hint")
         if q_hint is None:
-            q_hint = _metadata_row_count(queries)
+            q_hint = sizing.footer_count(queries)
         return cosine_topk_bruteforce(
-            ensure_parallelism(queries, rows_hint=q_hint),
+            sizing.ensure_parallelism(queries, rows_hint=q_hint),
             pdf, k,
             q_id=q_id, q_emb=q_emb, d_id=d_id, d_emb=d_emb,
         )

@@ -116,17 +116,6 @@ def _footprint_cells(
     raise ValueError(f"unknown footprint {footprint!r}")
 
 
-def table_bbox(df: DataFrame, lat: str = "lat", lon: str = "lon") -> tuple:
-    """(lon_min, lat_min, lon_max, lat_max) of one input — the
-    PixelGridDefn-extent analogue for footprint planning. One tiny
-    partial+final agg; no shuffle of data rows."""
-    r = df.agg(
-        F.min(lon).alias("x0"), F.min(lat).alias("y0"),
-        F.max(lon).alias("x1"), F.max(lat).alias("y1"),
-    ).first()
-    return (float(r["x0"]), float(r["y0"]), float(r["x1"]), float(r["y1"]))
-
-
 def _bbox_surrounds(a: tuple, b: tuple) -> bool:
     """True if bbox a completely surrounds bbox b — the corner check of
     rios/pixelgrid.py:328-345 (inclusive bounds)."""

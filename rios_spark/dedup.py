@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from rios_spark.plans import sizing
+
 MERSENNE61 = (1 << 61) - 1
 
 
@@ -444,10 +446,6 @@ def _hyperplane_keys(mat: np.ndarray, hv: np.ndarray) -> np.ndarray:
     return (signs.astype(np.int64) << np.arange(signs.shape[1])).sum(axis=1)
 
 
-# Per-task similarity-matrix element budget for the exact all-pairs
-# path (same rationale as spatial.KNN_GEMM_BUDGET).
-PAIRS_GEMM_BUDGET = 8_000_000
-
 # f32 candidate-pass slack for the exact all-pairs kernel (r7): the
 # N^2 GEMM runs in float32 (2x the FLOP rate, half the matrix
 # bandwidth of dgemm) and shortlists pairs with sim32 >= threshold -
@@ -473,7 +471,7 @@ def embedding_all_pairs_exact(
 
     Rows hash into ceil(N/block_rows) blocks; every unordered block
     pair (i <= j) is one applyInPandas task holding <= 2*block_rows
-    rows, whose similarity matrix is GEMM-chunked to PAIRS_GEMM_BUDGET
+    rows, whose similarity matrix is GEMM-chunked to sizing.GEMM_BUDGET
     elements and evaluated as an f32 candidate pass + exact f64
     per-pair verification (PAIRS_F32_SLACK — membership and the
     emitted cosine both come from the f64 recompute). Each unordered id pair is computed in EXACTLY one task,
@@ -485,9 +483,7 @@ def embedding_all_pairs_exact(
     wanting subquadratic behavior use the LSH mode (planes > 0)."""
     import math
 
-    from rios_spark.ann import fast_count
-
-    n = fast_count(df)
+    n = sizing.fast_count(df)
     # parallelism-aware tiling (guide §2): block_rows only CAPS the
     # block size — at 20k rows a single block would run the entire N^2
     # GEMM in ONE applyInPandas task while every other core idles.
@@ -521,7 +517,7 @@ def embedding_all_pairs_exact(
         thr32 = threshold - PAIRS_F32_SLACK
         outs = []
         if lo == hi:
-            step = max(1, PAIRS_GEMM_BUDGET // max(len(pdf), 1))
+            step = max(1, sizing.GEMM_BUDGET // max(len(pdf), 1))
             for s in range(0, len(pdf), step):
                 e = min(s + step, len(pdf))
                 sim32 = mat32[s:e] @ mat32.T
@@ -549,7 +545,7 @@ def embedding_all_pairs_exact(
             ida, idb = ids[a_m], ids[~a_m]
             if len(A) == 0 or len(B) == 0:
                 return _empty_pairs()
-            step = max(1, PAIRS_GEMM_BUDGET // max(len(B), 1))
+            step = max(1, sizing.GEMM_BUDGET // max(len(B), 1))
             for s in range(0, len(A), step):
                 e = min(s + step, len(A))
                 sim32 = A32[s:e] @ B32.T

@@ -37,7 +37,6 @@ from rios_spark.dedup import (  # noqa: F401
 )
 from rios_spark.ann import cosine_topk_bruteforce, cosine_topk_ivf  # noqa: F401
 from rios_spark.temporal import asof_join  # noqa: F401
-from rios_spark.spatial import resample_bilinear  # noqa: F401
 from rios_spark.rat import add_color_table, normalize_colors_01, rat_apply  # noqa: F401
 from rios_spark.multimodal import (  # noqa: F401
     audio_frame_sample,

@@ -1,0 +1,169 @@
+"""Input sizing and width decisions for every operator — the analogue
+of RIOS choosing block size and overlap in one place for all kernels.
+
+Every "how big is this input, and how wide should it run" question
+the engine asks is answered here:
+
+- ``footer_count`` / ``fast_count``: row counts proven from parquet
+  footers, driver-side, without a Spark job;
+- ``ensure_parallelism`` / ``fan_out``: round-robin widening of a scan
+  that is narrower than the cluster before per-row-heavy map work;
+- ``broadcast_gated``: broadcast hints on scale-growing dimensions;
+- ``brute_pairs_ok``: the query x data pair gate of the broadcast kNN
+  and resample kernels;
+- ``GEMM_BUDGET``: the per-task distance / similarity matrix cap.
+
+One rule for a count the footers cannot prove: unknown never means
+small. The fan-out widens a narrow scan to full width, the pair gate
+takes a bounded count, and streaming frames pass through untouched.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+# Driver-side footer reads are ~ms each; past this many files a
+# distributed count() is cheaper than a serial driver loop.
+FAST_COUNT_MAX_FILES = 256
+
+# Below this many rows per task, fan-out costs more than it buys: each
+# extra partition spins a python worker (~10 ms) while a relational or
+# kNN kernel's per-row cost is microseconds.
+ROWS_PER_TASK = 2048
+
+# Rows per task for the per-document text kernels (fingerprints, token
+# explode + md5): ~256 docs (~200 KB of text) keeps the python-worker
+# spin-up well under each task's work while letting a 50k-doc scan
+# reach full width.
+KERNEL_ROWS_PER_TASK = 256
+
+# Row gate for broadcast hints on SCALE-GROWING dims: nation/region are
+# bounded (25/5 rows — broadcast is right forever), but customer/
+# supplier/orders grow with sf, and a forced F.broadcast at 100x sf is
+# a multi-GB build the driver cannot hold. Slim dim projections are a
+# few tens of bytes/row, so 4M rows ~ 100-200 MB framed — inside the
+# "few hundred MB is fine" broadcast envelope and far under the 8 GB /
+# 512M-row hard cap. Above the gate the hint is dropped and AQE picks
+# the strategy from observed sizes.
+BROADCAST_ROW_GATE = 4_000_000
+
+# Pair budget for the broadcast kNN / resample kernels: above this many
+# query x data distance evaluations the brute path's all-pairs compute
+# exceeds the tiled path's join+guard cost even when the data side
+# broadcasts comfortably. With the GEMM candidate kernel the brute path
+# measured ~2.5-3 s at 1.5e9 pairs (sf1.0) vs ~16 s for a cold tiled
+# pass, so the crossover sits well above bench scale; the gate exists
+# for true scale (e.g. 15M x 1M = 1.5e13 pairs), where all-pairs is
+# catastrophic no matter how fast the per-pair kernel is.
+KNN_BRUTE_PAIR_BUDGET = 4_000_000_000
+
+# Max elements in any one distance or similarity matrix (queries x data)
+# built inside a task. 8M float64 = 64 MB per temporary; haversine
+# allocates ~6 temporaries of that shape, so peak per task stays well
+# under 1 GB even with 32 concurrent tasks. Without the cap a 65k-row
+# Arrow batch against a 2M-point data side would materialize a ~1 TB
+# matrix in one task. Kernels read it as ``sizing.GEMM_BUDGET`` at call
+# time.
+GEMM_BUDGET = 8_000_000
+
+
+def footer_count(df: DataFrame) -> int | None:
+    """Row count from parquet footers, or None when it cannot be proven
+    safe. Only a plan that is count-preserving down to a bare file scan
+    qualifies (Project/SubqueryAlias wrappers only — a Filter/Join/
+    Aggregate changes multiplicity); only local parquet files are read
+    (remote stores fall back to the distributed count)."""
+    try:
+        node = df._jdf.queryExecution().optimizedPlan()
+        while True:
+            name = node.getClass().getSimpleName()
+            if name in ("Project", "SubqueryAlias"):
+                node = node.children().head()
+            elif name.startswith("LogicalRelation"):
+                files = df.inputFiles()
+                if not files or len(files) > FAST_COUNT_MAX_FILES:
+                    return None
+                import pyarrow.parquet as pq
+
+                total = 0
+                for f in files:
+                    if not f.startswith("file:") or not f.endswith(".parquet"):
+                        return None
+                    path = f[7:] if f.startswith("file://") else f[5:]
+                    total += pq.ParquetFile(path).metadata.num_rows
+                return total
+            else:
+                return None
+    except Exception:
+        return None
+
+
+def fast_count(df: DataFrame) -> int:
+    """Count for DISPATCH decisions: a bare parquet scan answers from
+    file footers driver-side; anything else runs the normal distributed
+    count. Always exact — never an estimate."""
+    n = footer_count(df)
+    return df.count() if n is None else n
+
+
+def ensure_parallelism(
+    df: DataFrame, rows_hint: int | None = None, rows_per_task: int = ROWS_PER_TASK
+) -> DataFrame:
+    """Repartition a DataFrame that is under-parallelized for a
+    per-row-heavy map stage. Parquet cannot split below row-group
+    granularity, so a small-SF table often arrives as ONE scan
+    partition and a mapInPandas kernel runs on one core; at production
+    scale the input already has many partitions and this is a no-op —
+    the round-trip shuffle only ever happens on inputs small enough
+    that it is cheap.
+
+    rows_hint (a row count or upper bound) sizes the fan-out to
+    ~rows_per_task rows per task, so tiny frames stay put: a 20-row
+    query frame repartitioned to 32 partitions pays ~0.3 s spinning 32
+    python workers for microseconds of kernel work. Without a hint the
+    target is full width. Streaming frames pass through untouched."""
+    if df.isStreaming:
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if rows_hint is not None:
+        target = min(target, max(1, rows_hint // rows_per_task))
+        if target <= 1:
+            return df
+    if df.rdd.getNumPartitions() < max(2, target // 2):
+        return df.repartition(target)
+    return df
+
+
+def fan_out(
+    df: DataFrame, base: DataFrame | None = None, rows_per_task: int = ROWS_PER_TASK
+) -> DataFrame:
+    """ensure_parallelism sized by the footer count of `base` (default
+    `df` itself). `base` is the unfiltered scan a filtered `df` came
+    from: its footer count is a free upper bound on `df`."""
+    return ensure_parallelism(
+        df, footer_count(df if base is None else base), rows_per_task
+    )
+
+
+def broadcast_gated(df: DataFrame, base: DataFrame) -> DataFrame:
+    """Broadcast-hint `df` (a filtered/projected dim) only when its
+    BASE table's row count clears BROADCAST_ROW_GATE. The base count is
+    an upper bound on the filtered side; for a bare parquet scan it is a
+    free footer read, so the gate launches no counting job inside a
+    timed query."""
+    return F.broadcast(df) if fast_count(base) <= BROADCAST_ROW_GATE else df
+
+
+def brute_pairs_ok(queries: DataFrame, n_data: int, q_rows: int | None) -> bool:
+    """True when |queries| x n_data stays within KNN_BRUTE_PAIR_BUDGET,
+    i.e. the broadcast all-pairs kernel may run. `q_rows` is
+    footer_count(queries). When that is None the answer comes from a
+    bounded count, queries.limit(budget // n_data + 1).count(): exact
+    for the decision and at most one capped job. A streaming query side
+    always stays on the broadcast kernel."""
+    if queries.isStreaming or n_data == 0:
+        return True
+    if q_rows is None:
+        q_rows = queries.limit(KNN_BRUTE_PAIR_BUDGET // n_data + 1).count()
+    return q_rows * n_data <= KNN_BRUTE_PAIR_BUDGET

@@ -36,53 +36,11 @@ from rios_spark.grid import (
     parent_col,
 )
 from rios_spark.margin import OWNER, with_margin
-from rios_spark.plans import adaptive_split, salted_agg
+from rios_spark.plans import adaptive_split, salted_agg, sizing
 
 # resolutions used throughout the inventory
 DOC_RES = 6
 CUST_RES = 5
-
-# Row gate for broadcast hints on SCALE-GROWING dims (VERDICT r6 #3):
-# nation/region are bounded (25/5 rows — broadcast is right forever),
-# but customer/supplier/orders grow with sf, and a forced F.broadcast
-# at 100x sf is a multi-GB build the driver cannot hold. Slim dim
-# projections here are a few tens of bytes/row, so 4M rows ~ 100-200 MB
-# framed — inside the "few hundred MB is fine" broadcast envelope and
-# far under the 8 GB / 512M-row hard cap. Above the gate the hint is
-# dropped and AQE picks the strategy from observed sizes.
-BROADCAST_ROW_GATE = 4_000_000
-
-
-def _bcast_gated(df: DataFrame, base: DataFrame) -> DataFrame:
-    """Broadcast-hint `df` (a filtered/projected dim) only when its
-    BASE table's metadata row count clears BROADCAST_ROW_GATE. The base
-    count is a free parquet-footer read and an upper bound on the
-    filtered side, so the gate never launches a counting job inside a
-    timed query; at bench scale every dim clears it, so plans are
-    identical to the unconditional hint."""
-    from rios_spark.ann import fast_count
-
-    return F.broadcast(df) if fast_count(base) <= BROADCAST_ROW_GATE else df
-
-
-def _fan_out(df: DataFrame, rows_per_task: int = 2048) -> DataFrame:
-    """Round-robin repartition a scan that is narrower than the cluster
-    before per-row-heavy map work (regex metrics, token explode + md5,
-    Arrow kernels). Parquet cannot split below row-group granularity,
-    so the driver fixtures (one row group per table) scan as ONE task
-    at any sf and the whole map stage runs on one core. The metadata
-    row count is a free upper bound sizing the fan-out; tiny tables and
-    already-wide scans (the production shape) pass through untouched."""
-    from rios_spark.ann import _metadata_row_count, ensure_parallelism
-
-    hint = _metadata_row_count(df)
-    if hint is None:
-        return df
-    par = df.sparkSession.sparkContext.defaultParallelism
-    target = min(par, max(1, hint // rows_per_task))
-    if target <= 1:
-        return df
-    return ensure_parallelism(df, min_parts=target)
 
 
 def _f6(c):
@@ -91,10 +49,6 @@ def _f6(c):
     DuckDB (half-even) can never disagree on an exact .5e-6 tie —
     observed in practice when a sum divides by a power of two."""
     return F.floor(c * F.lit(1000000.0)) / F.lit(1000000.0)
-
-
-def _f6_sql(expr: str) -> str:
-    return f"(floor(({expr}) * 1000000.0) / 1000000.0)"
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -823,9 +777,9 @@ def q_revenue_by_nation(spark, sf_dir):
     # orders/customer broadcasts are gated (they grow with sf); nation
     # is bounded at 25 rows and stays unconditional
     return (
-        li.join(_bcast_gated(orders.select("o_orderkey", "o_custkey"), orders),
+        li.join(sizing.broadcast_gated(orders.select("o_orderkey", "o_custkey"), orders),
                 li["l_orderkey"] == F.col("o_orderkey"))
-        .join(_bcast_gated(cust.select("c_custkey", "c_nationkey"), cust),
+        .join(sizing.broadcast_gated(cust.select("c_custkey", "c_nationkey"), cust),
               F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
@@ -872,7 +826,7 @@ def q_tpch_q3(spark, sf_dir):
     qualifying = (
         # gated hint (VERDICT r6 #3): customer grows with sf — at bench
         # scale the gate keeps the BroadcastHashJoin plan unchanged
-        orders.join(_bcast_gated(cust, cust_base), F.col("o_custkey") == F.col("c_custkey"))
+        orders.join(sizing.broadcast_gated(cust, cust_base), F.col("o_custkey") == F.col("c_custkey"))
         .select("o_orderkey", "o_orderdate", "o_orderpriority")
     )
     return (
@@ -953,8 +907,8 @@ def q_tpch_q5(spark, sf_dir):
         # nation-pruned dims keep their broadcast hint only under the
         # row gate (VERDICT r6 #3) — identical plans at bench scale
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(_bcast_gated(cust, cust_base), F.col("o_custkey") == F.col("c_custkey"))
-        .join(_bcast_gated(supp, supp_base), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(sizing.broadcast_gated(cust, cust_base), F.col("o_custkey") == F.col("c_custkey"))
+        .join(sizing.broadcast_gated(supp, supp_base), F.col("l_suppkey") == F.col("s_suppkey"))
         .filter(F.col("cn") == F.col("sn"))
         .groupBy("n_name")
         .agg(
@@ -1023,7 +977,7 @@ def q_tpch_q10(spark, sf_dir):
         # customer grows with sf: gated hint (VERDICT r6 #3); nation is
         # bounded and stays unconditional
         per_cust.join(
-            _bcast_gated(cust, cust_base), F.col("o_custkey") == F.col("c_custkey")
+            sizing.broadcast_gated(cust, cust_base), F.col("o_custkey") == F.col("c_custkey")
         )
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))
@@ -1164,7 +1118,7 @@ O_STRATIFIED_SAMPLE_DOCS = textops.stratified_sample_sql(
 
 def q_doc_text_metrics(spark, sf_dir):
     # regex-heavy projection: fan the single-row-group scan out first
-    docs = _fan_out(_t(spark, sf_dir, "documents"))
+    docs = sizing.fan_out(_t(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id",
         textops.token_count_col("text").cast("long").alias("n_tokens"),
@@ -1204,7 +1158,7 @@ def q_doc_lang_scores(spark, sf_dir):
     language, so duplicate-counting semantics match the per-language
     filters exactly. (The previous form ran one interpreted HOF filter
     lambda per token per language — measured ~3x slower.)"""
-    docs = _fan_out(_t(spark, sf_dir, "documents")).select(
+    docs = sizing.fan_out(_t(spark, sf_dir, "documents")).select(
         "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("tok")
     )
     vocab = [
@@ -1255,7 +1209,9 @@ def q_minhash_w1_docs(spark, sf_dir):
     variant: per doc, min over words of k affine hashes of the word's
     md5-derived 30-bit base."""
     # md5-per-word over ~6M exploded tokens: fan the scan out first
-    docs = _fan_out(_t(spark, sf_dir, "documents"), rows_per_task=256)
+    docs = sizing.fan_out(
+        _t(spark, sf_dir, "documents"), rows_per_task=sizing.KERNEL_ROWS_PER_TASK
+    )
     words = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("w")
     )
@@ -1391,7 +1347,7 @@ def q_embedding_topk_indexed(spark, sf_dir):
     from rios_spark import ann
 
     embs = _t(spark, sf_dir, "embeddings")
-    n_rows = ann.fast_count(embs)
+    n_rows = sizing.fast_count(embs)
     n_cen, shards = 16, 4
     src = os.path.realpath(os.path.join(sf_dir, "embeddings.parquet"))
     sig = [src]
@@ -1505,7 +1461,9 @@ def q_simhash_docs(spark, sf_dir):
     from rios_spark import dedup
 
     # Arrow-batched voting kernel: fan the one-row-group scan out first
-    docs = _fan_out(_t(spark, sf_dir, "documents"), rows_per_task=256)
+    docs = sizing.fan_out(
+        _t(spark, sf_dir, "documents"), rows_per_task=sizing.KERNEL_ROWS_PER_TASK
+    )
     return docs.select("doc_id", dedup.simhash_col_udf()("text").alias("simhash"))
 
 
@@ -1617,7 +1575,7 @@ def q_topk_events_per_type(spark, sf_dir):
     the second window + salt shuffle cost more than the few-partition
     single window it replaced (median 3.8 s vs 2.9 s under equal host
     load); the scan fan-out alone measured ~10% faster and is kept."""
-    ev = _fan_out(_t(spark, sf_dir, "events"))
+    ev = sizing.fan_out(_t(spark, sf_dir, "events"))
     w = Window.partitionBy("event_type").orderBy(F.desc("value"), F.asc("event_id"))
     return (
         ev.withColumn("rank", F.row_number().over(w))
@@ -1735,7 +1693,7 @@ def q_vocab_topk_docs(spark, sf_dir):
     tokens by document frequency over the corpus — explode whitespace
     tokens once, one partial+final agg, deterministic tie-break. The
     explode output never shuffles raw text: only (token, doc_id)."""
-    docs = _fan_out(_t(spark, sf_dir, "documents"))
+    docs = sizing.fan_out(_t(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("token")
     ).filter(F.col("token") != "")

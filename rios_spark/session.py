@@ -49,8 +49,8 @@ def get_spark(
         # REVERTED — parquet cannot split below row-group granularity,
         # so the extra splits of the one-row-group fixtures were all
         # EMPTY, and the phantom width defeated the operators'
-        # ensure_parallelism fan-out (they saw a "wide" scan with every
-        # row in one partition). Scan width here honestly equals row-
+        # plans.sizing fan-out (it saw a "wide" scan with every row in
+        # one partition). Scan width here honestly equals row-
         # group count; per-row-heavy operators fan out explicitly.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
@@ -59,12 +59,6 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
-
-
-def stop_spark() -> None:
-    s = SparkSession.getActiveSession()
-    if s is not None:
-        s.stop()
 
 
 # ---------------------------------------------------------------------------

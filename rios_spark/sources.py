@@ -19,14 +19,12 @@ is realized as hive-partitioned parquet. The API is format-agnostic.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rios_spark import datagen
-from rios_spark.grid import RES_MUL, cell_col, parent_col
+from rios_spark.grid import RES_MUL, parent_col
 
 
 def write_tiled(
@@ -142,21 +140,3 @@ def vector_info(polygons) -> "object":
             }
         )
     return pd.DataFrame(rows)
-
-
-def pages_dataset(
-    spark: SparkSession,
-    n: int,
-    res: int,
-    cache_dir: str = "/root/repo/.data",
-    seed: int = 42,
-) -> DataFrame:
-    """Deterministic pages table, generated once and cached as parquet
-    (bench input; TESTDATA.md seed discipline). Returns it tiled at
-    `res` with the cell column attached."""
-    path = os.path.join(cache_dir, f"pages_n{n}_s{seed}.parquet")
-    if not os.path.exists(path):
-        os.makedirs(cache_dir, exist_ok=True)
-        pdf = datagen.gen_pages(n, seed=seed)
-        spark.createDataFrame(pdf).repartition(32).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path).withColumn("cell", cell_col("lat", "lon", res))

@@ -45,6 +45,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from rios_spark.grid import np_cell, np_polyfill_bbox
+from rios_spark.plans import sizing
 
 EARTH_RADIUS_KM = 6371.0088
 
@@ -112,44 +113,12 @@ def polygon_cover(polygons: pd.DataFrame, res: int) -> pd.DataFrame:
     return pd.concat(rows, ignore_index=True)
 
 
-def _ray_cast_expr(xs: np.ndarray, ys: np.ndarray, px, py):
-    """The even-odd ray cast compiled to a Spark Column expression —
-    the SAME arithmetic as ray_cast() (same ops, same half-open
-    semantics), but evaluated JVM-side inside whole-stage codegen.
-    Horizontal edges contribute nothing: `crosses` is false, and SQL
-    AND(false, NaN-compare) is false, matching numpy's masking."""
-    n = len(xs)
-    crossings = F.lit(0)
-    for i in range(n):
-        j = (i - 1) % n
-        xi, yi, xj, yj = float(xs[i]), float(ys[i]), float(xs[j]), float(ys[j])
-        if yj == yi:
-            continue  # horizontal edge never crosses (numpy mask parity)
-        crosses = (F.lit(yi) > py) != (F.lit(yj) > py)
-        xint = F.lit(xj - xi) * (py - F.lit(yi)) / F.lit(yj - yi) + F.lit(xi)
-        crossings = crossings + (crosses & (px < xint)).cast("int")
-    return crossings % 2 == 1
-
-
 def _is_axis_rect(xs: np.ndarray, ys: np.ndarray) -> bool:
     return (
         len(xs) == 4
         and len(set(xs.tolist())) == 2
         and len(set(ys.tolist())) == 2
     )
-
-
-def _poly_pred_expr(xs: np.ndarray, ys: np.ndarray, px, py):
-    """Per-polygon containment predicate, kept SHALLOW so the filter
-    stays inside WholeStageCodegen (a deep nested CASE chain knocks the
-    whole stage into interpreted evaluation — measured 20x slower).
-    Axis-aligned rectangles compile to 4 comparisons, which is exactly
-    what ray_cast computes for them ([xmin,xmax) x [ymin,ymax))."""
-    if _is_axis_rect(xs, ys):
-        x0, x1 = float(xs.min()), float(xs.max())
-        y0, y1 = float(ys.min()), float(ys.max())
-        return (px >= x0) & (px < x1) & (py >= y0) & (py < y1)
-    return _ray_cast_expr(xs, ys, px, py)
 
 
 # polygon sets up to this many total vertices run as pure JVM
@@ -333,13 +302,6 @@ def zonal_stats(
 # ---------------------------------------------------------------------------
 
 
-# Max elements in any one distance matrix (queries x data). 8M float64
-# = 64 MB per temporary; haversine allocates ~6 temporaries of that
-# shape, so peak per task stays well under 1 GB even with 32 concurrent
-# tasks. Without this cap a 65k-row Arrow batch against a 2M-point data
-# side would materialize a ~1 TB matrix in one task (round-1 VERDICT #4).
-KNN_GEMM_BUDGET = 8_000_000
-
 # Cap for the auto-sized first ring: with_margin duplicates the data
 # side (2r+1)^2-fold, so completeness must never be bought with a huge
 # pass-0 ring on sparse data (r=16 is already a 1089x explode); the
@@ -456,7 +418,7 @@ def _block_topk(
     quantize: float | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Exact top-k of each query against the full data arrays, chunking
-    the query rows so rows x n_data never exceeds KNN_GEMM_BUDGET.
+    the query rows so rows x n_data never exceeds sizing.GEMM_BUDGET.
     Returns (ids, dists) of shape (n_queries, kk), kk = min(k, n_data),
     sorted per row with deterministic (distance, data id) tie-break.
     With `quantize`, distances are epsilon-floored onto the 1/quantize
@@ -473,7 +435,7 @@ def _block_topk(
     kk = min(k, nd)
     out_ids = np.empty((nq, kk), np.int64)
     out_dist = np.empty((nq, kk), np.float64)
-    step = max(1, KNN_GEMM_BUDGET // max(nd, 1))
+    step = max(1, sizing.GEMM_BUDGET // max(nd, 1))
     m = min(nd, kk + _GEMM_CAND_PAD)
     use_gemm = (
         use_haversine and m < nd and nq * nd >= _GEMM_MIN_PAIRS
@@ -566,7 +528,7 @@ def knn_bruteforce(
     """Exact kNN with the data side broadcast (the small-dim case —
     analogous to RIOS broadcasting one rasterization per process).
     Ties broken on (distance, data id) — deterministic. The per-task
-    distance matrix is chunked to KNN_GEMM_BUDGET elements, so memory
+    distance matrix is chunked to sizing.GEMM_BUDGET elements, so memory
     stays bounded regardless of Arrow batch size x data size.
 
     Output: all query columns + neighbor_id, dist_km, rank.
@@ -927,9 +889,7 @@ def knn_tiled(
     from rios_spark.grid import cell_col, kring_cells_var_col
     from rios_spark.margin import OWNER, with_margin
 
-    from rios_spark.ann import _metadata_row_count, ensure_parallelism, fast_count
-
-    n_data = fast_count(data)
+    n_data = sizing.fast_count(data)
     res_i = res  # internal working resolution (>= res; see below)
     if ring == "auto":
         if k >= n_data:
@@ -988,9 +948,7 @@ def knn_tiled(
     # the whole ~13M-row candidate set); round-robin fan-out first makes
     # candidate production and the per-partition group-limit full-width.
     # No-op whenever the scan is already wide (production shape).
-    queries_i = ensure_parallelism(
-        queries_i, rows_hint=_metadata_row_count(queries)
-    )
+    queries_i = sizing.fan_out(queries_i, queries)
     d_exp = with_margin(data, res_i, ring, cell=cell_i).select(
         F.col(OWNER).alias(cell_i),
         F.col(d_id).alias("neighbor_id"),
@@ -1214,17 +1172,6 @@ def _union_all(dfs: list[DataFrame]) -> DataFrame:
     return out
 
 
-# Pair budget for the auto-dispatch: above this many query x data
-# distance evaluations the brute path's all-pairs compute exceeds the
-# tiled path's join+guard cost even when the data side broadcasts
-# comfortably. With the GEMM candidate kernel the brute path measured
-# ~2.5-3 s at 1.5e9 pairs (sf1.0) vs ~16 s for a cold tiled pass, so
-# the crossover sits well above bench scale; the gate exists for true
-# scale (e.g. 15M x 1M = 1.5e13 pairs), where all-pairs is
-# catastrophic no matter how fast the per-pair kernel is.
-KNN_BRUTE_PAIR_BUDGET = 4_000_000_000
-
-
 def knn_join(
     queries: DataFrame,
     data: DataFrame,
@@ -1235,33 +1182,31 @@ def knn_join(
 ) -> DataFrame:
     """Auto-dispatching kNN: the exact brute-force broadcast path runs
     when the data side fits the broadcast budget AND the total pair
-    count stays under KNN_BRUTE_PAIR_BUDGET (guide §1.2: the all-pairs
-    compute is O(Q x N) while the tiled path is ~O(Q + N) — at bench
-    sf the brute path wins ~3x, but 10x the rows means 100x the pairs
-    and the tiled join+guard overhead amortizes); otherwise the
-    distributed tiled path runs. Both are exact.
+    count stays under sizing.KNN_BRUTE_PAIR_BUDGET (guide §1.2: the
+    all-pairs compute is O(Q x N) while the tiled path is ~O(Q + N) —
+    at bench sf the brute path wins ~3x, but 10x the rows means 100x
+    the pairs and the tiled join+guard overhead amortizes); otherwise
+    the distributed tiled path runs. Both are exact. A query side whose
+    row count the parquet footers cannot prove is sized by a bounded
+    count (sizing.brute_pairs_ok), never assumed small.
 
     Memory budget of the broadcast path: the threshold bounds only the
     broadcast payload (2M rows x 3 float64 = ~48 MB per executor); the
-    distance matrices are independently capped by KNN_GEMM_BUDGET, so
-    task memory stays bounded regardless of Arrow batch size x data
+    distance matrices are independently capped by sizing.GEMM_BUDGET,
+    so task memory stays bounded regardless of Arrow batch size x data
     size (the round-1 hazard was a 65k x 2M = ~1 TB matrix)."""
-    from rios_spark.ann import _metadata_row_count, ensure_parallelism, fast_count
-
     d_id = kwargs.get("d_id", "id")
     d_lat = kwargs.get("d_lat", "lat")
     d_lon = kwargs.get("d_lon", "lon")
-    n = fast_count(data)
-    # pair-count gate on a FREE upper bound (parquet-footer count of a
-    # count-preserving query plan; None = unknown, keep the broadcast
-    # path rather than pay a counting job)
-    q_rows = _metadata_row_count(queries)
-    pairs_ok = q_rows is None or q_rows * n <= KNN_BRUTE_PAIR_BUDGET
+    n = sizing.fast_count(data)
+    q_rows = sizing.footer_count(queries)
     # k >= n means every query's answer is ALL data rows: the tiled
     # path's guard can never certify anything (ADVICE r2) — the
     # broadcast brute path is the only sensible plan, and n <= k is
     # small by definition
-    if (n <= broadcast_threshold and pairs_ok) or k >= n:
+    if k >= n or (
+        n <= broadcast_threshold and sizing.brute_pairs_ok(queries, n, q_rows)
+    ):
         pdf = data.select(
             F.col(d_id).alias("id"), F.col(d_lat).alias("lat"), F.col(d_lon).alias("lon")
         ).toPandas()
@@ -1270,7 +1215,7 @@ def knn_join(
         # footer count on a count-preserving query plan sizes the
         # fan-out so tiny frames don't pay a full-width shuffle
         return knn_bruteforce(
-            ensure_parallelism(queries, rows_hint=q_rows),
+            sizing.ensure_parallelism(queries, rows_hint=q_rows),
             pdf, k,
             q_lat=kwargs.get("q_lat", "lat"), q_lon=kwargs.get("q_lon", "lon"),
             d_lat="lat", d_lon="lon", d_id="id",
@@ -1322,17 +1267,16 @@ def resample_join(
     An exact-distance-0 match always returns that point's value
     (all kernels peak at 0). Output: all query columns + `resampled`.
     One broadcast of the data side, one window, one groupBy per call.
-    Past KNN_BRUTE_PAIR_BUDGET total query x data pairs the neighbour
-    search dispatches to the tiled+guard path instead of the broadcast
-    kernel (r7; exact either way — see knn_join's gate rationale).
+    Past sizing.KNN_BRUTE_PAIR_BUDGET total query x data pairs the
+    neighbour search dispatches to the tiled+guard path instead of the
+    broadcast kernel (r7; exact either way — see knn_join's gate
+    rationale).
     """
     if method not in RESAMPLE_K:
         raise ValueError(f"unknown resample method {method!r}")
-    from rios_spark.ann import _metadata_row_count, ensure_parallelism
-
     k = RESAMPLE_K[method]
-    q_rows = _metadata_row_count(queries)
-    if q_rows is not None and q_rows * len(data) > KNN_BRUTE_PAIR_BUDGET:
+    q_rows = sizing.footer_count(queries)
+    if not sizing.brute_pairs_ok(queries, len(data), q_rows):
         # blowup-scale dispatch (r7): the broadcast kernel evaluates
         # Q x N pairs no matter how fast the per-pair GEMM is (measured
         # 79 s at 1.5e11 pairs), while the tiled+guard path is ~O(Q+N)
@@ -1340,7 +1284,9 @@ def resample_join(
         # budget (sf1.0 = 1.5e9 pairs), so the measured plan is
         # untouched; only true-scale inputs reroute. The base res is
         # coarse — knn_tiled's density-adaptive internal re-tile picks
-        # the working resolution from the data density.
+        # the working resolution from the data density. A synthetic
+        # unique key partitions the ranking window, so duplicate query
+        # points each get their own k neighbours.
         from rios_spark.grid import cell_col
 
         base_res = 3
@@ -1350,13 +1296,16 @@ def resample_join(
             if had_cell
             else queries
         )
-        qk = qk.withColumn("cell", cell_col(q_lat, q_lon, base_res))
+        qk = qk.withColumn("cell", cell_col(q_lat, q_lon, base_res)).withColumn(
+            "__rq_id", F.monotonically_increasing_id()
+        )
         dk = queries.sparkSession.createDataFrame(
             data[[d_id, "lat", "lon"]]
         ).withColumn("cell", cell_col("lat", "lon", base_res))
         kn = knn_tiled(
             qk, dk, k, base_res, d_id=d_id, q_lat=q_lat, q_lon=q_lon,
-        ).drop("cell")
+            q_id="__rq_id",
+        ).drop("cell", "__rq_id")
         if had_cell:
             kn = kn.withColumnRenamed("__cell_user", "cell")
     else:
@@ -1364,7 +1313,7 @@ def resample_join(
         # run the Arrow kernel on one core (the r3 knn_join lesson —
         # this call site was missed); no-op at scale
         kn = knn_bruteforce(
-            ensure_parallelism(queries, rows_hint=q_rows),
+            sizing.ensure_parallelism(queries, rows_hint=q_rows),
             data, k, q_lat=q_lat, q_lon=q_lon, d_id=d_id,
         )
     vals = queries.sparkSession.createDataFrame(
@@ -1401,22 +1350,6 @@ def resample_join(
     return (
         j.groupBy(*qcols)
         .agg((F.sum(w * F.col("__v")) / F.sum(w)).alias("resampled"))
-    )
-
-
-def resample_bilinear(
-    queries: DataFrame,
-    data: pd.DataFrame,
-    value_col: str,
-    q_lat: str = "lat",
-    q_lon: str = "lon",
-    d_id: str = "id",
-    power: float = 1.0,
-) -> DataFrame:
-    """Back-compat wrapper: resample_join(method='bilinear')."""
-    return resample_join(
-        queries, data, value_col, "bilinear",
-        q_lat=q_lat, q_lon=q_lon, d_id=d_id, power=power,
     )
 
 

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 from rios_spark.datagen import _VOCAB, extract_text
+from rios_spark.plans import sizing
 
 
 # --- html → text ------------------------------------------------------------
@@ -122,58 +123,11 @@ def kgram_hash_sql(text_expr: str, pos_expr: str, k: int = FP_K) -> str:
     return h
 
 
-def _kgram_hash_ladder(text_col: str, k: int) -> tuple[list[tuple[str, str]], str]:
-    """Build the per-position k-gram Horner hash array as a DOUBLING
-    ladder of zip_with levels instead of an aggregate over a slice per
-    position. h_1(i) = code_i mod M; h_2s(i) = (h_s(i) * (B^s mod M) +
-    h_s(i+s)) mod M — algebraically the positional Horner value, so the
-    DuckDB oracle (kgram_hash_sql, plain Horner) is value-identical.
-    O(len log k) with no per-position slice allocation vs O(len*k)
-    (measured: the slice+aggregate form dominated doc_fingerprints at
-    sf0.1). Overflow-safe in int64 for any power-of-two k: both factors
-    stay < M < 2^31 so the product is < 2^62. Non-power-of-two k falls
-    back to the aggregate form.
-
-    Returns (ladder, final_var): `ladder` is the ordered list of
-    (open, close) let-binding fragments expecting a bound char-code
-    array named g0; final_var names the hash array the innermost body
-    should reference. Entry i of the final array is the hash of the
-    k-gram at 1-based position i (length len - k + 1 entries are
-    valid; the tail is null-padded partials the caller must slice off)."""
-    s_levels = k.bit_length() - 1
-    if k != (1 << s_levels):
-        agg = (
-            f"transform(sequence(1, size(g0) - {k - 1}),"
-            f" i -> aggregate(slice(g0, i, {k}), cast(0 as bigint),"
-            f"      (acc, c) -> (acc * {FP_BASE} + c) % {FP_MOD}))"
-        )
-        return [(f"transform(array({agg}), g1 -> ", ")[0]")], "g1"
-    ladder: list[tuple[str, str]] = []
-    prev, mult = "g0", FP_BASE
-    for lev in range(1, s_levels + 1):
-        d = 1 << (lev - 1)
-        m_s = pow(FP_BASE, d, FP_MOD)
-        zipped = (
-            f"zip_with({prev},"
-            f" slice({prev}, {d + 1}, greatest(size({prev}) - {d}, 0)),"
-            f" (x, y) -> (x * {m_s} + coalesce(y, cast(0 as bigint))) % {FP_MOD})"
-        )
-        ladder.append((f"transform(array({zipped}), g{lev} -> ", ")[0]"))
-        prev = f"g{lev}"
-    return ladder, prev
-
-
-def _nest(ladder: list[tuple[str, str]], body: str) -> str:
-    for open_, close_ in reversed(ladder):
-        body = open_ + body + close_
-    return body
-
-
 def _fps_batch_numpy(
     texts: list, k: int, w: int | None, sample_mod: int | None
 ) -> tuple["np.ndarray", "np.ndarray"]:
-    """BATCH-CONCATENATED fingerprint kernel shared by the arrow impls
-    of doc_fingerprints (w=None, 0-mod-p sampling) and
+    """BATCH-CONCATENATED fingerprint kernel shared by
+    doc_fingerprints (w=None, 0-mod-p sampling) and
     doc_fingerprints_winnow (sample_mod=None, window minima). The whole
     Arrow batch's texts are joined into ONE code-point array so every
     step is a handful of numpy vector ops over the batch — a per-doc
@@ -182,9 +136,9 @@ def _fps_batch_numpy(
     Cross-document garbage positions are never selected: per-doc valid
     k-gram starts are [s, s+L-k] and winnow window starts
     [s, s+L-k-w+1], both fully inside the doc's own span. Arithmetic is
-    the same Horner mod (FP_BASE, FP_MOD) as the JVM ladder and the
-    DuckDB oracle, so the three implementations are value-identical
-    (utf-32 code points == Spark ascii() == DuckDB ord()). Returns
+    the same Horner mod (FP_BASE, FP_MOD) as the DuckDB oracle
+    (kgram_hash_sql), so the two are value-identical (utf-32 code
+    points == DuckDB ord()). Returns
     (row_index, fp) with fps distinct per doc."""
     import numpy as np
 
@@ -207,9 +161,9 @@ def _fps_batch_numpy(
         h %= FP_MOD
     starts = np.concatenate(([0], np.cumsum(lens_k)))[:-1]
     if w:
-        # sliding-window minima via the same doubling ladder as the JVM
-        # expr: lev[i] = min(h[i .. i+span-1]), two overlapping spans
-        # merge to any target w in O(len log w)
+        # sliding-window minima via a doubling ladder: lev[i] =
+        # min(h[i .. i+span-1]), two overlapping spans merge to any
+        # target w in O(len log w)
         lev, span = h, 1
         while span < w:
             d = min(span, w - span)
@@ -260,38 +214,9 @@ def _char_bounded_slices(lens, cap):
     return out
 
 
-# rows per task for the batch fingerprint kernels: ~256 docs (~200 KB
-# of text) keeps the ~10 ms python-worker spin-up well under each
-# task's kernel work while letting a 50k-doc scan reach full width.
-_FPS_ROWS_PER_TASK = 256
-
-
-def _kernel_fan_out(base, src):
-    """Repartition `src` for an Arrow kernel when its scan is narrower
-    than the cluster (guide §2/§6): parquet splits bottom out at ROW
-    GROUPS, so a single-row-group file scans as ONE partition no matter
-    the split config and the whole batch kernel runs on one core (the
-    sf1.0 fixture shape). The pre-filter metadata row count of `base`
-    is a free upper bound sizing the fan-out; streaming frames,
-    non-bare-scan inputs and already-wide scans pass through untouched
-    — at production scale the scan is already wide and this is a no-op."""
-    if src.isStreaming:
-        return src
-    from rios_spark.ann import _metadata_row_count, ensure_parallelism
-
-    hint = _metadata_row_count(base)
-    if hint is None:
-        return src
-    par = src.sparkSession.sparkContext.defaultParallelism
-    target = min(par, max(1, hint // _FPS_ROWS_PER_TASK))
-    if target <= 1:
-        return src
-    return ensure_parallelism(src, min_parts=target)
-
-
 def _fps_map_in_pandas(df, text_col, id_col, k, w, sample_mod):
     """mapInPandas wrapper over _fps_batch_numpy preserving the input
-    id column's type. Zero-shuffle, like the expr path."""
+    id column's type. Zero-shuffle."""
     id_type = dict(df.dtypes)[id_col]
 
     def kern(it):
@@ -316,7 +241,6 @@ def doc_fingerprints(
     id_col: str = "doc_id",
     k: int = FP_K,
     sample_mod: int = FP_SAMPLE_MOD,
-    impl: str = "arrow",
 ):
     """Rolling-hash document fingerprinting (the training-data op the
     build spec names): hash every character k-gram, keep the ~1/p
@@ -325,46 +249,21 @@ def doc_fingerprints(
     regardless of its offset — the position-independent near-dup /
     provenance signal (Manber's sif / winnowing-family scheme).
 
-    Entirely JVM-side higher-order expressions, ZERO shuffles: the
-    char-code array is built ONCE per doc (bound via the
-    single-element-array LET idiom — a plain projection alias gets
-    inlined by CollapseProject into the position lambda, re-evaluating
-    split+transform per position, O(len^2); a first cut with
-    substr(text, i, 1) per character had the same quadratic shape and
-    measured 9.5 s at sf0.1), every k-gram hash comes from the
-    O(len log k) doubling ladder (_kgram_hash_ladder — r5: the
-    per-position aggregate-over-slice form it replaces was O(len*k)
-    and allocated a k-array per position), sampling and per-doc dedup
-    happen INSIDE the array (filter + array_distinct), and only the
-    ~len/p surviving fingerprints are exploded. Docs shorter than k
-    emit nothing.
-
-    impl='arrow' (default — measured faster end-to-end, see
-    _fps_batch_numpy) computes the identical values in one
-    batch-concatenated numpy kernel; 'expr' keeps the pure-JVM
-    higher-order-expression plan (still the streaming-safe and
-    dependency-light spelling; both are pinned value-identical by
-    test). Character-range caveat (ADVICE r6): the arrow kernel and
-    the DuckDB oracle hash true code points (utf-32 == ord()), while
-    the 'expr' spelling goes through Spark split('')+ascii, whose
-    units differ for non-BMP characters (astral-plane emoji/CJK-ext)
-    — the three-way value identity is guaranteed for BMP text only;
-    use the default arrow impl for corpora with astral-plane content."""
-    if impl == "arrow":
-        return _fps_map_in_pandas(
-            _kernel_fan_out(df, df.filter(F.length(text_col) >= k)),
-            text_col, id_col, k, None, sample_mod,
-        )
-    codes = f"transform(split({text_col}, ''), c -> cast(ascii(c) as bigint))"
-    ladder, hvar = _kgram_hash_ladder(text_col, k)
-    body = (
-        f"array_distinct(filter(slice({hvar}, 1, size(g0) - {k - 1}),"
-        f" h -> h % {sample_mod} = 0))"
-    )
-    fps_arr = f"transform(array({codes}), g0 -> {_nest(ladder, body)})[0]"
-    return (
-        df.filter(F.length(text_col) >= k)
-        .select(id_col, F.expr(f"explode({fps_arr})").alias("fp"))
+    One Arrow kernel, ZERO shuffles: each Arrow batch's texts are
+    concatenated into one code-point array and every k-gram's Horner
+    hash (FP_BASE, FP_MOD over true code points) comes from k vector
+    steps over the whole batch (_fps_batch_numpy), sub-batched by
+    character count (_FPS_BATCH_CHAR_CAP). Sampling and per-doc dedup
+    happen inside the kernel, so only the ~len/p surviving fingerprints
+    leave it. Docs shorter than k emit nothing. The scan fans out first
+    (sizing.fan_out at KERNEL_ROWS_PER_TASK): a one-row-group file
+    would otherwise run the whole kernel on one core. Value-identical to
+    the DuckDB oracle doc_fingerprints_sql (kgram_hash_sql)."""
+    return _fps_map_in_pandas(
+        sizing.fan_out(
+            df.filter(F.length(text_col) >= k), df, sizing.KERNEL_ROWS_PER_TASK
+        ),
+        text_col, id_col, k, None, sample_mod,
     )
 
 
@@ -374,7 +273,6 @@ def doc_fingerprints_winnow(
     id_col: str = "doc_id",
     k: int = FP_K,
     w: int = 16,
-    impl: str = "arrow",
 ):
     """WINNOWING document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD'03 — the MOSS scheme): the minimum k-gram hash of every
@@ -382,71 +280,21 @@ def doc_fingerprints_winnow(
     ANY shared substring of at least w + k - 1 characters shares at
     least one fingerprint. Density ~2/(w+1) instead of 1/p.
 
-    Same zero-shuffle higher-order-expression shape as
-    doc_fingerprints: char codes and the k-gram hash array are each
-    LET-bound via the single-element-array idiom (a projection alias
-    would be inlined into the window lambda by CollapseProject,
-    re-evaluating the whole hash array per window — measured 48 s at
-    sf0.1 vs ~1 s bound), distinct inside the array, explode only the
-    selected set. Emitting VALUES (not positions) makes the output
+    Same Arrow kernel and fan-out as doc_fingerprints. Window minima
+    come from a sparse-table doubling ladder over the batch's hash
+    array (lev[i] = min(h[i .. i+span-1]); two overlapping spans merge
+    to any target w), O(len log w) instead of the naive O(len * w)
+    per-window min. Emitting VALUES (not positions) makes the output
     independent of which tied position a window picks — set-identical
-    to any winnowing implementation. Docs shorter than w + k - 1
-    chars emit nothing.
-
-    Window minima use a SPARSE-TABLE doubling ladder instead of the
-    naive per-window array_min(slice(h, j, w)) (VERDICT r4 #5: the
-    naive form re-slices w elements per position — O(len*w) work and
-    allocation, the slowest oracle query at 2.69 s at sf0.1). Each
-    ladder level L_s[i] = min(h[i .. i+2^s-1]) is one zip_with of the
-    previous level with its 2^(s-1)-shifted self (least() ignores the
-    nulls zip_with pads the tail with), so level s is exact for every
-    i <= n - 2^s + 1 — precisely the positions the next level and the
-    final windows read. A w-window min is then one lookup (w a power
-    of two: the whole window array is just slice(L_log2w, 1, n-w+1))
-    or least() of two overlapping 2^s-windows (general w) — O(len *
-    log w) total, each level let-bound so it evaluates once per doc.
-
-    impl='arrow' (default — measured faster end-to-end, see
-    _fps_batch_numpy) computes the identical value set in one
-    batch-concatenated numpy kernel; 'expr' keeps the pure-JVM ladder
-    plan. Both pinned value-identical by test."""
-    if impl == "arrow":
-        return _fps_map_in_pandas(
-            _kernel_fan_out(df, df.filter(F.length(text_col) >= k + w - 1)),
-            text_col, id_col, k, w, None,
-        )
-    codes = f"transform(split({text_col}, ''), c -> cast(ascii(c) as bigint))"
-    hladder, hvar = _kgram_hash_ladder(text_col, k)
-    s = max(0, w.bit_length() - 1)  # floor(log2 w)
-    ladder: list[tuple[str, str]] = []
-    prev = "h0"
-    for lev in range(1, s + 1):
-        d = 1 << (lev - 1)
-        zipped = (
-            f"zip_with({prev},"
-            f" slice({prev}, {d + 1}, greatest(size({prev}) - {d}, 0)),"
-            f" (x, y) -> least(x, y))"
-        )
-        ladder.append((f"transform(array({zipped}), h{lev} -> ", ")[0]"))
-        prev = f"h{lev}"
-    if w == (1 << s):
-        final = f"array_distinct(slice({prev}, 1, size(h0) - {w - 1}))"
-    else:
-        off = w - (1 << s)
-        final = (
-            f"array_distinct(transform(sequence(1, size(h0) - {w - 1}),"
-            f" j -> least(element_at({prev}, j), element_at({prev}, j + {off}))))"
-        )
-    min_body = _nest(ladder, final)
-    # h0 = the VALID k-gram hash slice (the hash ladder null-pads its
-    # tail with partial values that must not enter the window minima)
-    hashes_body = _nest(
-        hladder, f"transform(array(slice({hvar}, 1, size(g0) - {k - 1})), h0 -> {min_body})[0]"
-    )
-    winnowed = f"transform(array({codes}), g0 -> {hashes_body})[0]"
-    return (
-        df.filter(F.length(text_col) >= k + w - 1)
-        .select(id_col, F.expr(f"explode({winnowed})").alias("fp"))
+    to any winnowing implementation, including the DuckDB oracle
+    doc_fingerprints_winnow_sql. Docs shorter than w + k - 1 chars emit
+    nothing."""
+    return _fps_map_in_pandas(
+        sizing.fan_out(
+            df.filter(F.length(text_col) >= k + w - 1), df,
+            sizing.KERNEL_ROWS_PER_TASK,
+        ),
+        text_col, id_col, k, w, None,
     )
 
 

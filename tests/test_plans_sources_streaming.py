@@ -723,8 +723,8 @@ def test_resume_job_example_schedules_only_pending(tmp_path):
 
 def test_stream_doc_fingerprints_matches_batch(spark, tmp_path):
     """Fingerprinting on a LIVE stream: doc_fingerprints (and the
-    winnowing variant) are pure stateless projections — zero-shuffle
-    higher-order expressions — so the same operator body runs on a
+    winnowing variant) are pure stateless projections — one zero-
+    shuffle Arrow kernel — so the same operator body runs on a
     readStream unchanged, and the stream output equals the batch
     output row-for-row. This is the streaming face of the
     copy-detection pipeline: fingerprints extracted at ingest time,
@@ -1212,3 +1212,46 @@ def test_stream_indexed_topk_matches_batch(spark, tmp_path):
     assert got[["qid", "rank", "neighbor_id"]].equals(
         want[["qid", "rank", "neighbor_id"]]
     )
+
+
+def test_fan_out_widens_filtered_scan(spark, tmp_path):
+    """A FILTERED one-partition scan has no parquet-footer count; the
+    fan-out must not read that as "small" and skip: it widens the scan
+    to full width (same rows), while an already-wide frame and a tiny
+    proven-count scan stay as they are."""
+    from rios_spark.plans import sizing
+
+    path = str(tmp_path / "narrow.parquet")
+    spark.range(5000).coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert scan.rdd.getNumPartitions() == 1
+    filtered = scan.filter("id % 2 = 0")
+    assert sizing.footer_count(filtered) is None
+    wide = sizing.fan_out(filtered)
+    par = spark.sparkContext.defaultParallelism
+    assert wide.rdd.getNumPartitions() == par
+    assert sorted(r.id for r in wide.collect()) == list(range(0, 5000, 2))
+    # proven count: 5000 rows // 2048 per task -> 2 tasks
+    assert sizing.fan_out(scan).rdd.getNumPartitions() == 2
+    assert sizing.fan_out(filtered, scan).rdd.getNumPartitions() == 2
+    # a wide frame passes through untouched
+    assert sizing.fan_out(wide) is wide
+    # a proven-tiny scan stays put
+    tiny = str(tmp_path / "tiny.parquet")
+    spark.range(100).coalesce(1).write.parquet(tiny)
+    tiny_df = spark.read.parquet(tiny)
+    assert sizing.fan_out(tiny_df) is tiny_df
+
+
+def test_sizing_streaming_frame_passes_through(spark, tmp_path):
+    """Streaming frames cannot be counted or repartitioned: the fan-out
+    returns them untouched and the pair gate keeps the broadcast
+    kernel (no bounded count is attempted)."""
+    from rios_spark.plans import sizing
+
+    path = str(tmp_path / "src.parquet")
+    spark.range(100).write.parquet(path)
+    stream = spark.readStream.schema("id long").parquet(path)
+    assert sizing.fan_out(stream) is stream
+    assert sizing.ensure_parallelism(stream) is stream
+    assert sizing.brute_pairs_ok(stream, 10**9, None) is True

@@ -18,6 +18,7 @@ import pytest
 
 from rios_spark import datagen, spatial
 from rios_spark.grid import cell_col, np_cell
+from rios_spark.plans import sizing
 
 
 def _pages_df(spark, n=8000, res=5):
@@ -267,7 +268,9 @@ def test_resample_bilinear(spark):
     # make query 0 an exact hit on data point 7
     qdf.loc[0, ["lat", "lon"]] = ddf.loc[7, ["lat", "lon"]].to_numpy()
     out = (
-        spatial.resample_bilinear(spark.createDataFrame(qdf), ddf, "v", d_id="id")
+        spatial.resample_join(
+            spark.createDataFrame(qdf), ddf, "v", method="bilinear", d_id="id"
+        )
         .toPandas().set_index("qid").sort_index()
     )
     assert len(out) == 30
@@ -285,9 +288,11 @@ def test_resample_bilinear(spark):
 def test_resample_pair_budget_dispatch_exact(spark, monkeypatch, tmp_path):
     """r7: past KNN_BRUTE_PAIR_BUDGET pairs resample_join's neighbour
     search reroutes to the tiled+guard path (the broadcast kernel is
-    O(Q x N)); the resampled values must match the brute path. The
-    query side must be parquet-backed for the free metadata count that
-    arms the gate."""
+    O(Q x N)); the resampled values must match the numpy IDW oracle on
+    both sides of the budget. Ten query rows are exact duplicates: the
+    tiled path must still give each copy its own 4 distinct
+    neighbours (a ranking window keyed on the query columns would fill
+    their top-k with repeated neighbours)."""
     rng = np.random.default_rng(41)
     ddf = pd.DataFrame(
         {"id": np.arange(400), "lat": rng.uniform(-30, 30, 400),
@@ -298,23 +303,71 @@ def test_resample_pair_budget_dispatch_exact(spark, monkeypatch, tmp_path):
          "lon": rng.uniform(-29, 29, 60)}
     )
     qpath = str(tmp_path / "queries.parquet")
-    spark.createDataFrame(qdf).write.parquet(qpath)
+    spark.createDataFrame(pd.concat([qdf, qdf.iloc[:10]])).write.parquet(qpath)
     queries = spark.read.parquet(qpath)
 
-    brute = (
-        spatial.resample_join(queries, ddf, "v", method="bilinear", d_id="id")
-        .toPandas().set_index("qid").sort_index()
+    d = spatial.haversine_km(
+        qdf["lat"].to_numpy()[:, None], qdf["lon"].to_numpy()[:, None],
+        ddf["lat"].to_numpy()[None, :], ddf["lon"].to_numpy()[None, :],
     )
-    monkeypatch.setattr(spatial, "KNN_BRUTE_PAIR_BUDGET", 100)  # 60*400 >> 100
-    tiled = (
-        spatial.resample_join(queries, ddf, "v", method="bilinear", d_id="id")
-        .toPandas().set_index("qid").sort_index()
-    )
-    assert len(tiled) == 60
-    for qid in qdf["qid"]:
-        assert tiled.loc[qid, "resampled"] == pytest.approx(
-            brute.loc[qid, "resampled"], rel=1e-9
+    want = {}
+    for i, qid in enumerate(qdf["qid"]):
+        order = np.lexsort((ddf["id"].to_numpy(), d[i]))[:4]
+        w = 1.0 / d[i][order]
+        want[qid] = (w * ddf["v"].to_numpy()[order]).sum() / w.sum()
+
+    def check():
+        got = (
+            spatial.resample_join(queries, ddf, "v", method="bilinear", d_id="id")
+            .toPandas().set_index("qid").sort_index()
         )
+        assert len(got) == 60
+        for qid in qdf["qid"]:
+            assert got.loc[qid, "resampled"] == pytest.approx(want[qid], rel=1e-9)
+
+    check()  # broadcast kernel: 70 * 400 pairs is far under the budget
+    monkeypatch.setattr(sizing, "KNN_BRUTE_PAIR_BUDGET", 100)  # 70*400 >> 100
+    check()
+
+
+def test_knn_join_unknown_query_count_fails_closed(spark, monkeypatch, tmp_path):
+    """A FILTERED query side has no parquet-footer count. The pair gate
+    must then size it with a bounded count instead of assuming it is
+    small: under a tiny pair budget knn_join takes the tiled path, and
+    its answer equals the brute one."""
+    rng = np.random.default_rng(43)
+    qdf = pd.DataFrame({"qid": np.arange(60), "lat": rng.uniform(-40, 40, 60),
+                        "lon": rng.uniform(-40, 40, 60)})
+    ddf = pd.DataFrame({"id": np.arange(200), "lat": rng.uniform(-45, 45, 200),
+                        "lon": rng.uniform(-45, 45, 200)})
+    qpath = str(tmp_path / "queries.parquet")
+    spark.createDataFrame(qdf).write.parquet(qpath)
+    queries = spark.read.parquet(qpath).filter("qid % 3 != 0")
+    assert sizing.footer_count(queries) is None
+    data = spark.createDataFrame(ddf)
+
+    tiled_calls = []
+    knn_tiled = spatial.knn_tiled
+
+    def spy(*args, **kwargs):
+        tiled_calls.append(1)
+        return knn_tiled(*args, **kwargs)
+
+    monkeypatch.setattr(spatial, "knn_tiled", spy)
+    monkeypatch.setattr(sizing, "KNN_BRUTE_PAIR_BUDGET", 100)  # 40*200 >> 100
+    got = (
+        spatial.knn_join(queries, data, 3, 4, d_id="id", q_id="qid")
+        .toPandas().sort_values(["qid", "rank"])
+    )
+    assert tiled_calls
+    kept = qdf[qdf["qid"] % 3 != 0].reset_index(drop=True)
+    want = _brute_oracle(kept, ddf, 3)
+    assert sorted(got["qid"].unique()) == sorted(want)
+    for qid, grp in got.groupby("qid"):
+        pairs = list(zip(grp["neighbor_id"], grp["dist_km"]))
+        for (gi, gd), (wi, wd) in zip(pairs, want[int(qid)]):
+            assert gi == wi, f"qid={qid}: {pairs} vs {want[int(qid)]}"
+            assert gd == pytest.approx(wd, rel=1e-9)
 
 
 def test_asof_join_matches_pandas(spark):
@@ -358,7 +411,7 @@ def test_knn_join_auto_dispatch(spark):
 
 
 def test_block_topk_chunking_invariant(monkeypatch):
-    """The GEMM memory cap (KNN_GEMM_BUDGET) must not change results:
+    """The GEMM memory cap (GEMM_BUDGET) must not change results:
     a tiny budget forces many query-row chunks; compare against the
     unchunked full-sort answer."""
     rng = np.random.default_rng(21)
@@ -366,7 +419,7 @@ def test_block_topk_chunking_invariant(monkeypatch):
     qla, qlo = rng.uniform(-60, 60, nq), rng.uniform(-170, 170, nq)
     dla, dlo = rng.uniform(-60, 60, nd), rng.uniform(-170, 170, nd)
     did = rng.permutation(nd).astype(np.int64)
-    monkeypatch.setattr(spatial, "KNN_GEMM_BUDGET", 100)  # ~0.5 rows/chunk worth
+    monkeypatch.setattr(sizing, "GEMM_BUDGET", 100)  # ~0.5 rows/chunk worth
     ids, dist = spatial._block_topk(qla, qlo, dla, dlo, did, k)
     full = spatial.haversine_km(qla[:, None], qlo[:, None], dla[None, :], dlo[None, :])
     for i in range(nq):

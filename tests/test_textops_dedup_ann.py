@@ -854,9 +854,8 @@ def test_simhash_unicode_whitespace_parity(spark):
 
 
 def test_kgram_hash_ladder_non_power_of_two_k(spark):
-    """The hash doubling ladder only applies at power-of-two k; other k
-    fall back to the aggregate form — both must equal the positional
-    Horner reference."""
+    """The Arrow kernel's k-gram hash must equal the positional Horner
+    reference at power-of-two and other k alike."""
     rng = np.random.default_rng(13)
     alpha = np.array(list("abc def"))
     pdf = pd.DataFrame(
@@ -1167,21 +1166,6 @@ def test_embedding_topk_indexed_partition_pruned(spark):
     assert len(df.toPandas()) == 100
 
 
-def test_fingerprint_impls_value_identical(spark, docs):
-    """The arrow (batch-concatenated numpy) and expr (JVM ladder)
-    implementations of both fingerprint families must be VALUE-
-    identical on the real corpus — same Horner mod arithmetic, same
-    window minima, same per-doc dedup (VERDICT r5 #6: the arrow path
-    is the measured-faster default; the expr path stays as the
-    dependency-light spelling and this pin keeps them honest)."""
-    for fn in (textops.doc_fingerprints, textops.doc_fingerprints_winnow):
-        a = fn(docs, impl="arrow").toPandas()
-        e = fn(docs, impl="expr").toPandas()
-        assert set(zip(a["doc_id"], a["fp"])) == set(zip(e["doc_id"], e["fp"]))
-        # distinct per doc in both
-        assert not a.duplicated().any() and not e.duplicated().any()
-
-
 def test_fps_char_bounded_subbatching(spark, docs, monkeypatch):
     """The arrow kernel's memory envelope is bounded by CHARACTERS, not
     Arrow's record count: with the cap forced tiny the kernel must
@@ -1189,9 +1173,9 @@ def test_fps_char_bounded_subbatching(spark, docs, monkeypatch):
     per single over-cap doc) and still return exactly the same value
     set (code-review r6: a batch of 10k long docs must not OOM the
     Python worker)."""
-    baseline = textops.doc_fingerprints_winnow(docs, impl="arrow").toPandas()
+    baseline = textops.doc_fingerprints_winnow(docs).toPandas()
     monkeypatch.setattr(textops, "_FPS_BATCH_CHAR_CAP", 500)
-    tiny = textops.doc_fingerprints_winnow(docs, impl="arrow").toPandas()
+    tiny = textops.doc_fingerprints_winnow(docs).toPandas()
     assert set(zip(tiny["doc_id"], tiny["fp"])) == set(
         zip(baseline["doc_id"], baseline["fp"])
     )

@@ -33,8 +33,8 @@ AUDIT = [
     ("vocab_topk_docs", "explode -> partial/final agg -> deterministic top-k"),
     ("exact_dedup_docs", "one hash agg on md5 key"),
     ("stratified_sample_docs", "deterministic md5-bucket quota filter: pure codegen projection+filter, ZERO shuffles"),
-    ("doc_fingerprints", "batch-concatenated numpy kernel (ONE ArrowEval node, char-bounded sub-batches): ZERO shuffles; the JVM zip_with doubling-ladder spelling remains available as impl='expr'"),
-    ("doc_fingerprints_winnow", "same Arrow kernel with sliding-window minima (ONE ArrowEval node): ZERO shuffles; value-identical to the impl='expr' LET-bound sparse-table ladder"),
+    ("doc_fingerprints", "batch-concatenated numpy kernel (ONE ArrowEval node, char-bounded sub-batches): ZERO shuffles; the scan fans out first (sizing.fan_out)"),
+    ("doc_fingerprints_winnow", "same Arrow kernel with sliding-window minima (ONE ArrowEval node): ZERO shuffles; window minima from a sparse-table doubling ladder"),
     ("fingerprint_near_dup_docs", "ONE scan: groupBy fp collects sorted doc lists (df guard = size filter), id1<id2 pairs generated inside the array, then pair agg — never all-pairs, no self-join recompute"),
     ("tpch_q3", "join-order-sensitive relational shape: segment filter pushed to the customer scan, filtered customer BROADCAST into orders, date predicates pushed to both fact scans; no SortMergeJoin at bench scale"),
     ("tpch_q5", "6-table correlated-dim join: region->nation chain broadcast, nation-pruned customer/supplier dims broadcast into the facts, c_nationkey=s_nationkey applied post-join; the only shuffle at scale is lineitem<->orders + the final per-nation agg"),
