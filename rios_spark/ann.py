@@ -1,18 +1,22 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, as the build spec requires:
-- ``cosine_topk_bruteforce`` — exact baseline: data matrix broadcast,
-  per-batch numpy GEMM + argpartition. The right answer for dims that
-  fit an executor (the broadcast-STRtree pattern again).
-- ``cosine_topk_ivf`` — the scale path: IVF (inverted file) index.
-  Centroids trained driver-side on a sample (numpy k-means), every
-  data row assigned to its nearest centroid (one map), queries probe
-  the nprobe nearest centroid lists only. Candidate generation is an
-  equi-join on centroid id — shuffle on a small key domain; exactness
-  is traded for nprobe (nprobe == k_centroids → exact).
+``cosine_topk_bruteforce`` is the exact baseline (data matrix
+broadcast, one numpy GEMM + argpartition per query batch);
+``cosine_topk`` dispatches between it and exact IVF by data size.
 
-Also ``cosine_topk_sql_expr`` documents the pure-SQL formulation
-(F.aggregate/zip_with dot product) used by the oracle-checked query.
+Every IVF operator — ad-hoc ``cosine_topk_ivf``, the persisted
+``ivf_build_index`` / ``ivf_index_append`` / ``ivf_search`` and
+``ivf_pq_search`` — runs one pipeline, one implementation per step:
+``_train_centroids`` (sample -> normalise -> cosine k-means),
+``_assign_lists`` (vector -> list_id = nearest centroid x shards +
+id % shards), ``_probe_rows`` (query -> nprobe nearest lists x every
+shard), ``_probe`` (probe frame + the list ids that prune a persisted
+scan) and ``_ivf_score_and_rank`` (cogrouped GEMM top-k + the global
+(-cosine, id) window; PQ scores by ADC instead). The ad-hoc path runs
+it in memory, with no index write and no probe-id collect. Exactness
+is traded for nprobe: nprobe == n_centroids is exact.
+
+``cosine_sim_col`` is the JVM-side cosine the PQ rerank scores with.
 """
 
 from __future__ import annotations
@@ -24,7 +28,6 @@ import pandas as pd
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from rios_spark.plans import sizing
@@ -50,13 +53,20 @@ def _normalize(mat: np.ndarray) -> np.ndarray:
     return mat / norms
 
 
-def _topk_cosine(
-    qm: np.ndarray, dm: np.ndarray, dids: np.ndarray, k: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Exact top-k by cosine for each row of qm against dm (both
-    L2-normalized), chunking query rows so the similarity matrix stays
-    <= sizing.GEMM_BUDGET elements. Returns (ids, sims) of shape (nq, kk),
-    kk = min(k, len(dm)), sorted desc with (-sim, id) tie-break."""
+def _unit_rows(vectors: pd.Series) -> np.ndarray:
+    """A column of embedding arrays as an L2-normalised float64 matrix."""
+    return _normalize(np.stack(vectors.map(np.asarray).to_list()).astype(np.float64))
+
+
+def _topk_frame(
+    qpdf: pd.DataFrame, q_id: str, q_emb: str, dm: np.ndarray, dids: np.ndarray, k: int
+) -> pd.DataFrame:
+    """Exact top-k by cosine of each query row of qpdf against the
+    L2-normalised rows dm (ids dids): kk = min(k, len(dm)) rows
+    (q_id, neighbor_id, cosine) per query, best first with a
+    (-cosine, id) tie-break. Query rows are chunked so the similarity
+    matrix stays <= sizing.GEMM_BUDGET elements."""
+    qm = _unit_rows(qpdf[q_emb])
     nq, nd = len(qm), len(dm)
     kk = min(k, nd)
     out_i = np.empty((nq, kk), np.int64)
@@ -71,7 +81,13 @@ def _topk_cosine(
         ord2 = np.lexsort((dids[idx], -ssel), axis=1)
         out_i[s:e] = dids[idx[rows, ord2]]
         out_s[s:e] = ssel[rows, ord2]
-    return out_i, out_s
+    return pd.DataFrame(
+        {
+            q_id: qpdf[q_id].to_numpy().repeat(kk),
+            "neighbor_id": out_i.ravel(),
+            "cosine": out_s.ravel(),
+        }
+    )
 
 
 def cosine_topk_bruteforce(
@@ -86,54 +102,40 @@ def cosine_topk_bruteforce(
     """Exact cosine top-k, data broadcast. Output:
     (q_id, neighbor_id, cosine, rank); ties broken on (-cosine, id)."""
     spark = queries.sparkSession
-    dmat = _normalize(np.stack(data[d_emb].map(np.asarray).to_list()).astype(np.float64))
+    dmat = _unit_rows(data[d_emb])
     dids = data[d_id].to_numpy(np.int64)
     bc = spark.sparkContext.broadcast((dmat, dids))
 
     def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         dm, di = bc.value
-        kk = min(k, len(di))
+        ranks = np.arange(1, min(k, len(di)) + 1, dtype=np.int32)
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qm = _normalize(
-                np.stack(pdf[q_emb].map(np.asarray).to_list()).astype(np.float64)
-            )
-            ids, ssel = _topk_cosine(qm, dm, di, k)
-            out = pd.DataFrame(
-                {
-                    q_id: pdf[q_id].to_numpy().repeat(kk),
-                    "neighbor_id": ids.ravel(),
-                    "cosine": ssel.ravel(),
-                    "rank": np.tile(np.arange(1, kk + 1, dtype=np.int32), len(pdf)),
-                }
-            )
-            yield out
+            if len(pdf):
+                out = _topk_frame(pdf, q_id, q_emb, dm, di, k)
+                out["rank"] = np.tile(ranks, len(pdf))
+                yield out
 
-    schema = T.StructType(
-        [
-            T.StructField(q_id, T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-            T.StructField("rank", T.IntegerType()),
-        ]
+    return queries.select(q_id, q_emb).mapInPandas(
+        kern, f"{q_id} long, neighbor_id long, cosine double, rank int"
     )
-    return queries.select(q_id, q_emb).mapInPandas(kern, schema)
+
+
+# Lists of cosine_topk's exact IVF path above the broadcast gate: up to
+# 64 centroids (fewer on small data, ~64 rows per list minimum), each
+# split into 4 hash sub-shards so no cogroup task holds a whole list.
+EXACT_IVF_CENTROIDS = 64
+EXACT_IVF_LIST_SHARDS = 4
 
 
 def cosine_topk(
     queries: DataFrame,
     data: DataFrame,
     k: int,
-    broadcast_threshold: int = 500_000,
-    n_centroids: int = 64,
-    list_shards: int = 4,
     **kwargs,
 ) -> DataFrame:
     """Auto-dispatching EXACT cosine top-k (the ANN analogue of
     spatial.knn_join): when the data side fits the broadcast budget
-    (count <= broadcast_threshold; payload = rows x dim x 8 B, so 500k
-    rows x 128 dims = ~512 MB worst case) the brute GEMM path wins
+    (count <= sizing.ANN_BROADCAST_ROWS) the brute GEMM path wins
     outright; above it, IVF with nprobe == n_centroids — every list is
     probed, so the result is still exact, but the candidate generation
     is a distributed cogroup join instead of a driver collect. No
@@ -144,7 +146,7 @@ def cosine_topk(
     d_id = kwargs.get("d_id", "vec_id")
     d_emb = kwargs.get("d_emb", "embedding")
     n = sizing.fast_count(data)
-    if n <= broadcast_threshold:
+    if n <= sizing.ANN_BROADCAST_ROWS:
         pdf = data.select(d_id, d_emb).toPandas()
         # caller hint first; else a free footer count when the query
         # plan is provably count-preserving (None = no hint, never a job)
@@ -156,12 +158,28 @@ def cosine_topk(
             pdf, k,
             q_id=q_id, q_emb=q_emb, d_id=d_id, d_emb=d_emb,
         )
-    nc = min(n_centroids, max(1, n // 64))
+    nc = min(EXACT_IVF_CENTROIDS, max(1, n // 64))
     return cosine_topk_ivf(
         queries, data, k,
-        n_centroids=nc, nprobe=nc, list_shards=list_shards,
+        n_centroids=nc, nprobe=nc, list_shards=EXACT_IVF_LIST_SHARDS,
         q_id=q_id, q_emb=q_emb, d_id=d_id, d_emb=d_emb,
     )
+
+
+def _write_small(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """Write a driver-built side table (meta, centroids, codebooks,
+    sq8 params, append log) as one parquet file."""
+    df.coalesce(1).write.mode(mode).parquet(path)
+
+
+def _missing_path(exc: AnalysisException) -> bool:
+    return "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc)
+
+
+# schema of the append-only `{path}/append_log` staleness telemetry
+_APPEND_LOG_SCHEMA = (
+    "batch_assign_cos double, build_assign_cos double, stale boolean, n_appended bigint"
+)
 
 
 def _write_index_meta(spark, path: str, **meta) -> None:
@@ -173,9 +191,9 @@ def _write_index_meta(spark, path: str, **meta) -> None:
     with (recall collapse, 'nprobe == n_centroids is exact' broken) and
     appends write inconsistent list ids (ADVICE r3). The meta table is
     the source of truth; search/append refuse to guess."""
-    pdf = pd.DataFrame({k: [v] for k, v in meta.items()})
-    spark.createDataFrame(pdf).coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/meta"
+    _write_small(
+        spark.createDataFrame(pd.DataFrame({k: [v] for k, v in meta.items()})),
+        f"{path}/meta",
     )
 
 
@@ -191,7 +209,7 @@ def _read_index_meta(spark, path: str) -> dict:
     try:
         row = spark.read.parquet(f"{path}/meta").first()
     except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
+        if _missing_path(exc):
             return {}
         raise
     return {} if row is None else row.asDict()
@@ -234,13 +252,9 @@ def ivf_write_meta(
     and m/ksub from the codebooks table when present. A backfilled PQ
     index is marked pq_encoding='raw' (the pre-r5 encoding); r5+ builds
     write residual codes and their own meta."""
-    cen_pdf = spark.read.parquet(f"{path}/centroids").toPandas()
-    order = np.argsort(cen_pdf["centroid_id"].to_numpy())
-    cen_mat = np.stack(
-        cen_pdf["vec"].iloc[order].map(np.asarray).to_list()
-    ).astype(np.float64)
+    cen_mat = _read_centroids(spark, path)
     meta = {
-        "n_centroids": int(len(cen_pdf)),
+        "n_centroids": int(len(cen_mat)),
         "list_shards": int(list_shards),
         "d_id": d_id,
         "d_emb": d_emb,
@@ -258,13 +272,20 @@ def ivf_write_meta(
     return meta
 
 
+def _nearest_centroid(mat: np.ndarray, cen: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Each row's nearest centroid by cosine (rows and centroids
+    L2-normalised): (centroid index, that cosine)."""
+    sims = mat @ cen.T
+    nearest = np.argmax(sims, axis=1).astype(np.int32)
+    return nearest, sims[np.arange(len(mat)), nearest]
+
+
 def _kmeans(mat: np.ndarray, k: int, iters: int = 10, seed: int = 42) -> np.ndarray:
     """Tiny deterministic k-means (numpy) for IVF centroids."""
     rng = np.random.default_rng(seed)
     centroids = mat[rng.choice(len(mat), size=min(k, len(mat)), replace=False)]
     for _ in range(iters):
-        d = mat @ centroids.T
-        assign = np.argmax(d, axis=1)
+        assign, _ = _nearest_centroid(mat, centroids)
         for c in range(len(centroids)):
             m = assign == c
             if m.any():
@@ -273,6 +294,22 @@ def _kmeans(mat: np.ndarray, k: int, iters: int = 10, seed: int = 42) -> np.ndar
                 if n > 0:
                     centroids[c] = v / n
     return centroids
+
+
+def _train_centroids(
+    data: DataFrame, n_centroids: int, sample_rows: int, d_emb: str, seed: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """The one IVF centroid trainer: a uniform sample of ~sample_rows
+    vectors (limit() alone would train on the first partitions only —
+    biased centroids), its fraction sized by sizing.fast_count, then
+    normalised and put through the deterministic cosine k-means.
+    Returns (sample matrix, centroids)."""
+    frac = min(1.0, sample_rows / max(sizing.fast_count(data), 1))
+    sample = data.select(d_emb).sample(fraction=frac, seed=seed).limit(sample_rows).toPandas()
+    if len(sample) == 0:
+        sample = data.select(d_emb).limit(sample_rows).toPandas()
+    smat = _unit_rows(sample[d_emb])
+    return smat, _kmeans(smat, n_centroids, seed=seed)
 
 
 def _train_pq_codebooks(
@@ -334,7 +371,7 @@ def _train_pq_codebooks(
     _check_pq_encoding(encoding)
     if encoding == "raw":
         return "raw", train(smat)
-    resid = smat - coarse[np.argmax(smat @ coarse.T, axis=1)]
+    resid = smat - coarse[_nearest_centroid(smat, coarse)[0]]
     if encoding == "residual":
         return "residual", train(resid)
     cb_raw, cb_res = train(smat), train(resid)
@@ -372,6 +409,16 @@ def _centroid_sig(centroids: np.ndarray) -> str:
     ).hexdigest()[:16]
 
 
+def _read_centroids(spark, path: str) -> np.ndarray:
+    """`{path}/centroids` as an (n_centroids, dim) float64 matrix in
+    centroid_id order."""
+    cen_pdf = spark.read.parquet(f"{path}/centroids").toPandas()
+    order = np.argsort(cen_pdf["centroid_id"].to_numpy())
+    return np.stack(cen_pdf["vec"].iloc[order].map(np.asarray).to_list()).astype(
+        np.float64
+    )
+
+
 def _load_centroids_verified(spark, path: str, meta: dict) -> np.ndarray:
     """Load `{path}/centroids` sorted by centroid_id and verify its
     content signature against meta['centroid_sig']. The build writes
@@ -381,11 +428,7 @@ def _load_centroids_verified(spark, path: str, meta: dict) -> np.ndarray:
     mapping, the silent recall collapse _require_index_meta exists to
     kill (ADVICE r5). One md5 over a tiny in-memory array closes the
     window. Backfilled legacy metas without the key skip the check."""
-    cen_pdf = spark.read.parquet(f"{path}/centroids").toPandas()
-    order = np.argsort(cen_pdf["centroid_id"].to_numpy())
-    centroids = np.stack(
-        cen_pdf["vec"].iloc[order].map(np.asarray).to_list()
-    ).astype(np.float64)
+    centroids = _read_centroids(spark, path)
     expected = meta.get("centroid_sig")
     if expected is not None and _centroid_sig(centroids) != expected:
         raise ValueError(
@@ -494,33 +537,25 @@ def _index_handle(spark, path: str) -> tuple[dict, np.ndarray]:
     return dict(meta), centroids
 
 
-def _encode_and_write(
+def _assign_lists(
     data: DataFrame,
-    path: str,
     centroids: np.ndarray,
-    codebooks: np.ndarray | None,
     shards: int,
     d_id: str,
     d_emb: str,
-    residual: bool,
-    store_full: bool,
-    mode: str,
+    store_full: bool = True,
+    codebooks: np.ndarray | None = None,
+    residual: bool = False,
     sq8_params: tuple[np.ndarray, np.ndarray] | None = None,
-) -> tuple[float, int]:
-    """ONE assignment/encode kernel feeding the assigned and/or codes
-    writes — shared by build (mode='overwrite') and append
-    (mode='append') so the two paths can never drift in how they
-    assign lists or encode codes (the drift class VERDICT r4 #6 is
-    about, which duplicated kernels would quietly reintroduce).
-
-    Returns (mean assignment cosine E[v.c], row count) measured over
-    the written rows via an Observation on the SAME kernel pass — no
-    second scan. The build records it in the meta as the freshness
-    baseline; each append compares its batch against that baseline to
-    signal centroid staleness (VERDICT r5 #3: assign-only appends over
-    a drifting corpus decay recall with no error otherwise)."""
-    spark = data.sparkSession
-    bc = spark.sparkContext.broadcast((centroids, codebooks, sq8_params))
+) -> DataFrame:
+    """The one vector -> inverted-list map of every IVF operator:
+    list_id = (nearest centroid by cosine) * shards + id % shards, the
+    shard a hash sub-shard bounding each cogroup task at ~list_size /
+    shards rows. Ad-hoc search, build and append all assign here, so
+    their list mappings cannot drift (VERDICT r4 #6). Columns: list_id,
+    d_id, acos (assignment cosine), then d_emb / PQ `code` (of v - c_list
+    when residual) / `sq8` as asked — all from one pass."""
+    bc = data.sparkSession.sparkContext.broadcast((centroids, codebooks, sq8_params))
 
     out_fields = ["list_id int", f"{d_id} long", "acos double"]
     if store_full:
@@ -535,15 +570,10 @@ def _encode_and_write(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            mat = _normalize(np.stack(pdf[d_emb].map(np.asarray).to_list()).astype(np.float64))
-            sims = mat @ cen.T
-            lists = np.argmax(sims, axis=1).astype(np.int32)
+            mat = _unit_rows(pdf[d_emb])
+            lists, acos = _nearest_centroid(mat, cen)
             shard = (pdf[d_id].to_numpy(np.int64) % shards).astype(np.int32)
-            cols = {
-                "list_id": lists * shards + shard,
-                d_id: pdf[d_id],
-                "acos": sims[np.arange(len(mat)), lists],
-            }
+            cols = {"list_id": lists * shards + shard, d_id: pdf[d_id], "acos": acos}
             if store_full:
                 cols[d_emb] = pdf[d_emb]
             if cbs is not None:
@@ -553,8 +583,37 @@ def _encode_and_write(
                 cols["sq8"] = _codes_to_bytes(_sq8_encode(mat, *sqp))
             yield pd.DataFrame(cols)
 
+    return data.select(d_id, d_emb).mapInPandas(assign, ", ".join(out_fields))
+
+
+def _encode_and_write(
+    data: DataFrame,
+    path: str,
+    centroids: np.ndarray,
+    codebooks: np.ndarray | None,
+    shards: int,
+    d_id: str,
+    d_emb: str,
+    residual: bool,
+    store_full: bool,
+    mode: str,
+    sq8_params: tuple[np.ndarray, np.ndarray] | None = None,
+) -> tuple[float, int]:
+    """The assigned / codes / sq8 writes of build (mode='overwrite')
+    and append (mode='append'), fed by ONE _assign_lists pass.
+
+    Returns (mean assignment cosine E[v.c], row count) measured over
+    the written rows via an Observation on the SAME kernel pass — no
+    second scan. The build records it in the meta as the freshness
+    baseline; each append compares its batch against that baseline to
+    signal centroid staleness (VERDICT r5 #3: assign-only appends over
+    a drifting corpus decay recall with no error otherwise)."""
+    frame = _assign_lists(
+        data, centroids, shards, d_id, d_emb,
+        store_full=store_full, codebooks=codebooks, residual=residual,
+        sq8_params=sq8_params,
+    )
     obs = Observation()
-    frame = data.select(d_id, d_emb).mapInPandas(assign, ", ".join(out_fields))
     # acos is observed on the way through, never stored — the writes
     # below project explicit column sets that exclude it
     frame = frame.observe(
@@ -565,26 +624,24 @@ def _encode_and_write(
     # tasks*lists files whose open/footer overhead dominates search
     # scans. One shuffle buys one file per list dir per write.
     frame = frame.repartition("list_id")
-    n_writes = int(store_full) + int(codebooks is not None) + int(
-        sq8_params is not None
-    )
-    if n_writes > 1:
+    writes = [
+        (table, col)
+        for table, col, on in (
+            ("assigned", d_emb, store_full),
+            ("codes", "code", codebooks is not None),
+            ("sq8", "sq8", sq8_params is not None),
+        )
+        if on
+    ]
+    if len(writes) > 1:
         # one kernel pass feeding every write: the shuffled frame is
         # persisted so later writes replay cached partitions
         frame = frame.persist()
-    if store_full:
-        frame.select("list_id", d_id, d_emb).write.mode(mode).partitionBy(
+    for table, col in writes:
+        frame.select("list_id", d_id, col).write.mode(mode).partitionBy(
             "list_id"
-        ).parquet(f"{path}/assigned")
-    if codebooks is not None:
-        frame.select("list_id", d_id, "code").write.mode(mode).partitionBy(
-            "list_id"
-        ).parquet(f"{path}/codes")
-    if sq8_params is not None:
-        frame.select("list_id", d_id, "sq8").write.mode(mode).partitionBy(
-            "list_id"
-        ).parquet(f"{path}/sq8")
-    if n_writes > 1:
+        ).parquet(f"{path}/{table}")
+    if len(writes) > 1:
         frame.unpersist(blocking=False)
     got = obs.get
     n = int(got["n"])
@@ -653,12 +710,7 @@ def ivf_build_index(
     if pq:
         _check_pq_encoding(pq_encoding)
     spark = data.sparkSession
-    n_total = data.count()
-    frac = min(1.0, sample_rows / max(n_total, 1))
-    sample = data.select(d_emb).sample(fraction=frac, seed=seed).limit(sample_rows).toPandas()
-    if len(sample) == 0:
-        sample = data.select(d_emb).limit(sample_rows).toPandas()
-    smat = _normalize(np.stack(sample[d_emb].map(np.asarray).to_list()).astype(np.float64))
+    smat, centroids = _train_centroids(data, n_centroids, sample_rows, d_emb, seed)
     # validate EVERYTHING cheap before the first write: a rebuild over
     # an existing index that raises after overwriting centroids/ (but
     # before assigned/meta) leaves the OLD lists readable against NEW
@@ -667,7 +719,6 @@ def ivf_build_index(
     # to kill (code-review r5)
     if pq and smat.shape[1] % m != 0:
         raise ValueError(f"dim {smat.shape[1]} not divisible by m={m}")
-    centroids = _kmeans(smat, n_centroids, seed=seed)
     codebooks, enc = None, None
     if pq:
         enc, codebooks = _train_pq_codebooks(
@@ -680,40 +731,30 @@ def ivf_build_index(
             "vec": [c.astype(float).tolist() for c in centroids],
         }
     )
-    spark.createDataFrame(cen_pdf).coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/centroids"
-    )
+    _write_small(spark.createDataFrame(cen_pdf), f"{path}/centroids")
     if pq:
         cb_rows = [
             (int(j), int(e), codebooks[j, e].astype(float).tolist())
             for j in range(codebooks.shape[0])
             for e in range(codebooks.shape[1])
         ]
-        spark.createDataFrame(
-            cb_rows, "m_idx int, entry int, vec array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
+        _write_small(
+            spark.createDataFrame(cb_rows, "m_idx int, entry int, vec array<double>"),
+            f"{path}/codebooks",
+        )
     # reset the append telemetry BEFORE the first data write: an
     # in-place rebuild starts a fresh generation, and a leftover log
     # would keep ivf_index_status reporting the dead generation's
     # stale_ever forever (code-review r6). Cleared first so a crashed
     # rebuild can't pair a fresh log with the old index either — the
     # meta (written last) gates usability.
-    spark.createDataFrame(
-        [],
-        "batch_assign_cos double, build_assign_cos double, "
-        "stale boolean, n_appended bigint",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/append_log")
+    _write_small(spark.createDataFrame([], _APPEND_LOG_SCHEMA), f"{path}/append_log")
     if sq8:
         dmin, scale = sq8_params
-        spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "dim": np.arange(len(dmin), dtype=np.int32),
-                    "dmin": dmin,
-                    "scale": scale,
-                }
-            )
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/sq8_params")
+        sq8_pdf = pd.DataFrame(
+            {"dim": np.arange(len(dmin), dtype=np.int32), "dmin": dmin, "scale": scale}
+        )
+        _write_small(spark.createDataFrame(sq8_pdf), f"{path}/sq8_params")
     shards = max(1, int(list_shards))
     assign_cos, n_rows = _encode_and_write(
         data, path, centroids, codebooks, shards, d_id, d_emb,
@@ -804,18 +845,15 @@ def ivf_index_append(
         # stays immutable. Logged for EVERY append (legacy metas
         # without assign_cos get null baseline/stale) so n_appends
         # counts honestly (code-review r6).
-        spark.createDataFrame(
-            [
-                (
-                    round(float(batch_cos), 6),
-                    None if build_cos is None else round(float(build_cos), 6),
-                    stale,
-                    int(n_app),
-                )
-            ],
-            "batch_assign_cos double, build_assign_cos double, "
-            "stale boolean, n_appended bigint",
-        ).coalesce(1).write.mode("append").parquet(f"{path}/append_log")
+        row = (
+            round(float(batch_cos), 6),
+            None if build_cos is None else round(float(build_cos), 6),
+            stale,
+            int(n_app),
+        )
+        _write_small(
+            spark.createDataFrame([row], _APPEND_LOG_SCHEMA), f"{path}/append_log", "append"
+        )
         if stale:
             import warnings
 
@@ -854,7 +892,7 @@ def ivf_index_status(spark, path: str) -> dict:
     try:
         log = spark.read.parquet(f"{path}/append_log")
     except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
+        if _missing_path(exc):
             return out
         raise
     # worst (min) batch cosine, not "last": parquet files carry no
@@ -883,11 +921,70 @@ def _read_codebooks(spark, path: str) -> np.ndarray:
     return codebooks
 
 
-# Query-batch size up to which ivf_search assigns probes driver-side
-# from ONE bounded collect (rows x dim x 4 B — 10k x 128d = ~5 MB)
-# instead of a distributed assign stage + persist + pruning-collect
-# job. The steady-state micro-batch serving shape.
-IVF_DRIVER_PROBE_ROWS = 10_000
+def _probe_rows(
+    pdf: pd.DataFrame, cen: np.ndarray, nprobe: int, shards: int, q_id: str, q_emb: str
+) -> pd.DataFrame:
+    """The one query -> probe-lists rule: each query probes its
+    min(nprobe, n_centroids) nearest centroids by cosine (tiny data
+    sets train fewer than n_centroids), and every shard of each. One
+    output row (q_id, q_emb, list_id) per probed list."""
+    if len(pdf) == 0:  # a q_rows_hint is only an upper bound
+        return pdf[[q_id, q_emb]].assign(list_id=np.empty(0, np.int32))
+    np_eff = min(nprobe, len(cen))
+    probes = np.argsort(-(_unit_rows(pdf[q_emb]) @ cen.T), axis=1)[:, :np_eff].astype(np.int32)
+    shard_ids = np.arange(shards, dtype=np.int32)
+    all_lists = (probes[:, :, None] * shards + shard_ids[None, None, :]).reshape(len(pdf), -1)
+    rep = pdf.loc[pdf.index.repeat(np_eff * shards)].reset_index(drop=True)
+    rep["list_id"] = all_lists.ravel()
+    return rep[[q_id, q_emb, "list_id"]]
+
+
+def _probe_frame(
+    queries: DataFrame, centroids: np.ndarray, nprobe: int, shards: int, q_id: str, q_emb: str
+) -> DataFrame:
+    """_probe_rows as one distributed map over the query frame."""
+    bc = queries.sparkSession.sparkContext.broadcast(centroids)
+
+    def assign_queries(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield _probe_rows(pdf, bc.value, nprobe, shards, q_id, q_emb)
+
+    return queries.select(q_id, q_emb).mapInPandas(
+        assign_queries, f"{q_id} long, {q_emb} array<float>, list_id int"
+    )
+
+
+def _probe(
+    spark, op: str, queries: DataFrame, centroids: np.ndarray, nprobe: int, shards: int,
+    q_id: str, q_emb: str, q_rows_hint: int | None,
+) -> tuple[DataFrame, list[int]]:
+    """Probe step of the persisted-index searches: (probe frame, the
+    distinct probed list ids the caller pushes into its table read as a
+    list_id partition filter). `op` is the session cache-registry key.
+    Cheapest first: a batch of <= sizing.IVF_DRIVER_PROBE_ROWS
+    (q_rows_hint) is probed driver-side from one collect (one Spark job
+    per search instead of three); nprobe >= n_centroids probes every
+    list, so the ids need no job and the frame no persist; otherwise
+    the frame is persisted (registered so the next plan-distinct call
+    frees it, ADVICE r3) and its distinct list ids collected."""
+    from rios_spark.session import track_caches
+
+    if q_rows_hint is not None and 0 < q_rows_hint <= sizing.IVF_DRIVER_PROBE_ROWS:
+        rep = _probe_rows(
+            queries.select(q_id, q_emb).toPandas(), centroids, nprobe, shards, q_id, q_emb
+        )
+        probed = spark.createDataFrame(
+            rep, schema=f"{q_id} long, {q_emb} array<float>, list_id int"
+        )
+        track_caches(spark, op, [])
+        return probed, [int(x) for x in np.unique(rep["list_id"])]
+    probed = _probe_frame(queries, centroids, nprobe, shards, q_id, q_emb)
+    if nprobe >= len(centroids):
+        track_caches(spark, op, [])
+        return probed, list(range(len(centroids) * shards))
+    probed = probed.persist()
+    track_caches(spark, op, [probed])
+    return probed, [int(r[0]) for r in probed.select("list_id").distinct().collect()]
 
 
 def ivf_search(
@@ -902,16 +999,15 @@ def ivf_search(
     d_emb: str = "embedding",
     q_rows_hint: int | None = None,
 ) -> DataFrame:
-    """Search a persisted IVF index (ivf_build_index). The probe set is
-    collected driver-side (|queries| x nprobe distinct list ids — tiny)
-    and pushed as a PARTITION FILTER on the assigned table, so the scan
-    touches only the probed lists' files; scoring is the same cogrouped
-    GEMM + global top-k window as cosine_topk_ivf. nprobe == n_centroids
-    is exact.
+    """Search a persisted IVF index (ivf_build_index): the shared probe
+    step, its list ids pushed as a PARTITION FILTER on the assigned
+    table (the scan touches only the probed lists' files), then the
+    same cogrouped GEMM + global top-k window as cosine_topk_ivf.
+    nprobe == n_centroids is exact.
 
     q_rows_hint: caller-known (upper bound on the) query row count.
-    At or under IVF_DRIVER_PROBE_ROWS it enables the driver-side probe
-    path — identical results, one Spark job instead of three."""
+    At or under sizing.IVF_DRIVER_PROBE_ROWS it enables the driver-side
+    probe path — identical results, one Spark job instead of three."""
     meta, centroids = _index_handle(spark, path)
     if meta.get("has_full") is False:
         raise ValueError(
@@ -919,118 +1015,38 @@ def ivf_search(
             "table, has_full=false in meta): use ivf_pq_search, or rebuild "
             "with ivf_build_index(pq=True) for both tables"
         )
-    assigned = spark.read.parquet(f"{path}/assigned")
-    shards = int(meta["list_shards"])
-    bc = spark.sparkContext.broadcast(centroids)
-    np_eff = min(nprobe, len(centroids))
-
-    def assign_queries(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cen = bc.value
-        shard_ids = np.arange(shards, dtype=np.int32)
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            mat = _normalize(np.stack(pdf[q_emb].map(np.asarray).to_list()).astype(np.float64))
-            sims = mat @ cen.T
-            probes = np.argsort(-sims, axis=1)[:, :np_eff].astype(np.int32)
-            all_lists = (probes[:, :, None] * shards + shard_ids[None, None, :]).reshape(
-                len(pdf), -1
-            )
-            rep = pdf.loc[pdf.index.repeat(np_eff * shards)].reset_index(drop=True)
-            rep["list_id"] = all_lists.ravel()
-            yield rep[[q_id, q_emb, "list_id"]]
-
-    from rios_spark.session import track_caches
-
-    if q_rows_hint is not None and 0 < q_rows_hint <= IVF_DRIVER_PROBE_ROWS:
-        # SMALL query batches (the streaming-serving steady state and
-        # bounded ad-hoc lookups): assign probes DRIVER-side from one
-        # bounded collect instead of a distributed assign stage plus a
-        # persist plus a distinct+collect pruning job — the same
-        # normalize/argsort arithmetic on the same centroids, so the
-        # probe set (and thus the result) is identical; the scoring
-        # cogroup and rank window below are unchanged. Measured: one
-        # Spark job per search instead of three (~2x lower per-micro-
-        # batch latency at a processingTime trigger).
-        qpdf = queries.select(q_id, q_emb).toPandas()
-        mat = _normalize(
-            np.stack(qpdf[q_emb].map(np.asarray).to_list()).astype(np.float64)
-        )
-        probes = np.argsort(-(mat @ centroids.T), axis=1)[:, :np_eff].astype(np.int32)
-        shard_ids = np.arange(shards, dtype=np.int32)
-        all_lists = (
-            probes[:, :, None] * shards + shard_ids[None, None, :]
-        ).reshape(len(qpdf), -1)
-        rep = qpdf.loc[qpdf.index.repeat(np_eff * shards)].reset_index(drop=True)
-        rep["list_id"] = all_lists.ravel()
-        probed = spark.createDataFrame(
-            rep[[q_id, q_emb, "list_id"]],
-            schema=f"{q_id} long, {q_emb} array<float>, list_id int",
-        )
-        track_caches(spark, "ivf_search", [])
-        probe_ids = [int(x) for x in np.unique(all_lists)]
-        pruned = assigned.filter(F.col("list_id").isin(probe_ids))
-        return _ivf_score_and_rank(
-            probed, pruned, k, q_id, q_emb, d_id, d_emb
-        )
-
-    probed = queries.select(q_id, q_emb).mapInPandas(
-        assign_queries, f"{q_id} long, {q_emb} array<float>, list_id int"
+    probed, probe_ids = _probe(
+        spark, "ivf_search", queries, centroids, nprobe, int(meta["list_shards"]),
+        q_id, q_emb, q_rows_hint,
     )
-    # static partition pruning: the distinct probed lists are bounded by
-    # n_centroids * shards — push them into the read as a filter
-    if np_eff >= len(centroids):
-        # exact mode probes EVERY list: the probe set is known without
-        # running a job, so skip the distinct+collect (and the persist —
-        # the cogroup is then probed's only consumer). The isin filter
-        # keeps the identical partition-pruned scan shape a reduced
-        # nprobe uses (r7: one Spark job less per serving call).
-        probe_ids = list(range(len(centroids) * shards))
-        track_caches(spark, "ivf_search", [])
-    else:
-        probed = probed.persist()
-        # registered so the next plan-distinct search (or an explicit
-        # session.release_caches) frees this call's cache (ADVICE r3)
-        track_caches(spark, "ivf_search", [probed])
-        probe_ids = [int(r[0]) for r in probed.select("list_id").distinct().collect()]
-    pruned = assigned.filter(F.col("list_id").isin(probe_ids))
-
+    pruned = spark.read.parquet(f"{path}/assigned").filter(
+        F.col("list_id").isin(probe_ids)
+    )
     return _ivf_score_and_rank(probed, pruned, k, q_id, q_emb, d_id, d_emb)
 
 
 def _ivf_score_and_rank(
-    probed: DataFrame,
-    pruned: DataFrame,
-    k: int,
-    q_id: str,
-    q_emb: str,
-    d_id: str,
-    d_emb: str,
+    probed: DataFrame, lists: DataFrame, k: int, q_id: str, q_emb: str, d_id: str, d_emb: str
 ) -> DataFrame:
-    """Shared scoring tail of ivf_search: cogrouped per-list GEMM
-    top-k + the global rank window — identical for the distributed and
-    driver-side probe-assignment paths."""
+    """Scoring tail of every float IVF search: per-list scoring as a
+    COGROUPED numpy GEMM — each inverted list meets its probing queries
+    once, scores them in one matrix multiply and emits only each
+    query's local top-k, so the shuffle carries queries + list vectors,
+    never the candidate cross product — then the global rank window
+    with its (-cosine, id) tie-break."""
 
     def score(qpdf: pd.DataFrame, dpdf: pd.DataFrame) -> pd.DataFrame:
         if len(qpdf) == 0 or len(dpdf) == 0:
             return pd.DataFrame({q_id: [], "neighbor_id": [], "cosine": []}).astype(
                 {q_id: np.int64, "neighbor_id": np.int64, "cosine": np.float64}
             )
-        qm = _normalize(np.stack(qpdf[q_emb].map(np.asarray).to_list()).astype(np.float64))
-        dm = _normalize(np.stack(dpdf[d_emb].map(np.asarray).to_list()).astype(np.float64))
-        ids, ssel = _topk_cosine(qm, dm, dpdf[d_id].to_numpy(np.int64), k)
-        kk = ids.shape[1]
-        return pd.DataFrame(
-            {
-                q_id: qpdf[q_id].to_numpy().repeat(kk),
-                "neighbor_id": ids.ravel(),
-                "cosine": ssel.ravel(),
-            }
+        return _topk_frame(
+            qpdf, q_id, q_emb, _unit_rows(dpdf[d_emb]), dpdf[d_id].to_numpy(np.int64), k
         )
 
     partial = (
         probed.groupBy("list_id")
-        .cogroup(pruned.groupBy("list_id"))
+        .cogroup(lists.groupBy("list_id"))
         .applyInPandas(lambda q, d: score(q, d), f"{q_id} long, neighbor_id long, cosine double")
     )
     w = Window.partitionBy(q_id).orderBy(F.desc("cosine"), F.col("neighbor_id"))
@@ -1055,9 +1071,13 @@ def cosine_topk_ivf(
     seed: int = 42,
     list_shards: int = 1,
 ) -> DataFrame:
-    """IVF-bucketed ANN: train centroids on a sample (driver), assign
-    data to centroid lists (map), probe nprobe lists per query
-    (equi-join on list id), exact rank within candidates.
+    """Ad-hoc IVF-bucketed ANN, all in memory: train centroids on a
+    sample (driver), assign data to centroid lists (map), probe nprobe
+    lists per query, exact rank within candidates — the same trainer,
+    list mapping, probe rule and scoring tail as the persisted index,
+    minus the write and the probe-id collect. With the same seed,
+    sample_rows, n_centroids and list_shards it returns exactly what
+    ivf_build_index + ivf_search return.
 
     Recall < 1 by design unless nprobe == n_centroids; the bench
     reports recall@k against the brute-force baseline.
@@ -1068,95 +1088,11 @@ def cosine_topk_ivf(
     MUST shard; results are identical because each shard emits a local
     top-k and the final window merges (round-1 VERDICT IVF caveat).
     """
-    spark = queries.sparkSession
-    # uniform sample for centroid training (limit() would train on the
-    # first partitions only — biased centroids, degraded recall)
-    n_total = data.count()
-    frac = min(1.0, sample_rows / max(n_total, 1))
-    sample = data.select(d_emb).sample(fraction=frac, seed=seed).limit(sample_rows).toPandas()
-    if len(sample) == 0:
-        sample = data.select(d_emb).limit(sample_rows).toPandas()
-    smat = _normalize(np.stack(sample[d_emb].map(np.asarray).to_list()).astype(np.float64))
-    centroids = _kmeans(smat, n_centroids, seed=seed)
-    bc = spark.sparkContext.broadcast(centroids)
-
+    _, centroids = _train_centroids(data, n_centroids, sample_rows, d_emb, seed)
     shards = max(1, int(list_shards))
-
-    def assign_data(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cen = bc.value
-        for pdf in it:
-            mat = _normalize(np.stack(pdf[d_emb].map(np.asarray).to_list()).astype(np.float64))
-            lists = np.argmax(mat @ cen.T, axis=1).astype(np.int32)
-            # deterministic sub-shard of each inverted list: bounds the
-            # largest cogroup task at ~list_size/shards rows
-            shard = (pdf[d_id].to_numpy(np.int64) % shards).astype(np.int32)
-            yield pd.DataFrame(
-                {"list_id": lists * shards + shard, d_id: pdf[d_id], d_emb: pdf[d_emb]}
-            )
-
-    assigned = data.select(d_id, d_emb).mapInPandas(
-        assign_data, f"list_id int, {d_id} long, {d_emb} array<float>"
-    )
-
-    def assign_queries(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cen = bc.value
-        # nprobe can't exceed the number of trained centroids (tiny
-        # data sets train fewer than n_centroids)
-        np_eff = min(nprobe, cen.shape[0])
-        shard_ids = np.arange(shards, dtype=np.int32)
-        for pdf in it:
-            mat = _normalize(np.stack(pdf[q_emb].map(np.asarray).to_list()).astype(np.float64))
-            sims = mat @ cen.T
-            probes = np.argsort(-sims, axis=1)[:, :np_eff].astype(np.int32)
-            # each query probes every shard of each probed list
-            all_lists = (probes[:, :, None] * shards + shard_ids[None, None, :]).reshape(
-                len(pdf), -1
-            )
-            rep = pdf.loc[pdf.index.repeat(np_eff * shards)].reset_index(drop=True)
-            rep["list_id"] = all_lists.ravel()
-            yield rep[[q_id, q_emb, "list_id"]]
-
-    probed = queries.select(q_id, q_emb).mapInPandas(
-        assign_queries, f"{q_id} long, {q_emb} array<float>, list_id int"
-    )
-
-    # per-list scoring as a COGROUPED numpy GEMM: each inverted list
-    # meets its probing queries once, scores via one matrix multiply,
-    # and emits only each query's local top-k — orders of magnitude
-    # faster than per-pair array expressions, and the shuffle carries
-    # only (queries + list vectors), never the candidate cross product
-    def score_list(qpdf: pd.DataFrame, dpdf: pd.DataFrame) -> pd.DataFrame:
-        if len(qpdf) == 0 or len(dpdf) == 0:
-            return pd.DataFrame({q_id: [], "neighbor_id": [], "cosine": []}).astype(
-                {q_id: np.int64, "neighbor_id": np.int64, "cosine": np.float64}
-            )
-        qm = _normalize(np.stack(qpdf[q_emb].map(np.asarray).to_list()).astype(np.float64))
-        dm = _normalize(np.stack(dpdf[d_emb].map(np.asarray).to_list()).astype(np.float64))
-        dids = dpdf[d_id].to_numpy(np.int64)
-        ids, ssel = _topk_cosine(qm, dm, dids, k)
-        kk = ids.shape[1]
-        return pd.DataFrame(
-            {
-                q_id: qpdf[q_id].to_numpy().repeat(kk),
-                "neighbor_id": ids.ravel(),
-                "cosine": ssel.ravel(),
-            }
-        )
-
-    partial = (
-        probed.groupBy("list_id")
-        .cogroup(assigned.groupBy("list_id"))
-        .applyInPandas(
-            lambda q, d: score_list(q, d),
-            f"{q_id} long, neighbor_id long, cosine double",
-        )
-    )
-    w = Window.partitionBy(q_id).orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, "neighbor_id", "cosine", "rank")
-    )
+    lists = _assign_lists(data, centroids, shards, d_id, d_emb).drop("acos")
+    probed = _probe_frame(queries, centroids, nprobe, shards, q_id, q_emb)
+    return _ivf_score_and_rank(probed, lists, k, q_id, q_emb, d_id, d_emb)
 
 
 # --- IVF-PQ: product-quantized compressed index (the 100-TB memory path) ------
@@ -1297,31 +1233,9 @@ def ivf_pq_search(
     # pre-r5 arithmetic for backfilled legacy indexes
     residual = str(meta.get("pq_encoding", "raw")) == "residual"
     bc = spark.sparkContext.broadcast((coarse, codebooks))
-    np_eff = min(nprobe, len(coarse))
-
-    def assign_queries(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cen, _ = bc.value
-        shard_ids = np.arange(shards, dtype=np.int32)
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            mat = _normalize(np.stack(pdf[q_emb].map(np.asarray).to_list()).astype(np.float64))
-            sims = mat @ cen.T
-            probes = np.argsort(-sims, axis=1)[:, :np_eff].astype(np.int32)
-            all_lists = (probes[:, :, None] * shards + shard_ids[None, None, :]).reshape(
-                len(pdf), -1
-            )
-            rep = pdf.loc[pdf.index.repeat(np_eff * shards)].reset_index(drop=True)
-            rep["list_id"] = all_lists.ravel()
-            yield rep[[q_id, q_emb, "list_id"]]
-
-    from rios_spark.session import track_caches
-
-    probed = queries.select(q_id, q_emb).mapInPandas(
-        assign_queries, f"{q_id} long, {q_emb} array<float>, list_id int"
-    ).persist()
-    track_caches(spark, "ivf_pq_search", [probed])
-    probe_ids = [int(r[0]) for r in probed.select("list_id").distinct().collect()]
+    probed, probe_ids = _probe(
+        spark, "ivf_pq_search", queries, coarse, nprobe, shards, q_id, q_emb, None
+    )
     pruned = codes.filter(F.col("list_id").isin(probe_ids))
 
     k_local = k if rerank_path is None else k * max(1, rerank_factor)
@@ -1336,7 +1250,7 @@ def ivf_pq_search(
             )
         cen, cbs = bc.value
         mm = cbs.shape[0]
-        qm = _normalize(np.stack(qpdf[q_emb].map(np.asarray).to_list()).astype(np.float64))
+        qm = _unit_rows(qpdf[q_emb])
         cmat = np.frombuffer(b"".join(dpdf["code"]), np.uint8).reshape(len(dpdf), mm)
         dids = dpdf[d_id].to_numpy(np.int64)
         dsub_ = cbs.shape[2]

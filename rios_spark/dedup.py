@@ -446,17 +446,20 @@ def _hyperplane_keys(mat: np.ndarray, hv: np.ndarray) -> np.ndarray:
     return (signs.astype(np.int64) << np.arange(signs.shape[1])).sum(axis=1)
 
 
-# f32 candidate-pass slack for the exact all-pairs kernel (r7): the
-# N^2 GEMM runs in float32 (2x the FLOP rate, half the matrix
-# bandwidth of dgemm) and shortlists pairs with sim32 >= threshold -
-# slack; the shortlist is then re-verified with an exact float64
-# per-pair dot, which alone decides membership AND supplies the
-# emitted cosine. Unit-norm f64 -> f32 cast error is <= 2^-24 per
-# element and a 64-dim f32 accumulated dot adds <= ~dim * 2^-23 ~
-# 7.6e-6, so |sim32 - sim64| is bounded ~1e-5 for the embedding dims
-# in play — 1e-3 slack is a ~100x margin; a too-big slack only costs
-# a few extra exact verifications, never correctness.
-PAIRS_F32_SLACK = 1e-3
+def pairs_f32_slack(dim: int) -> float:
+    """f32 candidate-pass slack of the exact all-pairs kernel (r7): the
+    N^2 GEMM runs in float32 (2x the FLOP rate, half the matrix
+    bandwidth of dgemm) and shortlists pairs with sim32 >= threshold -
+    slack; the shortlist is then re-verified with an exact float64
+    per-pair dot, which alone decides membership AND supplies the
+    emitted cosine. Unit-norm f64 -> f32 cast error is <= 2^-24 per
+    element and a dim-term f32 accumulated dot adds <= ~dim * 2^-23,
+    so 2 * (dim + 2) * 2^-23 bounds |sim32 - sim64| with a 2x margin.
+    The floor of 1e-3 (a ~100x margin at 64 dims) holds up to ~4k
+    dims; past it the slack grows with dim, so the shortlist can never
+    drop a true pair. A too-big slack only costs a few extra exact
+    verifications, never correctness."""
+    return max(1e-3, 2.0 * (dim + 2) * 2.0**-23)
 
 
 def embedding_all_pairs_exact(
@@ -473,7 +476,7 @@ def embedding_all_pairs_exact(
     pair (i <= j) is one applyInPandas task holding <= 2*block_rows
     rows, whose similarity matrix is GEMM-chunked to sizing.GEMM_BUDGET
     elements and evaluated as an f32 candidate pass + exact f64
-    per-pair verification (PAIRS_F32_SLACK — membership and the
+    per-pair verification (pairs_f32_slack — membership and the
     emitted cosine both come from the f64 recompute). Each unordered id pair is computed in EXACTLY one task,
     so no dedup pass is needed and the result is the full pair set —
     the guarantee `embedding_near_dup(planes=0)` advertises, which the
@@ -514,7 +517,7 @@ def embedding_all_pairs_exact(
         ids = pdf["id"].to_numpy(np.int64)
         mat = _norm_mat(pdf)
         mat32 = mat.astype(np.float32)
-        thr32 = threshold - PAIRS_F32_SLACK
+        thr32 = threshold - pairs_f32_slack(mat.shape[1])
         outs = []
         if lo == hi:
             step = max(1, sizing.GEMM_BUDGET // max(len(pdf), 1))
@@ -525,7 +528,7 @@ def embedding_all_pairs_exact(
                 keep = (ii + s) < jj  # strict upper triangle, global idx
                 ii, jj = ii[keep], jj[keep]
                 # exact f64 verification decides membership and the
-                # emitted cosine (see PAIRS_F32_SLACK)
+                # emitted cosine (see pairs_f32_slack)
                 sim = np.einsum("ij,ij->i", mat[ii + s], mat[jj])
                 keep = sim >= threshold
                 ii, jj, sim = ii[keep], jj[keep], sim[keep]

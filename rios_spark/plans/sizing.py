@@ -11,6 +11,10 @@ the engine asks is answered here:
 - ``broadcast_gated``: broadcast hints on scale-growing dimensions;
 - ``brute_pairs_ok``: the query x data pair gate of the broadcast kNN
   and resample kernels;
+- ``KNN_BROADCAST_ROWS`` / ``ANN_BROADCAST_ROWS``: the data-side row
+  gates of the broadcast kNN and cosine top-k kernels;
+- ``IVF_DRIVER_PROBE_ROWS``: the query-batch gate of the driver-side
+  IVF probe;
 - ``GEMM_BUDGET``: the per-task distance / similarity matrix cap.
 
 One rule for a count the footers cannot prove: unknown never means
@@ -57,6 +61,23 @@ BROADCAST_ROW_GATE = 4_000_000
 # for true scale (e.g. 15M x 1M = 1.5e13 pairs), where all-pairs is
 # catastrophic no matter how fast the per-pair kernel is.
 KNN_BRUTE_PAIR_BUDGET = 4_000_000_000
+
+# Data-side row gate of knn_join's broadcast brute path: 2M rows x 3
+# float64 (id, lat, lon) = ~48 MB per executor. It bounds only the
+# broadcast payload; the pair gate above and GEMM_BUDGET bound compute
+# and task memory.
+KNN_BROADCAST_ROWS = 2_000_000
+
+# Data-side row gate of cosine_topk's broadcast GEMM path: payload =
+# rows x dim x 8 B, so 500k rows x 128 dims = ~512 MB worst case. Above
+# it the exact IVF path (every list probed) runs as a cogroup join.
+ANN_BROADCAST_ROWS = 500_000
+
+# Query-batch size up to which the IVF searches probe driver-side from
+# ONE bounded collect (rows x dim x 4 B — 10k x 128d = ~5 MB) instead of
+# a distributed probe stage + persist + pruning-collect job. The
+# steady-state micro-batch serving shape.
+IVF_DRIVER_PROBE_ROWS = 10_000
 
 # Max elements in any one distance or similarity matrix (queries x data)
 # built inside a task. 8M float64 = 64 MB per temporary; haversine

@@ -1177,7 +1177,6 @@ def knn_join(
     data: DataFrame,
     k: int,
     res: int,
-    broadcast_threshold: int = 2_000_000,
     **kwargs,
 ) -> DataFrame:
     """Auto-dispatching kNN: the exact brute-force broadcast path runs
@@ -1190,8 +1189,8 @@ def knn_join(
     row count the parquet footers cannot prove is sized by a bounded
     count (sizing.brute_pairs_ok), never assumed small.
 
-    Memory budget of the broadcast path: the threshold bounds only the
-    broadcast payload (2M rows x 3 float64 = ~48 MB per executor); the
+    Memory budget of the broadcast path: sizing.KNN_BROADCAST_ROWS
+    bounds only the broadcast payload (~48 MB per executor); the
     distance matrices are independently capped by sizing.GEMM_BUDGET,
     so task memory stays bounded regardless of Arrow batch size x data
     size (the round-1 hazard was a 65k x 2M = ~1 TB matrix)."""
@@ -1205,7 +1204,7 @@ def knn_join(
     # broadcast brute path is the only sensible plan, and n <= k is
     # small by definition
     if k >= n or (
-        n <= broadcast_threshold and sizing.brute_pairs_ok(queries, n, q_rows)
+        n <= sizing.KNN_BROADCAST_ROWS and sizing.brute_pairs_ok(queries, n, q_rows)
     ):
         pdf = data.select(
             F.col(d_id).alias("id"), F.col(d_lat).alias("lat"), F.col(d_lon).alias("lon")

@@ -459,7 +459,7 @@ def stream_indexed_topk(
     (VERDICT r6 #4): the verified (meta, centroids) load is memoized
     per index path (ann._index_handle — any on-disk change misses the
     memo and reloads verified), and batches at or under
-    ann.IVF_DRIVER_PROBE_ROWS rows take ivf_search's driver-side probe
+    sizing.IVF_DRIVER_PROBE_ROWS rows take ivf_search's driver-side probe
     path, collapsing the per-batch work to ONE Spark job (scoring) plus
     the sink commit. Measured at a processingTime trigger (100-row
     batches, 20k-vector index, local[8]): ~4.3 s first batch (handle
@@ -474,18 +474,18 @@ def stream_indexed_topk(
 
     Returns the configured DataStreamWriter — call .start() (add
     .trigger(...) first to override the availableNow default)."""
-    from rios_spark.ann import IVF_DRIVER_PROBE_ROWS, ivf_search
+    from rios_spark.ann import ivf_search
 
     def _batch(bdf: DataFrame, epoch_id: int) -> None:
         # count replaces isEmpty (both are one bounded job on the
-        # micro-batch) and doubles as the driver-side-probe hint
+        # micro-batch) and doubles as the driver-side-probe hint, which
+        # ivf_search gates
         n = bdf.count()
         if n == 0:
             return
         out = ivf_search(
             bdf.sparkSession, index_path, bdf, k, nprobe=nprobe,
-            q_id=q_id, q_emb=q_emb,
-            q_rows_hint=n if n <= IVF_DRIVER_PROBE_ROWS else None,
+            q_id=q_id, q_emb=q_emb, q_rows_hint=n,
         )
         (
             out.withColumn("__epoch", F.lit(epoch_id))

@@ -429,6 +429,36 @@ def test_cosine_topk_ivf_shard_invariance(spark, embs):
     )
 
 
+def test_cosine_topk_ivf_matches_persisted_index(spark, embs, tmp_path):
+    """The ad-hoc and persisted IVF paths share one centroid trainer,
+    one vector -> list_id rule, one probe rule and one scoring tail.
+    With the same seed, sample, n_centroids, list_shards and a pruning
+    nprobe (< n_centroids, so the list mapping decides the candidates)
+    both return row-identical (qid, neighbor_id, cosine, rank)."""
+    pdf = embs.toPandas()
+    queries = spark.createDataFrame(pdf.head(20)).withColumnRenamed("vec_id", "qid")
+    cols = ["qid", "neighbor_id", "cosine", "rank"]
+
+    def rows(df):
+        return df.toPandas()[cols].sort_values(["qid", "rank"]).reset_index(drop=True)
+
+    adhoc = rows(
+        ann.cosine_topk_ivf(
+            queries, embs, 5, n_centroids=8, nprobe=4, list_shards=2, seed=42,
+            q_id="qid",
+        )
+    )
+    path = str(tmp_path / "ivf_same_as_adhoc")
+    ann.ivf_build_index(embs, path, n_centroids=8, list_shards=2, seed=42)
+    indexed = rows(ann.ivf_search(spark, path, queries, 5, nprobe=4, q_id="qid"))
+    pd.testing.assert_frame_equal(adhoc, indexed)
+    # the pruned probe set really decides: some true neighbour is missed
+    want = _brute_cosine_oracle(pdf.head(20), pdf, 5)
+    assert any(
+        list(g["neighbor_id"]) != want[int(q)] for q, g in adhoc.groupby("qid")
+    )
+
+
 def test_embedding_all_pairs_exact_tiled(spark, embs):
     """planes=0 exact mode is exact at ANY size (r2 ADVICE): with the
     block size forced tiny (many block-pair tasks), the full pair set
@@ -503,6 +533,47 @@ def test_embedding_all_pairs_f32_candidate_boundary(spark):
     assert (got["cosine"] >= thr).all()
 
 
+def test_embedding_all_pairs_f32_slack_large_dim(spark):
+    """The f32 shortlist slack grows with the embedding dim: 1e-3 up to
+    ~4k dims, 2 * (dim + 2) * 2^-23 past it. At 16384 dims, pairs whose
+    cosine straddles the threshold by 1e-9 to 2e-3 must come out exactly
+    as the f64 numpy rule says, and the f32 error on these vectors must
+    sit inside the slack."""
+    assert dedup.pairs_f32_slack(64) == dedup.pairs_f32_slack(4096) == 1e-3
+    dim, thr = 16384, 0.45
+    slack = dedup.pairs_f32_slack(dim)
+    assert slack > 3.9e-3
+    rng = np.random.default_rng(11)
+    q = rng.normal(size=dim)
+    q /= np.linalg.norm(q)
+    vecs = [q]
+    for d in (-1e-9, 1e-9, -1e-5, 1e-5, -2e-3, 2e-3, -0.1, 0.1):
+        r = rng.normal(size=dim)
+        r -= (r @ q) * q
+        r /= np.linalg.norm(r)
+        c = thr + d
+        vecs.append(c * q + np.sqrt(1.0 - c * c) * r)
+    pdf = pd.DataFrame(
+        {"vec_id": np.arange(len(vecs)), "embedding": [v.tolist() for v in vecs]}
+    )
+    got = dedup.embedding_all_pairs_exact(
+        spark.createDataFrame(pdf), "embedding", "vec_id", thr, block_rows=4
+    ).toPandas()
+    m = np.stack(vecs)
+    m = m / np.linalg.norm(m, axis=1, keepdims=True)
+    want = {
+        (i, j)
+        for i in range(len(vecs))
+        for j in range(i + 1, len(vecs))
+        if (m[i] * m[j]).sum() >= thr
+    }
+    assert len(want) == 4
+    assert set(zip(got["id1"], got["id2"])) == want
+    assert (got["cosine"] >= thr).all()
+    m32 = m.astype(np.float32)
+    assert np.abs(m32 @ m32.T - m @ m.T).max() < slack
+
+
 def test_ivf_persisted_index_search(spark, embs, tmp_path):
     """Persisted IVF index (build once / search many): nprobe == all
     lists is EXACT vs the brute oracle; a small nprobe prunes the
@@ -535,7 +606,7 @@ def test_ivf_persisted_index_search(spark, embs, tmp_path):
     )
     assert hits / (5 * len(qdf)) >= 0.8
 
-    # driver-side probe path (q_rows_hint under IVF_DRIVER_PROBE_ROWS,
+    # driver-side probe path (q_rows_hint under sizing.IVF_DRIVER_PROBE_ROWS,
     # r7): same probe arithmetic driver-side, ONE Spark job — results
     # must be row-identical to the distributed path at both nprobes,
     # and the partition filter must still reach the scan
@@ -550,6 +621,11 @@ def test_ivf_persisted_index_search(spark, embs, tmp_path):
         base_s = base.sort_values(["qid", "rank"]).reset_index(drop=True)
         assert got3["neighbor_id"].tolist() == base_s["neighbor_id"].tolist()
         assert got3["cosine"].tolist() == base_s["cosine"].tolist()
+    # the hint is an upper bound: an empty batch under it finds nothing
+    empty = queries.filter(F.col("qid") < 0)
+    assert ann.ivf_search(
+        spark, path, empty, 5, nprobe=4, q_id="qid", q_rows_hint=len(qdf)
+    ).count() == 0
 
 
 def test_ivf_meta_protects_sparse_shards(spark, embs, tmp_path):
@@ -618,6 +694,15 @@ def test_ivf_pq_compressed_search(spark, embs, tmp_path):
     a = got_all.sort_values(["qid", "rank"]).reset_index(drop=True)
     b = again.sort_values(["qid", "rank"]).reset_index(drop=True)
     assert a.equals(b)
+    # the shared probe step: probing every list needs no persisted
+    # probe frame (the list ids are known without a job); a pruning
+    # nprobe persists it for the list-id collect
+    def plan(nprobe):
+        df = ann.ivf_pq_search(spark, path, queries, 10, nprobe=nprobe, q_id="qid")
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert "InMemoryTableScan" not in plan(8)
+    assert "InMemoryTableScan" in plan(1)
 
 
 def test_ivf_index_append_exact(spark, embs, tmp_path):

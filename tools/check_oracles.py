@@ -8,13 +8,15 @@ Usage: python tools/check_oracles.py [sf_dir] [name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not whatever rios_spark is installed
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rios_spark.session import get_spark  # noqa: E402
 

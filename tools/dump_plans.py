@@ -6,15 +6,28 @@ intentionally Arrow-batched kernels), broadcast join count, and the
 pruned read schemas — the evidence for the scale claims (pushdown,
 column pruning, JVM-side expressions) the docs make.
 
-Usage: python tools/dump_plans.py [sf_dir]
+With ``--plans-dir DIR`` it instead writes the executed plan of every
+registry query (rios_spark.queries.QUERIES) to ``DIR/<query>.txt`` and
+leaves PLANS.md alone. Expression ids (``#N``) and node ids
+(``plan_id=N``) are normalised, so two trees can be compared with
+``diff -r``:
+
+    python tools/dump_plans.py SF_DIR --plans-dir /tmp/plans_a   # tree A
+    python tools/dump_plans.py SF_DIR --plans-dir /tmp/plans_b   # tree B
+    diff -r /tmp/plans_a /tmp/plans_b
+
+Usage: python tools/dump_plans.py [sf_dir] [--plans-dir DIR]
 """
 
 from __future__ import annotations
 
+import argparse
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not whatever rios_spark is installed
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rios_spark.session import get_spark  # noqa: E402
 
@@ -58,11 +71,39 @@ def count_distinct_nodes(plan: str, kind: str) -> int:
     return len([ln for ln in plan.splitlines() if re.search(rf"\b{kind}\b", ln)])
 
 
+def normalize_plan(plan: str) -> str:
+    """Drop the per-session counters from a plan string: expression ids
+    (`#N`) and node ids (`plan_id=N`) differ between runs of the same
+    plan."""
+    plan = re.sub(r"#\d+", "#N", plan)
+    return re.sub(r"plan_id=\d+", "plan_id=N", plan)
+
+
+def write_plans(spark, sf_dir: str, out_dir: str) -> None:
+    """One normalised executed-plan file per registry query."""
+    from rios_spark.queries import QUERIES
+
+    os.makedirs(out_dir, exist_ok=True)
+    for name, fn in QUERIES.items():
+        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
+            f.write(normalize_plan(plan))
+    print(f"wrote {len(QUERIES)} plans to {out_dir}")
+
+
 def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("--plans-dir", help="write one normalised plan per registry query here")
+    args = ap.parse_args()
+    sf_dir = args.sf_dir
     from rios_spark.queries import QUERIES
 
     spark = get_spark("plan_audit", master="local[8]", shuffle_partitions=8)
+    if args.plans_dir:
+        write_plans(spark, sf_dir, args.plans_dir)
+        spark.stop()
+        return
     rows = []
     details = []
     for name, note in AUDIT:
