@@ -11,6 +11,10 @@ the engine asks is answered here:
 - ``broadcast_gated``: broadcast hints on scale-growing dimensions;
 - ``brute_pairs_ok``: the query x data pair gate of the broadcast kNN
   and resample kernels;
+- ``knn_scan_rows``: the small-batch gate of ``knn_tiled``, which
+  answers a query side no larger than the data side by one data scan
+  past the broadcast queries while query x data fits
+  ``KNN_SCAN_PAIR_BUDGET``;
 - ``KNN_BROADCAST_ROWS`` / ``ANN_BROADCAST_ROWS``: the data-side row
   gates of the broadcast kNN and cosine top-k kernels;
 - ``IVF_DRIVER_PROBE_ROWS``: the query-batch gate of the driver-side
@@ -18,8 +22,10 @@ the engine asks is answered here:
 - ``GEMM_BUDGET``: the per-task distance / similarity matrix cap.
 
 One rule for a count the footers cannot prove: unknown never means
-small. The fan-out widens a narrow scan to full width, the pair gate
-takes a bounded count, and streaming frames pass through untouched.
+small. The fan-out widens a narrow scan to full width, the pair gates
+take a bounded count, and streaming frames pass through untouched
+(the broadcast kNN kernel maps over them; the small-batch scan, which
+collects its queries, never takes them).
 """
 
 from __future__ import annotations
@@ -61,6 +67,23 @@ BROADCAST_ROW_GATE = 4_000_000
 # for true scale (e.g. 15M x 1M = 1.5e13 pairs), where all-pairs is
 # catastrophic no matter how fast the per-pair kernel is.
 KNN_BRUTE_PAIR_BUDGET = 4_000_000_000
+
+# Pair budget of knn_tiled's small-batch scan (ring="auto", query side
+# no larger than the data side): up to this many query x data pairs the
+# queries are broadcast and the data streams once through the exact
+# per-task top-k kernel, instead of exploding the data side into the
+# k-ring candidate join. Measured per call on a 4-vCPU host (k=10,
+# res 7, N=150k; process-tree CPU seconds, scan vs tiled, 2-3 runs):
+#   Zipf pages   Q=100  3.5 vs 8.9;      Q=1k  3.5-4.4 vs 14.0-14.2;
+#                Q=3k   6.7 vs 37.8;     Q=10k 18-20 vs 117-132;
+#   uniform      Q=100  1.1-1.4 vs 3.8-4.9; Q=1k 2.8-3.1 vs 4.3-4.5;
+#                Q=3k   7.4-8.4 vs 6.5-9.2; Q=10k 19-20 vs 8.1-11.5.
+# The scan costs ~Q x N whatever the data; the tiled path grows with
+# the candidates per query, so hot tiles favour the scan far past 1e9
+# pairs while uniform data crosses over at ~3-4.5e8 (Q=2-3k). 1e8
+# keeps the scan on the winning side of both. KNN_BRUTE_PAIR_BUDGET
+# (4e9) is no stand-in: at 1.5e9 uniform pairs the scan costs 2x.
+KNN_SCAN_PAIR_BUDGET = 100_000_000
 
 # Data-side row gate of knn_join's broadcast brute path: 2M rows x 3
 # float64 (id, lat, lon) = ~48 MB per executor. It bounds only the
@@ -176,15 +199,35 @@ def broadcast_gated(df: DataFrame, base: DataFrame) -> DataFrame:
     return F.broadcast(df) if fast_count(base) <= BROADCAST_ROW_GATE else df
 
 
+def _query_rows(queries: DataFrame, cap: int, q_rows: int | None) -> int:
+    """`q_rows` (a footer count) when known, else the bounded count
+    queries.limit(cap + 1).count(): exact up to `cap`, and `cap + 1`
+    means "more than cap". At most one capped job."""
+    return queries.limit(cap + 1).count() if q_rows is None else q_rows
+
+
 def brute_pairs_ok(queries: DataFrame, n_data: int, q_rows: int | None) -> bool:
     """True when |queries| x n_data stays within KNN_BRUTE_PAIR_BUDGET,
     i.e. the broadcast all-pairs kernel may run. `q_rows` is
-    footer_count(queries). When that is None the answer comes from a
-    bounded count, queries.limit(budget // n_data + 1).count(): exact
-    for the decision and at most one capped job. A streaming query side
-    always stays on the broadcast kernel."""
+    footer_count(queries); when that is None a bounded count decides.
+    A streaming query side always stays on the broadcast kernel."""
     if queries.isStreaming or n_data == 0:
         return True
-    if q_rows is None:
-        q_rows = queries.limit(KNN_BRUTE_PAIR_BUDGET // n_data + 1).count()
-    return q_rows * n_data <= KNN_BRUTE_PAIR_BUDGET
+    cap = KNN_BRUTE_PAIR_BUDGET // n_data
+    return _query_rows(queries, cap, q_rows) * n_data <= KNN_BRUTE_PAIR_BUDGET
+
+
+def knn_scan_rows(queries: DataFrame, n_data: int) -> tuple[bool, int | None]:
+    """(take the scan, query rows) for knn_tiled's small-batch gate:
+    the scan is taken when the query side is no larger than the data
+    side and |queries| x n_data fits KNN_SCAN_PAIR_BUDGET. The rows are
+    the footer count, else a bounded count (cap + 1 then means "more
+    than cap"), else None when no count was needed: a streaming query
+    side, or a data side so large that no query batch fits."""
+    if queries.isStreaming:
+        return False, None
+    cap = min(n_data, KNN_SCAN_PAIR_BUDGET // max(n_data, 1))
+    if cap == 0:
+        return False, None
+    q = _query_rows(queries, cap, footer_count(queries))
+    return q <= cap, q

@@ -58,7 +58,19 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    spark = b.getOrCreate()
+    sc = spark.sparkContext
+    if sc.master.startswith("local"):
+        # local Python workers start from the JVM's environment, not the
+        # driver's sys.path: put the package root on their PYTHONPATH so
+        # kernels that import rios_spark run from any working directory.
+        # sc.environment rides along with every Python function shipped
+        # from now on, so this also covers a session that already existed.
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        paths = [p for p in sc.environment.get("PYTHONPATH", "").split(os.pathsep) if p]
+        if root not in paths:
+            sc.environment["PYTHONPATH"] = os.pathsep.join([root, *paths])
+    return spark
 
 
 # ---------------------------------------------------------------------------

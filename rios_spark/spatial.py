@@ -697,7 +697,10 @@ def _knn_residual_scan(
     (n_queries x k x n_partitions rows) merge in a final window.
     Replaces the round-1 `data.toPandas()` full collect of the
     by-construction-too-big-to-broadcast side (VERDICT #5); the chunk
-    cap enforces the round-2 VERDICT #4 bound."""
+    cap enforces the round-2 VERDICT #4 bound. `part_cols` key a query
+    row; when they are every column of `bad_q`, the collected rows
+    themselves become the output's query side (no join back), so
+    repeated rows each keep their own driver-assigned key."""
     chunk = chunk or KNN_RESIDUAL_CHUNK
     key_cols = list(dict.fromkeys([*part_cols, q_lat, q_lon]))
     parts: list[DataFrame] = []
@@ -816,6 +819,10 @@ def _residual_scan_chunk(
     key_df = spark.createDataFrame(
         qpdf[part_cols].assign(__qi=np.arange(nq, dtype=np.int64)), schema=key_schema
     )
+    if set(part_cols) >= set(bad_q.columns):
+        # the collected keys ARE the query rows: no join back to bad_q,
+        # and duplicate rows keep their own __qi
+        return key_df.join(F.broadcast(top), "__qi").drop("__qi")
     return (
         bad_q.join(F.broadcast(key_df), part_cols)
         .join(F.broadcast(top), "__qi")
@@ -840,6 +847,17 @@ def knn_tiled(
     quantize: float | None = None,
 ) -> DataFrame:
     """Exact distributed kNN for a LARGE data side (SURVEY.md J8).
+
+    Dispatch (ring="auto"; counters record branch, q_rows, n_data and
+    pairs): k >= n_data takes the broadcast brute kernel; a query side
+    no larger than the data side whose query x data pairs fit
+    sizing.KNN_SCAN_PAIR_BUDGET is answered by ONE data scan past the
+    broadcast queries (_knn_residual_scan over the whole query frame —
+    exact by construction, so no guard, persist or escalation); every
+    other input, explicit-ring calls and streaming query frames
+    included, takes the tiled phases below. An unknown query count is
+    settled by a bounded count (sizing.knn_scan_rows), never assumed
+    small.
 
     Phase 1 — candidates: data rows are exploded to their `ring`-ring
     owner cells (margin join machinery) and equi-joined to query cells:
@@ -882,7 +900,8 @@ def knn_tiled(
     callers keep the caller resolution exactly as before.
 
     Both query and data DataFrames must already carry a `cell` column
-    at `res`.
+    at `res`. Without `q_id`, a synthetic unique key stands in, so
+    repeated query rows each get their own k neighbours.
     """
     import math
 
@@ -890,9 +909,20 @@ def knn_tiled(
     from rios_spark.margin import OWNER, with_margin
 
     n_data = sizing.fast_count(data)
+    qcols = queries.columns
+    out_cols = [*qcols, "neighbor_id", "dist_km", "rank"]
+
+    def _dispatch(branch: str, q_rows: int | None = None) -> None:
+        if counters is not None:
+            counters.update(
+                branch=branch, q_rows=q_rows, n_data=n_data,
+                pairs=None if q_rows is None else q_rows * n_data,
+            )
+
     res_i = res  # internal working resolution (>= res; see below)
     if ring == "auto":
         if k >= n_data:
+            _dispatch("brute")
             # every query's answer is ALL data rows: no ring can prove
             # anything and the data side is <= k rows — small by
             # definition, so the broadcast brute path is the only
@@ -906,6 +936,18 @@ def knn_tiled(
                 queries, pdf, k, q_lat=q_lat, q_lon=q_lon,
                 d_lat="lat", d_lon="lon", d_id="id", quantize=quantize,
             ).withColumn("rank", F.col("rank").cast("int"))
+        scan, q_rows = sizing.knn_scan_rows(queries, n_data)
+        _dispatch("scan" if scan else "tiled", q_rows)
+        if scan:
+            # small batch: one pass over the data past the broadcast
+            # queries is exact by construction and cheaper than
+            # exploding the data side (2r+1)^2-fold into the candidate
+            # join. The queries are collected whole, so every row,
+            # duplicates included, gets its own driver-assigned key.
+            return _knn_residual_scan(
+                queries, data, k, qcols, q_lat, q_lon, d_lat, d_lon, d_id,
+                quantize=quantize, n_residue_hint=q_rows,
+            ).select(*qcols, "neighbor_id", "dist_km", F.col("rank").cast("int").alias("rank"))
         # target enough expected candidates that the k-th distance sits
         # well inside the guaranteed coverage radius — but cap at a
         # small constant: with_margin duplicates the DATA side
@@ -926,40 +968,9 @@ def knn_tiled(
         density = n_data / float((1 << res_i) ** 2)
         width = math.sqrt(need / max(density, 1e-12))
         ring = max(1, min(int((width - 1) / 2) + 1, KNN_AUTO_RING_MAX))
-
-    qcols = queries.columns
-    # partition the ranking window by a single unique query id when the
-    # caller has one — much cheaper than hashing/sorting every query
-    # column, and required anyway if query columns aren't unique
-    part_cols = [q_id] if q_id else qcols
-    out_cols = [*qcols, "neighbor_id", "dist_km", "rank"]
-    # internal re-tile: operate on a derived cell column at res_i so the
-    # caller's `cell` values pass through to the output untouched
-    if res_i != res:
-        cell_i = "__cell_i"
-        queries_i = queries.withColumn(cell_i, cell_col(q_lat, q_lon, res_i))
-        data = data.withColumn(cell_i, cell_col(d_lat, d_lon, res_i))
     else:
-        cell_i = "cell"
-        queries_i = queries
-    # a single-file query table scans as 1-2 partitions, which makes the
-    # candidate join AND the ranking window's partial top-k run on 1-2
-    # cores (the profiled 14 s cold phase at sf1.0 was one task sorting
-    # the whole ~13M-row candidate set); round-robin fan-out first makes
-    # candidate production and the per-partition group-limit full-width.
-    # No-op whenever the scan is already wide (production shape).
-    queries_i = sizing.fan_out(queries_i, queries)
-    d_exp = with_margin(data, res_i, ring, cell=cell_i).select(
-        F.col(OWNER).alias(cell_i),
-        F.col(d_id).alias("neighbor_id"),
-        F.col(d_lat).alias("__dlat"),
-        F.col(d_lon).alias("__dlon"),
-    )
-    cand = queries_i.join(d_exp, cell_i, "left")
-    # persist the top-k frame (queries x k rows — tiny next to the
-    # candidate join producing it): the completeness check below and the
-    # final output would otherwise EACH re-execute the join+window
-    # (actions do not share shuffle stages across jobs)
+        _dispatch("tiled")
+
     # every persisted intermediate is registered with the session cache
     # registry THE MOMENT it is persisted (ADVICE r4: registration only
     # on the return paths left frames persisted-but-untracked if an
@@ -978,6 +989,47 @@ def knn_tiled(
         register_caches(queries.sparkSession, "knn_tiled", [df])
         return df
 
+    # the ranking window and every later join are keyed on ONE unique
+    # query id. Without a caller id, a synthetic one: keying on the
+    # query columns would merge duplicate query rows into one window
+    # partition and fill their top-k with repeated neighbours. It is
+    # persisted so the escalation and residual joins see the ids pass 0
+    # ranked (a recomputed monotonically_increasing_id need not repeat
+    # over a shuffled input).
+    base_queries = queries
+    if q_id is None:
+        q_id = "__q_id"
+        queries = _track(
+            queries.withColumn(q_id, F.monotonically_increasing_id()).persist()
+        )
+    part_cols = [q_id]
+    # internal re-tile: operate on a derived cell column at res_i so the
+    # caller's `cell` values pass through to the output untouched
+    if res_i != res:
+        cell_i = "__cell_i"
+        queries_i = queries.withColumn(cell_i, cell_col(q_lat, q_lon, res_i))
+        data = data.withColumn(cell_i, cell_col(d_lat, d_lon, res_i))
+    else:
+        cell_i = "cell"
+        queries_i = queries
+    # a single-file query table scans as 1-2 partitions, which makes the
+    # candidate join AND the ranking window's partial top-k run on 1-2
+    # cores (the profiled 14 s cold phase at sf1.0 was one task sorting
+    # the whole ~13M-row candidate set); round-robin fan-out first makes
+    # candidate production and the per-partition group-limit full-width.
+    # No-op whenever the scan is already wide (production shape).
+    queries_i = sizing.fan_out(queries_i, base_queries)
+    d_exp = with_margin(data, res_i, ring, cell=cell_i).select(
+        F.col(OWNER).alias(cell_i),
+        F.col(d_id).alias("neighbor_id"),
+        F.col(d_lat).alias("__dlat"),
+        F.col(d_lon).alias("__dlon"),
+    )
+    cand = queries_i.join(d_exp, cell_i, "left")
+    # persist the top-k frame (queries x k rows — tiny next to the
+    # candidate join producing it): the completeness check below and the
+    # final output would otherwise EACH re-execute the join+window
+    # (actions do not share shuffle stages across jobs)
     ranked = _track(
         _rank_and_prove(
             cand, part_cols, k, res_i, ring, q_lat, q_lon, quantize=quantize,
@@ -1283,9 +1335,9 @@ def resample_join(
         # budget (sf1.0 = 1.5e9 pairs), so the measured plan is
         # untouched; only true-scale inputs reroute. The base res is
         # coarse — knn_tiled's density-adaptive internal re-tile picks
-        # the working resolution from the data density. A synthetic
-        # unique key partitions the ranking window, so duplicate query
-        # points each get their own k neighbours.
+        # the working resolution from the data density. knn_tiled keys
+        # its ranking window on a synthetic unique id, so duplicate
+        # query points each get their own k neighbours.
         from rios_spark.grid import cell_col
 
         base_res = 3
@@ -1295,16 +1347,13 @@ def resample_join(
             if had_cell
             else queries
         )
-        qk = qk.withColumn("cell", cell_col(q_lat, q_lon, base_res)).withColumn(
-            "__rq_id", F.monotonically_increasing_id()
-        )
+        qk = qk.withColumn("cell", cell_col(q_lat, q_lon, base_res))
         dk = queries.sparkSession.createDataFrame(
             data[[d_id, "lat", "lon"]]
         ).withColumn("cell", cell_col("lat", "lon", base_res))
         kn = knn_tiled(
             qk, dk, k, base_res, d_id=d_id, q_lat=q_lat, q_lon=q_lon,
-            q_id="__rq_id",
-        ).drop("cell", "__rq_id")
+        ).drop("cell")
         if had_cell:
             kn = kn.withColumnRenamed("__cell_user", "cell")
     else:

@@ -1255,3 +1255,5 @@ def test_sizing_streaming_frame_passes_through(spark, tmp_path):
     assert sizing.fan_out(stream) is stream
     assert sizing.ensure_parallelism(stream) is stream
     assert sizing.brute_pairs_ok(stream, 10**9, None) is True
+    # knn_tiled's small-batch scan collects its queries: never a stream
+    assert sizing.knn_scan_rows(stream, 10**5) == (False, None)

@@ -46,3 +46,20 @@ def test_query_matches_oracle(spark, sf_con, name, fn, oracle):
     want = con.execute(oracle).df()
     problems = compare(name, got, want)
     assert not problems, f"{name}: {problems}"
+
+
+DRIVER_CAP = 50  # registry entries the driver's correctness check reads
+
+
+def test_driver_cap_attests_every_oracle():
+    """The driver checks only the first DRIVER_CAP registry entries.
+    All 52 entries carry an oracle, so not every key fits; instead
+    every distinct oracle statement must be attested by an entry inside
+    the cap (media_image_features and rat_color_table included), and
+    the entries past it only reuse an attested oracle."""
+    from rios_spark.queries import ORACLES, QUERIES
+
+    head = list(QUERIES)[:DRIVER_CAP]
+    assert {"media_image_features", "rat_color_table"} <= set(head)
+    attested = {ORACLES[n] for n in head if n in ORACLES}
+    assert set(ORACLES.values()) <= attested

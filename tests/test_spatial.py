@@ -115,6 +115,34 @@ def _brute_oracle(qdf, ddf, k):
     return out
 
 
+def _assert_same_knn(a: pd.DataFrame, b: pd.DataFrame) -> None:
+    """Same kNN rows: every column equal, distances to 1e-9 relative
+    (the tiled path ranks on JVM haversine, the scan on numpy)."""
+    assert list(a.columns) == list(b.columns)
+    keys = [c for c in a.columns if c != "dist_km"]
+    a = a.sort_values(keys).reset_index(drop=True)
+    b = b.sort_values(keys).reset_index(drop=True)
+    pd.testing.assert_frame_equal(a[keys], b[keys], check_dtype=False)
+    np.testing.assert_allclose(a["dist_km"], b["dist_km"], rtol=1e-9)
+
+
+def _tiled_and_default(monkeypatch, run):
+    """The tiny inputs of the tests that exercise knn_tiled's tiled
+    machinery would go to its small-batch scan. `run(counters)` ->
+    pandas runs once pinned to the tiled branch (a zero scan pair
+    budget) and once on the default branch, which must take the scan
+    and give the same rows. Returns the tiled rows and counters."""
+    with monkeypatch.context() as m:
+        m.setattr(sizing, "KNN_SCAN_PAIR_BUDGET", 0)
+        counters: dict = {}
+        tiled = run(counters)
+    assert counters["branch"] == "tiled"
+    default: dict = {}
+    _assert_same_knn(tiled, run(default))
+    assert default["branch"] == "scan"
+    return tiled, counters
+
+
 def test_knn_bruteforce_exact(spark):
     rng = np.random.default_rng(11)
     qdf = pd.DataFrame(
@@ -168,7 +196,7 @@ def test_knn_tiled_equals_bruteforce(spark):
             assert gd == pytest.approx(wd, rel=1e-9)
 
 
-def test_knn_tiled_internal_retile_exact(spark):
+def test_knn_tiled_internal_retile_exact(spark, monkeypatch):
     """Dense data at a coarse caller res triggers the density-adaptive
     internal re-tile (ring='auto'); results must stay exact and the
     caller's cell column must pass through untouched (r7: candidate
@@ -186,13 +214,12 @@ def test_knn_tiled_internal_retile_exact(spark):
     queries = spark.createDataFrame(qdf).withColumn("cell", cell_col("lat", "lon", res))
     data = spark.createDataFrame(ddf).withColumn("cell", cell_col("lat", "lon", res))
 
-    counters = {}
-    got = (
-        spatial.knn_tiled(queries, data, 3, res, d_id="id", q_id="qid",
-                          counters=counters)
-        .toPandas()
-        .sort_values(["qid", "rank"])
+    got, counters = _tiled_and_default(
+        monkeypatch,
+        lambda c: spatial.knn_tiled(queries, data, 3, res, d_id="id", q_id="qid",
+                                    counters=c).toPandas(),
     )
+    got = got.sort_values(["qid", "rank"])
     # the re-tile fired: 9 * 3000 / 4^r >= 12 holds up to r = 5
     assert counters["res_internal"] == 5
     assert len(got) == 50 * 3
@@ -615,7 +642,7 @@ def test_knn_tiled_phase_counters(spark):
     assert counters["residual_scan"] <= counters["unproven_pass0"]
 
 
-def test_knn_tiled_polar_queries_exact(spark):
+def test_knn_tiled_polar_queries_exact(spark, monkeypatch):
     """Poles stress the escalation math: min-cos -> 0 blows up the
     lon-radius estimate (clamped to the wrap-safe max) and the guard is
     maximally conservative — results must still be EXACT."""
@@ -630,10 +657,12 @@ def test_knn_tiled_polar_queries_exact(spark):
     )
     queries = spark.createDataFrame(qdf).withColumn("cell", cell_col("lat", "lon", res))
     data = spark.createDataFrame(ddf).withColumn("cell", cell_col("lat", "lon", res))
-    got = (
-        spatial.knn_tiled(queries, data, 3, res, d_id="id", q_id="qid")
-        .toPandas().sort_values(["qid", "rank"])
+    got, _ = _tiled_and_default(
+        monkeypatch,
+        lambda c: spatial.knn_tiled(queries, data, 3, res, d_id="id", q_id="qid",
+                                    counters=c).toPandas(),
     )
+    got = got.sort_values(["qid", "rank"])
     want = _brute_oracle(qdf, ddf, 3)
     assert len(got) == 20 * 3
     for qid, grp in got.groupby("qid"):
@@ -705,7 +734,7 @@ def test_knn_tiled_k_exceeds_data(spark):
             assert gi == wi and gd == pytest.approx(wd, rel=1e-9)
 
 
-def test_knn_tiled_antimeridian_exact(spark):
+def test_knn_tiled_antimeridian_exact(spark, monkeypatch):
     """x-wrap correctness: queries hugging lon = +-180 whose true
     nearest neighbours sit ACROSS the antimeridian — the k-ring wraps
     in x and the guard's contiguous-box bound stays valid, so results
@@ -723,10 +752,12 @@ def test_knn_tiled_antimeridian_exact(spark):
     )
     queries = spark.createDataFrame(qdf).withColumn("cell", cell_col("lat", "lon", res))
     data = spark.createDataFrame(ddf).withColumn("cell", cell_col("lat", "lon", res))
-    got = (
-        spatial.knn_tiled(queries, data, 3, res, d_id="id", q_id="qid")
-        .toPandas().sort_values(["qid", "rank"])
+    got, _ = _tiled_and_default(
+        monkeypatch,
+        lambda c: spatial.knn_tiled(queries, data, 3, res, d_id="id", q_id="qid",
+                                    counters=c).toPandas(),
     )
+    got = got.sort_values(["qid", "rank"])
     want = _brute_oracle(qdf, ddf, 3)
     assert len(got) == 25 * 3
     for qid, grp in got.groupby("qid"):
@@ -771,7 +802,7 @@ def test_track_caches_preserves_cross_key_shared_plan(spark):
     assert not df_a2.storageLevel.useMemory and not df_b2.storageLevel.useMemory
 
 
-def test_knn_tiled_registers_caches_incrementally(spark):
+def test_knn_tiled_registers_caches_incrementally(spark, monkeypatch):
     """ADVICE r4: knn_tiled's persisted control frames enter the
     session cache registry AS they are persisted, so an exception
     between a persist and the return cannot strand unfreeable executor
@@ -790,16 +821,24 @@ def test_knn_tiled_registers_caches_incrementally(spark):
     )
     q = spark.createDataFrame(qpdf).withColumn("cell", cell_col("lat", "lon", res))
     d = spark.createDataFrame(dpdf).withColumn("cell", cell_col("lat", "lon", res))
-    spatial.knn_tiled(q, d, 3, res, d_id="id", q_id="qid").count()
-    reg = getattr(spark, rs_session._CACHE_REGISTRY_ATTR, {})
-    frames = reg.get("knn_tiled", [])
-    assert len(frames) >= 2
-    assert all(f.storageLevel.useMemory for f in frames)
+    frames = []
+
+    def run(counters):
+        out = spatial.knn_tiled(q, d, 3, res, d_id="id", q_id="qid", counters=counters)
+        out.count()
+        if counters.get("branch") == "tiled":
+            reg = getattr(spark, rs_session._CACHE_REGISTRY_ATTR, {})
+            frames.extend(reg.get("knn_tiled", []))
+            assert len(frames) >= 2
+            assert all(f.storageLevel.useMemory for f in frames)
+        return out.toPandas()
+
+    _tiled_and_default(monkeypatch, run)
     release_caches(spark, "knn_tiled")
     assert all(not f.storageLevel.useMemory for f in frames)
 
 
-def test_knn_tiled_sparse_goes_to_scan(spark):
+def test_knn_tiled_sparse_goes_to_scan(spark, monkeypatch):
     """r6 ring-utility bound: on SPARSE data the k-th distances are so
     large that any certifying ring's (2r+1)^2 explosion costs at least
     a full data scan — the residue must skip the escalation loop
@@ -815,11 +854,12 @@ def test_knn_tiled_sparse_goes_to_scan(spark):
     )
     queries = spark.createDataFrame(qdf).withColumn("cell", cell_col("lat", "lon", res))
     data = spark.createDataFrame(ddf).withColumn("cell", cell_col("lat", "lon", res))
-    counters = {}
-    got = (
-        spatial.knn_tiled(queries, data, 3, res, d_id="id", q_id="qid", counters=counters)
-        .toPandas().sort_values(["qid", "rank"])
+    got, counters = _tiled_and_default(
+        monkeypatch,
+        lambda c: spatial.knn_tiled(queries, data, 3, res, d_id="id", q_id="qid",
+                                    counters=c).toPandas(),
     )
+    got = got.sort_values(["qid", "rank"])
     # no escalation round ran — the whole residue was scan-routed
     assert "unproven_escalation_0" not in counters
     assert counters["residual_scan"] == counters["unproven_pass0"] > 0
@@ -829,6 +869,170 @@ def test_knn_tiled_sparse_goes_to_scan(spark):
             zip(grp["neighbor_id"], grp["dist_km"]), want[int(qid)]
         ):
             assert gi == wi and gd == pytest.approx(wd, rel=1e-9)
+
+
+def _knn_frames(spark, qdf, ddf, res):
+    queries = spark.createDataFrame(qdf).withColumn("cell", cell_col("lat", "lon", res))
+    data = spark.createDataFrame(ddf).withColumn("cell", cell_col("lat", "lon", res))
+    return queries, data
+
+
+def _assert_matches_oracle(got, qdf, ddf, k, key="qid"):
+    want = _brute_oracle(qdf, ddf, k)
+    assert sorted(got[key].unique()) == sorted(want)
+    for qid, grp in got.sort_values([key, "rank"]).groupby(key):
+        pairs = list(zip(grp["neighbor_id"], grp["dist_km"]))
+        assert len(pairs) == len(want[qid])
+        for (gi, gd), (wi, wd) in zip(pairs, want[qid]):
+            assert gi == wi, f"{key}={qid}: {pairs} vs {want[qid]}"
+            assert gd == pytest.approx(wd, rel=1e-9)
+
+
+def test_knn_tiled_duplicate_queries_without_qid(spark, monkeypatch):
+    """Repeated query rows and no q_id: every row gets its own k
+    distinct neighbours on every branch (explicit ring, the auto
+    ring's tiled path and the small-batch scan). A ranking window keyed
+    on the query columns merged the copies into one partition: 15 rows
+    instead of 21, with top-k lists such as [126, 126, 269]."""
+    res = 5
+    rng = np.random.default_rng(5)
+    ddf = pd.DataFrame({"id": np.arange(300), "lat": rng.uniform(-60, 60, 300),
+                        "lon": rng.uniform(-170, 170, 300)})
+    qdf = pd.DataFrame({"lat": rng.uniform(-60, 60, 5), "lon": rng.uniform(-170, 170, 5)})
+    qdf = pd.concat([qdf, qdf.iloc[:2]], ignore_index=True)
+    queries, data = _knn_frames(spark, qdf, ddf, res)
+    oracle = _brute_oracle(qdf.assign(qid=np.arange(len(qdf))), ddf, 3)
+    want = pd.DataFrame(
+        [(qdf["lat"][i], qdf["lon"][i], r + 1, nid, d)
+         for i in range(len(qdf)) for r, (nid, d) in enumerate(oracle[i])],
+        columns=["lat", "lon", "rank", "neighbor_id", "dist_km"],
+    )
+
+    def check(ring, branch):
+        counters: dict = {}
+        got = spatial.knn_tiled(queries, data, 3, res, ring=ring, d_id="id",
+                                counters=counters).toPandas()
+        assert len(got) == 3 * len(qdf)
+        _assert_same_knn(got[list(want.columns)], want)
+        assert counters["branch"] == branch
+
+    check(1, "tiled")
+    check("auto", "scan")
+    monkeypatch.setattr(sizing, "KNN_SCAN_PAIR_BUDGET", 0)
+    check("auto", "tiled")
+
+
+def test_knn_tiled_small_batch_scan_hot_tile_quantized(spark, monkeypatch):
+    """The small-batch scan equals the tiled path row for row on
+    hot-tile data under quantize=1e5 (ranking on the epsilon-floored
+    1e-5 km grid, ties on the data id), and both equal a numpy oracle
+    on the same grid."""
+    res, k, q = 7, 10, 1e5
+    rng = np.random.default_rng(61)
+    hot = np.column_stack([rng.uniform(40.0, 40.5, 2000), rng.uniform(10.0, 10.5, 2000)])
+    bg = np.column_stack([rng.uniform(-60, 60, 500), rng.uniform(-170, 170, 500)])
+    pts = np.concatenate([hot, bg])
+    ddf = pd.DataFrame({"id": rng.permutation(len(pts)), "lat": pts[:, 0], "lon": pts[:, 1]})
+    qpts = np.concatenate([hot[:40] + rng.normal(0, 1e-3, (40, 2)), bg[:10]])
+    qdf = pd.DataFrame({"qid": np.arange(50), "lat": qpts[:, 0], "lon": qpts[:, 1]})
+    queries, data = _knn_frames(spark, qdf, ddf, res)
+    got, _ = _tiled_and_default(
+        monkeypatch,
+        lambda c: spatial.knn_tiled(queries, data, k, res, d_id="id", q_id="qid",
+                                    quantize=q, counters=c).toPandas(),
+    )
+    d = spatial._quantize_np(spatial.haversine_km(
+        qdf["lat"].to_numpy()[:, None], qdf["lon"].to_numpy()[:, None],
+        ddf["lat"].to_numpy()[None, :], ddf["lon"].to_numpy()[None, :],
+    ), q)
+    ids = ddf["id"].to_numpy()
+    got = got.sort_values(["qid", "rank"])
+    for qid, grp in got.groupby("qid"):
+        order = np.lexsort((ids, d[qid]))[:k]
+        assert grp["neighbor_id"].tolist() == ids[order].tolist()
+        np.testing.assert_allclose(grp["dist_km"], d[qid][order], rtol=1e-12)
+
+
+def test_knn_tiled_small_batch_gate(spark, monkeypatch):
+    """Both sides of the small-batch gate: the scan answers exactly
+    when Q <= N and Q x N fits sizing.KNN_SCAN_PAIR_BUDGET; k >= N
+    keeps the broadcast brute branch, Q > N and an explicit ring keep
+    the tiled path, and an empty query frame gives no rows. The
+    counters record branch, Q, N and pairs."""
+    res = 5
+    rng = np.random.default_rng(67)
+    ddf = pd.DataFrame({"id": np.arange(80), "lat": rng.uniform(-50, 50, 80),
+                        "lon": rng.uniform(-100, 100, 80)})
+    qdf = pd.DataFrame({"qid": np.arange(30), "lat": rng.uniform(-50, 50, 30),
+                        "lon": rng.uniform(-100, 100, 30)})
+    queries, data = _knn_frames(spark, qdf, ddf, res)
+
+    def run(qd, k=3, **kw):
+        counters: dict = {}
+        got = spatial.knn_tiled(qd, data, k, res, d_id="id", q_id="qid",
+                                counters=counters, **kw).toPandas()
+        return got, counters
+
+    monkeypatch.setattr(sizing, "KNN_SCAN_PAIR_BUDGET", 30 * 80)
+    got, c = run(queries)
+    assert c == {"branch": "scan", "q_rows": 30, "n_data": 80, "pairs": 2400}
+    _assert_matches_oracle(got, qdf, ddf, 3)
+
+    monkeypatch.setattr(sizing, "KNN_SCAN_PAIR_BUDGET", 30 * 80 - 1)
+    got, c = run(queries)
+    assert c["branch"] == "tiled"
+    _assert_matches_oracle(got, qdf, ddf, 3)
+
+    monkeypatch.setattr(sizing, "KNN_SCAN_PAIR_BUDGET", 10**12)
+    got, c = run(queries, k=80)
+    assert c["branch"] == "brute"
+    _assert_matches_oracle(got, qdf, ddf, 80)
+
+    got, c = run(queries, ring=1)
+    assert c["branch"] == "tiled" and c["q_rows"] is None
+    _assert_matches_oracle(got, qdf, ddf, 3)
+
+    got, c = run(queries.limit(0))
+    assert c["branch"] == "scan" and c["q_rows"] == 0
+    assert got.empty
+    assert list(got.columns) == [*queries.columns, "neighbor_id", "dist_km", "rank"]
+
+    # Q > N: 120 queries against the 80 data rows stay tiled
+    qbig = pd.DataFrame({"qid": np.arange(120), "lat": rng.uniform(-50, 50, 120),
+                         "lon": rng.uniform(-100, 100, 120)})
+    big, _ = _knn_frames(spark, qbig, ddf, res)
+    got, c = run(big)
+    assert c["branch"] == "tiled" and c["q_rows"] > c["n_data"]
+    _assert_matches_oracle(got, qbig, ddf, 3)
+
+
+def test_knn_tiled_unknown_query_count_fails_closed(spark, monkeypatch, tmp_path):
+    """A filtered parquet query frame has no footer count. The
+    small-batch gate then decides from a bounded count: the scan when
+    the 40 surviving rows fit the budget, the tiled path as soon as
+    they do not (never assumed small), exact either way."""
+    res = 5
+    rng = np.random.default_rng(71)
+    qdf = pd.DataFrame({"qid": np.arange(60), "lat": rng.uniform(-40, 40, 60),
+                        "lon": rng.uniform(-40, 40, 60)})
+    ddf = pd.DataFrame({"id": np.arange(200), "lat": rng.uniform(-45, 45, 200),
+                        "lon": rng.uniform(-45, 45, 200)})
+    qpath = str(tmp_path / "queries.parquet")
+    spark.createDataFrame(qdf).write.parquet(qpath)
+    queries = (spark.read.parquet(qpath).filter("qid % 3 != 0")
+               .withColumn("cell", cell_col("lat", "lon", res)))
+    assert sizing.footer_count(queries) is None
+    data = spark.createDataFrame(ddf).withColumn("cell", cell_col("lat", "lon", res))
+    kept = qdf[qdf["qid"] % 3 != 0].reset_index(drop=True)
+
+    for budget, branch in ((40 * 200, "scan"), (39 * 200, "tiled")):
+        monkeypatch.setattr(sizing, "KNN_SCAN_PAIR_BUDGET", budget)
+        counters: dict = {}
+        got = spatial.knn_tiled(queries, data, 3, res, d_id="id", q_id="qid",
+                                counters=counters).toPandas()
+        assert counters["branch"] == branch
+        assert counters["q_rows"] == 40  # exact, or cap + 1 = "more than 39"
+        _assert_matches_oracle(got, kept, ddf, 3)
 
 
 def test_block_topk_gemm_path_bit_identical(monkeypatch):
