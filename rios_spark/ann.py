@@ -133,8 +133,11 @@ def cosine_topk(
     k: int,
     **kwargs,
 ) -> DataFrame:
-    """Auto-dispatching EXACT cosine top-k (the ANN analogue of
-    spatial.knn_join): when the data side fits the broadcast budget
+    """Auto-dispatching EXACT cosine top-k — the ANN analogue of
+    spatial.knn_join as the one exact entry point, but gated on the data
+    side alone (sizing.knn_branch's query x data pair rule does not
+    apply: a vector payload is dim x 8 B per row, so the broadcast bound
+    is in rows). When the data side fits the broadcast budget
     (count <= sizing.ANN_BROADCAST_ROWS) the brute GEMM path wins
     outright; above it, IVF with nprobe == n_centroids — every list is
     probed, so the result is still exact, but the candidate generation

@@ -9,10 +9,11 @@ from rios_spark.applier import (  # noqa: F401
     build_working_set,
 )
 from rios_spark.margin import trim_margin, with_margin  # noqa: F401
+# knn_join is the one neighbour search: it picks brute, scan or tiled
+# itself (spatial.knn_tiled is only its older name)
 from rios_spark.spatial import (  # noqa: F401
     knn_bruteforce,
     knn_join,
-    knn_tiled,
     pip_join,
     zonal_stats,
 )

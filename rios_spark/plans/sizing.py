@@ -9,23 +9,27 @@ the engine asks is answered here:
 - ``ensure_parallelism`` / ``fan_out``: round-robin widening of a scan
   that is narrower than the cluster before per-row-heavy map work;
 - ``broadcast_gated``: broadcast hints on scale-growing dimensions;
-- ``brute_pairs_ok``: the query x data pair gate of the broadcast kNN
-  and resample kernels;
-- ``knn_scan_rows``: the small-batch gate of ``knn_tiled``, which
-  answers a query side no larger than the data side by one data scan
-  past the broadcast queries while query x data fits
-  ``KNN_SCAN_PAIR_BUDGET``;
-- ``KNN_BROADCAST_ROWS`` / ``ANN_BROADCAST_ROWS``: the data-side row
-  gates of the broadcast kNN and cosine top-k kernels;
+- ``knn_branch``: the one kNN dispatch rule (brute / scan / tiled) of
+  ``spatial.knn_join`` and everything built on it. It replicates the
+  smaller side: a query side no larger than the data side is broadcast
+  past one data scan while query x data fits ``KNN_SCAN_PAIR_BUDGET``;
+  a data side smaller than the query side is broadcast to the brute
+  kernel while query x data fits ``KNN_BRUTE_PAIR_BUDGET``; the rest
+  takes the tiled phases;
+- ``KNN_BROADCAST_ROWS``: the data-side bound of a streaming kNN
+  query side, which only the broadcast brute kernel can serve;
+- ``ANN_BROADCAST_ROWS``: the data-side row gate of the cosine top-k
+  broadcast kernel;
 - ``IVF_DRIVER_PROBE_ROWS``: the query-batch gate of the driver-side
   IVF probe;
 - ``GEMM_BUDGET``: the per-task distance / similarity matrix cap.
 
 One rule for a count the footers cannot prove: unknown never means
-small. The fan-out widens a narrow scan to full width, the pair gates
-take a bounded count, and streaming frames pass through untouched
-(the broadcast kNN kernel maps over them; the small-batch scan, which
-collects its queries, never takes them).
+small. The fan-out widens a narrow scan to full width, the kNN gate
+takes one bounded count that settles both pair budgets, and streaming
+frames pass through untouched (the fan-out leaves them as they are;
+the kNN gate keeps them on the broadcast brute kernel, the one plan
+that maps over a stream).
 """
 
 from __future__ import annotations
@@ -58,18 +62,22 @@ KERNEL_ROWS_PER_TASK = 256
 # the strategy from observed sizes.
 BROADCAST_ROW_GATE = 4_000_000
 
-# Pair budget for the broadcast kNN / resample kernels: above this many
-# query x data distance evaluations the brute path's all-pairs compute
-# exceeds the tiled path's join+guard cost even when the data side
-# broadcasts comfortably. With the GEMM candidate kernel the brute path
-# measured ~2.5-3 s at 1.5e9 pairs (sf1.0) vs ~16 s for a cold tiled
-# pass, so the crossover sits well above bench scale; the gate exists
-# for true scale (e.g. 15M x 1M = 1.5e13 pairs), where all-pairs is
-# catastrophic no matter how fast the per-pair kernel is.
+# Pair budget of the broadcast brute kNN kernel, which answers a query
+# side LARGER than the data side (the data is the small side, so it is
+# the one replicated; CAMEL hash table, EDBT'26). Above this many query
+# x data distance evaluations the all-pairs compute exceeds the tiled
+# path's join+guard cost even when the data broadcasts comfortably.
+# With the GEMM candidate kernel the brute path measured ~2.5-3 s at
+# 1.5e9 pairs (sf1.0) vs ~16 s for a cold tiled pass, so the crossover
+# sits well above bench scale; the gate exists for true scale (e.g.
+# 15M x 1M = 1.5e13 pairs), where all-pairs is catastrophic no matter
+# how fast the per-pair kernel is. Since the query side is the larger
+# one, the data side under this budget is < sqrt(4e9) = 63,246 rows —
+# a few MB of broadcast payload, so no separate data-side row gate.
 KNN_BRUTE_PAIR_BUDGET = 4_000_000_000
 
-# Pair budget of knn_tiled's small-batch scan (ring="auto", query side
-# no larger than the data side): up to this many query x data pairs the
+# Pair budget of the small-batch scan, which answers a query side no
+# larger than the data side: up to this many query x data pairs the
 # queries are broadcast and the data streams once through the exact
 # per-task top-k kernel, instead of exploding the data side into the
 # k-ring candidate join. Measured per call on a 4-vCPU host (k=10,
@@ -85,10 +93,13 @@ KNN_BRUTE_PAIR_BUDGET = 4_000_000_000
 # (4e9) is no stand-in: at 1.5e9 uniform pairs the scan costs 2x.
 KNN_SCAN_PAIR_BUDGET = 100_000_000
 
-# Data-side row gate of knn_join's broadcast brute path: 2M rows x 3
-# float64 (id, lat, lon) = ~48 MB per executor. It bounds only the
-# broadcast payload; the pair gate above and GEMM_BUDGET bound compute
-# and task memory.
+# Data-side row bound of a STREAMING query side: 2M rows x 3 float64
+# (id, lat, lon) = ~48 MB per executor. A stream can only map through
+# the broadcast brute kernel (the scan collects its queries, the tiled
+# phases persist and run actions), so above this bound knn_branch
+# raises instead of planning a broadcast it cannot afford. Batch
+# frames never read it: KNN_BRUTE_PAIR_BUDGET already bounds their
+# broadcast data side.
 KNN_BROADCAST_ROWS = 2_000_000
 
 # Data-side row gate of cosine_topk's broadcast GEMM path: payload =
@@ -199,35 +210,45 @@ def broadcast_gated(df: DataFrame, base: DataFrame) -> DataFrame:
     return F.broadcast(df) if fast_count(base) <= BROADCAST_ROW_GATE else df
 
 
-def _query_rows(queries: DataFrame, cap: int, q_rows: int | None) -> int:
-    """`q_rows` (a footer count) when known, else the bounded count
-    queries.limit(cap + 1).count(): exact up to `cap`, and `cap + 1`
-    means "more than cap". At most one capped job."""
-    return queries.limit(cap + 1).count() if q_rows is None else q_rows
+def knn_branch(
+    queries: DataFrame, n_data: int, k: int, ring: int | str = "auto"
+) -> tuple[str, int | None]:
+    """(branch, query rows): the one kNN dispatch rule.
 
+    - a streaming query side: "brute" (the only plan that maps over a
+      stream), or ValueError past KNN_BROADCAST_ROWS data rows;
+    - an explicit ring: "tiled", uncounted;
+    - k >= n_data: "brute" (every query's answer is all data rows);
+    - Q <= N and Q x N <= KNN_SCAN_PAIR_BUDGET: "scan";
+    - Q > N and Q x N <= KNN_BRUTE_PAIR_BUDGET: "brute";
+    - anything else: "tiled".
 
-def brute_pairs_ok(queries: DataFrame, n_data: int, q_rows: int | None) -> bool:
-    """True when |queries| x n_data stays within KNN_BRUTE_PAIR_BUDGET,
-    i.e. the broadcast all-pairs kernel may run. `q_rows` is
-    footer_count(queries); when that is None a bounded count decides.
-    A streaming query side always stays on the broadcast kernel."""
-    if queries.isStreaming or n_data == 0:
-        return True
-    cap = KNN_BRUTE_PAIR_BUDGET // n_data
-    return _query_rows(queries, cap, q_rows) * n_data <= KNN_BRUTE_PAIR_BUDGET
-
-
-def knn_scan_rows(queries: DataFrame, n_data: int) -> tuple[bool, int | None]:
-    """(take the scan, query rows) for knn_tiled's small-batch gate:
-    the scan is taken when the query side is no larger than the data
-    side and |queries| x n_data fits KNN_SCAN_PAIR_BUDGET. The rows are
-    the footer count, else a bounded count (cap + 1 then means "more
-    than cap"), else None when no count was needed: a streaming query
-    side, or a data side so large that no query batch fits."""
+    Q is the footer count of `queries`, else ONE bounded count
+    queries.limit(cap + 1).count() with cap the largest Q any non-tiled
+    branch accepts, so it settles both budgets (cap + 1 then means
+    "more than cap"). The rows are None when no count was needed."""
     if queries.isStreaming:
-        return False, None
-    cap = min(n_data, KNN_SCAN_PAIR_BUDGET // max(n_data, 1))
-    if cap == 0:
-        return False, None
-    q = _query_rows(queries, cap, footer_count(queries))
-    return q <= cap, q
+        if n_data > KNN_BROADCAST_ROWS:
+            raise ValueError(
+                f"a streaming kNN query side needs the broadcast data side "
+                f"(<= sizing.KNN_BROADCAST_ROWS = {KNN_BROADCAST_ROWS} rows); "
+                f"got {n_data} data rows"
+            )
+        return "brute", None
+    if ring != "auto":
+        return "tiled", None
+    q_rows = footer_count(queries)
+    if k >= n_data:
+        return "brute", q_rows
+    brute_cap = KNN_BRUTE_PAIR_BUDGET // n_data
+    cap = brute_cap if brute_cap > n_data else min(n_data, KNN_SCAN_PAIR_BUDGET // n_data)
+    if q_rows is None:
+        if cap == 0:
+            return "tiled", None
+        q_rows = queries.limit(cap + 1).count()
+    pairs = q_rows * n_data
+    if q_rows <= n_data and pairs <= KNN_SCAN_PAIR_BUDGET:
+        return "scan", q_rows
+    if q_rows > n_data and pairs <= KNN_BRUTE_PAIR_BUDGET:
+        return "brute", q_rows
+    return "tiled", q_rows

@@ -515,7 +515,7 @@ def _block_topk(
 
 def knn_bruteforce(
     queries: DataFrame,
-    data: pd.DataFrame,
+    data: DataFrame,
     k: int,
     q_lat: str = "lat",
     q_lon: str = "lon",
@@ -525,18 +525,23 @@ def knn_bruteforce(
     metric: str = "haversine",
     quantize: float | None = None,
 ) -> DataFrame:
-    """Exact kNN with the data side broadcast (the small-dim case —
-    analogous to RIOS broadcasting one rasterization per process).
-    Ties broken on (distance, data id) — deterministic. The per-task
-    distance matrix is chunked to sizing.GEMM_BUDGET elements, so memory
-    stays bounded regardless of Arrow batch size x data size.
+    """Exact kNN with the data side collected once and broadcast (the
+    small-data kernel — analogous to RIOS broadcasting one
+    rasterization per process); knn_join takes it when the data side is
+    the smaller one. Ties broken on (distance, data id) —
+    deterministic. The per-task distance matrix is chunked to
+    sizing.GEMM_BUDGET elements, so memory stays bounded regardless of
+    Arrow batch size x data size. It maps over `queries` row by row, so
+    repeated query rows each get their own k neighbours and a
+    streaming query side works too.
 
-    Output: all query columns + neighbor_id, dist_km, rank.
+    Output: all query columns + neighbor_id, dist_km, rank (int).
     """
     spark = queries.sparkSession
-    dlat = data[d_lat].to_numpy(np.float64)
-    dlon = data[d_lon].to_numpy(np.float64)
-    dids = data[d_id].to_numpy(np.int64)
+    pdf = data.select(d_id, d_lat, d_lon).toPandas()
+    dlat = pdf[d_lat].to_numpy(np.float64)
+    dlon = pdf[d_lon].to_numpy(np.float64)
+    dids = pdf[d_id].to_numpy(np.int64)
     order = np.argsort(dids, kind="stable")
     bc = spark.sparkContext.broadcast((dlat[order], dlon[order], dids[order]))
 
@@ -675,6 +680,17 @@ def _rank_and_prove(
 KNN_RESIDUAL_CHUNK = 1_000_000
 
 
+def _no_neighbours(queries: DataFrame) -> DataFrame:
+    """The kNN output schema of `queries`, with no rows."""
+    return queries.limit(0).withColumns(
+        {
+            "neighbor_id": F.lit(None).cast("long"),
+            "dist_km": F.lit(None).cast("double"),
+            "rank": F.lit(None).cast("int"),
+        }
+    )
+
+
 def _knn_residual_scan(
     bad_q: DataFrame,
     data: DataFrame,
@@ -716,13 +732,7 @@ def _knn_residual_scan(
     if n_residue_hint is not None and n_residue_hint <= chunk:
         rows = bad_q.select(*key_cols).collect()
         if not rows:
-            return bad_q.limit(0).withColumns(
-                {
-                    "neighbor_id": F.lit(None).cast("long"),
-                    "dist_km": F.lit(None).cast("double"),
-                    "rank": F.lit(None).cast("int"),
-                }
-            )
+            return _no_neighbours(bad_q)
         return _residual_scan_chunk(
             bad_q, data, k, part_cols, key_cols, rows,
             q_lat, q_lon, d_lat, d_lon, d_id, quantize=quantize,
@@ -748,13 +758,7 @@ def _knn_residual_scan(
             )
         )
     if not parts:
-        return bad_q.limit(0).withColumns(
-            {
-                "neighbor_id": F.lit(None).cast("long"),
-                "dist_km": F.lit(None).cast("double"),
-                "rank": F.lit(None).cast("int"),
-            }
-        )
+        return _no_neighbours(bad_q)
     return _union_all(parts)
 
 
@@ -830,7 +834,7 @@ def _residual_scan_chunk(
     )
 
 
-def knn_tiled(
+def knn_join(
     queries: DataFrame,
     data: DataFrame,
     k: int,
@@ -846,18 +850,96 @@ def knn_tiled(
     counters: dict | None = None,
     quantize: float | None = None,
 ) -> DataFrame:
-    """Exact distributed kNN for a LARGE data side (SURVEY.md J8).
+    """Exact kNN join (SURVEY.md J7/J8): the k nearest data rows of
+    every query row, ranked on (distance, data id). The one neighbour
+    search of the engine; resample_join is this plus a weighting tail.
 
-    Dispatch (ring="auto"; counters record branch, q_rows, n_data and
-    pairs): k >= n_data takes the broadcast brute kernel; a query side
-    no larger than the data side whose query x data pairs fit
-    sizing.KNN_SCAN_PAIR_BUDGET is answered by ONE data scan past the
-    broadcast queries (_knn_residual_scan over the whole query frame —
-    exact by construction, so no guard, persist or escalation); every
-    other input, explicit-ring calls and streaming query frames
-    included, takes the tiled phases below. An unknown query count is
-    settled by a bounded count (sizing.knn_scan_rows), never assumed
-    small.
+    Both sides need only their lat/lon columns (and `d_id` on the data
+    side); the tiled phases derive their own working cells. Output: all
+    query columns + neighbor_id, dist_km, rank (int). Every query row,
+    a repeated one included, gets its own k neighbours (fewer when the
+    data side has fewer than k rows).
+
+    Dispatch is sizing.knn_branch, the one kNN plan rule, which
+    replicates the smaller side (CAMEL hash table, EDBT'26):
+    - "brute": the data side is collected and broadcast to the Arrow
+      kernel (knn_bruteforce) — when k >= N (every answer is all the
+      data, so no ring proves anything), when Q > N and Q x N fits
+      sizing.KNN_BRUTE_PAIR_BUDGET, and for a streaming query side;
+    - "scan": Q <= N and Q x N fits sizing.KNN_SCAN_PAIR_BUDGET — the
+      queries are broadcast and the data streams once through the
+      exact per-task top-k (_knn_residual_scan over the whole query
+      frame; exact by construction, so no guard, persist or
+      escalation);
+    - "tiled": every other input and every explicit `ring` — the
+      distributed k-ring candidate join, completeness guard,
+      escalation and residual scan (_knn_tiled).
+    An unknown query count is settled by one bounded count, never
+    assumed small. `counters` records branch, q_rows, n_data and pairs,
+    plus the tiled phases' counts.
+
+    `res` is the tiled phases' base resolution (ring="auto" may re-tile
+    finer, never coarser); `q_id` keys their ranking window (a
+    synthetic unique key without it); `max_escalations` bounds their
+    escalation rounds; `quantize` ranks and emits distances on the
+    epsilon-floored 1/quantize grid on every branch.
+    """
+    n_data = sizing.fast_count(data)
+    branch, q_rows = sizing.knn_branch(queries, n_data, k, ring)
+    if counters is not None:
+        counters.update(
+            branch=branch, q_rows=q_rows, n_data=n_data,
+            pairs=None if q_rows is None else q_rows * n_data,
+        )
+    if branch == "brute":
+        # a small-SF query table often scans as ONE partition — spread
+        # the Arrow kernel across the cluster (no-op at scale); the
+        # gate's row count sizes the fan-out so tiny frames don't pay a
+        # full-width shuffle
+        return knn_bruteforce(
+            sizing.ensure_parallelism(queries, rows_hint=q_rows), data, k,
+            q_lat=q_lat, q_lon=q_lon, d_lat=d_lat, d_lon=d_lon, d_id=d_id,
+            quantize=quantize,
+        )
+    if branch == "scan":
+        # the queries are collected whole, so every row, duplicates
+        # included, gets its own driver-assigned key
+        qcols = queries.columns
+        return _knn_residual_scan(
+            queries, data, k, qcols, q_lat, q_lon, d_lat, d_lon, d_id,
+            quantize=quantize, n_residue_hint=q_rows,
+        ).select(*qcols, "neighbor_id", "dist_km", "rank")
+    return _knn_tiled(
+        queries, data, k, res, ring, n_data, q_lat=q_lat, q_lon=q_lon,
+        d_lat=d_lat, d_lon=d_lon, d_id=d_id, q_id=q_id,
+        max_escalations=max_escalations, counters=counters, quantize=quantize,
+    )
+
+
+# The name the distributed kNN was first published under; the same
+# operator, kept for callers that still use it.
+knn_tiled = knn_join
+
+
+def _knn_tiled(
+    queries: DataFrame,
+    data: DataFrame,
+    k: int,
+    res: int,
+    ring: int | str,
+    n_data: int,
+    q_lat: str,
+    q_lon: str,
+    d_lat: str,
+    d_lon: str,
+    d_id: str,
+    q_id: str | None,
+    max_escalations: int,
+    counters: dict | None,
+    quantize: float | None,
+) -> DataFrame:
+    """The tiled phases of knn_join, exact for a LARGE data side
+    (SURVEY.md J8).
 
     Phase 1 — candidates: data rows are exploded to their `ring`-ring
     owner cells (margin join machinery) and equi-joined to query cells:
@@ -890,64 +972,28 @@ def knn_tiled(
     against sparse data (e.g. 1 point per cell, k=3) proves nothing
     and its join+window cost is pure waste before escalation. The
     guard keeps any ring choice exact — this is performance only.
-    In the same mode the operator also re-tiles INTERNALLY to a finer
-    resolution when the data is dense at the caller's res (see
-    KNN_RETILE_RES_MAX): candidate volume is ~(2r+1)^2 * density per
-    query, so without the re-tile it grows linearly with density (at
-    ~100 points/cell a ring-1 pass is already ~900 candidates/query).
-    The internal cells live in a derived column; the caller's `cell`
-    values pass through to the output untouched, and explicit-ring
-    callers keep the caller resolution exactly as before.
+    In the same mode the phases also re-tile to a finer resolution
+    when the data is dense at `res` (see KNN_RETILE_RES_MAX): candidate
+    volume is ~(2r+1)^2 * density per query, so without the re-tile it
+    grows linearly with density (at ~100 points/cell a ring-1 pass is
+    already ~900 candidates/query). An explicit ring keeps `res`.
 
-    Both query and data DataFrames must already carry a `cell` column
-    at `res`. Without `q_id`, a synthetic unique key stands in, so
-    repeated query rows each get their own k neighbours.
+    The working cells are derived from lat/lon at that resolution in a
+    private column, so any `cell` column the caller carries passes
+    through to the output untouched. Without `q_id`, a synthetic
+    unique key stands in, so repeated query rows each get their own k
+    neighbours. Streaming frames never reach here (sizing.knn_branch):
+    the phases persist frames and run actions.
     """
     import math
 
     from rios_spark.grid import cell_col, kring_cells_var_col
     from rios_spark.margin import OWNER, with_margin
 
-    n_data = sizing.fast_count(data)
     qcols = queries.columns
     out_cols = [*qcols, "neighbor_id", "dist_km", "rank"]
-
-    def _dispatch(branch: str, q_rows: int | None = None) -> None:
-        if counters is not None:
-            counters.update(
-                branch=branch, q_rows=q_rows, n_data=n_data,
-                pairs=None if q_rows is None else q_rows * n_data,
-            )
-
     res_i = res  # internal working resolution (>= res; see below)
     if ring == "auto":
-        if k >= n_data:
-            _dispatch("brute")
-            # every query's answer is ALL data rows: no ring can prove
-            # anything and the data side is <= k rows — small by
-            # definition, so the broadcast brute path is the only
-            # sensible plan (ADVICE r2)
-            pdf = data.select(
-                F.col(d_id).alias("id"),
-                F.col(d_lat).alias("lat"),
-                F.col(d_lon).alias("lon"),
-            ).toPandas()
-            return knn_bruteforce(
-                queries, pdf, k, q_lat=q_lat, q_lon=q_lon,
-                d_lat="lat", d_lon="lon", d_id="id", quantize=quantize,
-            ).withColumn("rank", F.col("rank").cast("int"))
-        scan, q_rows = sizing.knn_scan_rows(queries, n_data)
-        _dispatch("scan" if scan else "tiled", q_rows)
-        if scan:
-            # small batch: one pass over the data past the broadcast
-            # queries is exact by construction and cheaper than
-            # exploding the data side (2r+1)^2-fold into the candidate
-            # join. The queries are collected whole, so every row,
-            # duplicates included, gets its own driver-assigned key.
-            return _knn_residual_scan(
-                queries, data, k, qcols, q_lat, q_lon, d_lat, d_lon, d_id,
-                quantize=quantize, n_residue_hint=q_rows,
-            ).select(*qcols, "neighbor_id", "dist_km", F.col("rank").cast("int").alias("rank"))
         # target enough expected candidates that the k-th distance sits
         # well inside the guaranteed coverage radius — but cap at a
         # small constant: with_margin duplicates the DATA side
@@ -968,8 +1014,6 @@ def knn_tiled(
         density = n_data / float((1 << res_i) ** 2)
         width = math.sqrt(need / max(density, 1e-12))
         ring = max(1, min(int((width - 1) / 2) + 1, KNN_AUTO_RING_MAX))
-    else:
-        _dispatch("tiled")
 
     # every persisted intermediate is registered with the session cache
     # registry THE MOMENT it is persisted (ADVICE r4: registration only
@@ -1003,15 +1047,11 @@ def knn_tiled(
             queries.withColumn(q_id, F.monotonically_increasing_id()).persist()
         )
     part_cols = [q_id]
-    # internal re-tile: operate on a derived cell column at res_i so the
-    # caller's `cell` values pass through to the output untouched
-    if res_i != res:
-        cell_i = "__cell_i"
-        queries_i = queries.withColumn(cell_i, cell_col(q_lat, q_lon, res_i))
-        data = data.withColumn(cell_i, cell_col(d_lat, d_lon, res_i))
-    else:
-        cell_i = "cell"
-        queries_i = queries
+    # the working cells at res_i, in a private column so a caller's
+    # `cell` values pass through to the output untouched
+    cell_i = "__cell_i"
+    queries_i = queries.withColumn(cell_i, cell_col(q_lat, q_lon, res_i))
+    data = data.withColumn(cell_i, cell_col(d_lat, d_lon, res_i))
     # a single-file query table scans as 1-2 partitions, which makes the
     # candidate join AND the ranking window's partial top-k run on 1-2
     # cores (the profiled 14 s cold phase at sf1.0 was one task sorting
@@ -1212,7 +1252,7 @@ def knn_tiled(
     fixed = _knn_residual_scan(
         bad_q, data, k, part_cols, q_lat, q_lon, d_lat, d_lon, d_id,
         quantize=quantize, n_residue_hint=n_residual,
-    ).select(*qcols, "neighbor_id", "dist_km", F.col("rank").cast("int").alias("rank"))
+    ).select(*out_cols)
     outs.append(fixed)
     return _finish(_union_all(outs))
 
@@ -1224,76 +1264,21 @@ def _union_all(dfs: list[DataFrame]) -> DataFrame:
     return out
 
 
-def knn_join(
-    queries: DataFrame,
-    data: DataFrame,
-    k: int,
-    res: int,
-    **kwargs,
-) -> DataFrame:
-    """Auto-dispatching kNN: the exact brute-force broadcast path runs
-    when the data side fits the broadcast budget AND the total pair
-    count stays under sizing.KNN_BRUTE_PAIR_BUDGET (guide §1.2: the
-    all-pairs compute is O(Q x N) while the tiled path is ~O(Q + N) —
-    at bench sf the brute path wins ~3x, but 10x the rows means 100x
-    the pairs and the tiled join+guard overhead amortizes); otherwise
-    the distributed tiled path runs. Both are exact. A query side whose
-    row count the parquet footers cannot prove is sized by a bounded
-    count (sizing.brute_pairs_ok), never assumed small.
-
-    Memory budget of the broadcast path: sizing.KNN_BROADCAST_ROWS
-    bounds only the broadcast payload (~48 MB per executor); the
-    distance matrices are independently capped by sizing.GEMM_BUDGET,
-    so task memory stays bounded regardless of Arrow batch size x data
-    size (the round-1 hazard was a 65k x 2M = ~1 TB matrix)."""
-    d_id = kwargs.get("d_id", "id")
-    d_lat = kwargs.get("d_lat", "lat")
-    d_lon = kwargs.get("d_lon", "lon")
-    n = sizing.fast_count(data)
-    q_rows = sizing.footer_count(queries)
-    # k >= n means every query's answer is ALL data rows: the tiled
-    # path's guard can never certify anything (ADVICE r2) — the
-    # broadcast brute path is the only sensible plan, and n <= k is
-    # small by definition
-    if k >= n or (
-        n <= sizing.KNN_BROADCAST_ROWS and sizing.brute_pairs_ok(queries, n, q_rows)
-    ):
-        pdf = data.select(
-            F.col(d_id).alias("id"), F.col(d_lat).alias("lat"), F.col(d_lon).alias("lon")
-        ).toPandas()
-        # a small-SF query table often scans as ONE partition — spread
-        # the Arrow kernel across the cluster (no-op at scale); a free
-        # footer count on a count-preserving query plan sizes the
-        # fan-out so tiny frames don't pay a full-width shuffle
-        return knn_bruteforce(
-            sizing.ensure_parallelism(queries, rows_hint=q_rows),
-            pdf, k,
-            q_lat=kwargs.get("q_lat", "lat"), q_lon=kwargs.get("q_lon", "lon"),
-            d_lat="lat", d_lon="lon", d_id="id",
-            quantize=kwargs.get("quantize"),
-        )
-    # the tiled path needs a `cell` column on both sides; derive any
-    # missing one from the coordinates at the dispatch resolution
-    from rios_spark.grid import cell_col
-
-    if "cell" not in queries.columns:
-        queries = queries.withColumn(
-            "cell", cell_col(kwargs.get("q_lat", "lat"), kwargs.get("q_lon", "lon"), res)
-        )
-    if "cell" not in data.columns:
-        data = data.withColumn("cell", cell_col(d_lat, d_lon, res))
-    return knn_tiled(queries, data, k, res, **kwargs)
-
-
 # resample neighbourhood sizes, mirroring the GDAL kernel supports the
 # reference exposes (rios/applier.py:655-661): near 1x1, bilinear 2x2,
 # cubic/cubicspline 4x4, lanczos 6x6
 RESAMPLE_K = {"near": 1, "bilinear": 4, "cubic": 16, "cubicspline": 16, "lanczos": 36}
 
+# The `res` resample_join hands to knn_join. Scattered points carry no
+# grid of their own, so this is only the floor of the tiled phases'
+# density-adaptive re-tile, which picks the working resolution from
+# the data density; coarse, so sparse data never starts too fine.
+RESAMPLE_RES = 3
+
 
 def resample_join(
     queries: DataFrame,
-    data: pd.DataFrame,
+    data: DataFrame,
     value_col: str,
     method: str = "bilinear",
     q_lat: str = "lat",
@@ -1315,60 +1300,25 @@ def resample_join(
       cubicspline  k=16 biweight kernel (1-(d/D)^2)^2 (smoother falloff)
       lanczos      k=36 3-lobe windowed sinc on t = 3*d/D
 
-    An exact-distance-0 match always returns that point's value
-    (all kernels peak at 0). Output: all query columns + `resampled`.
-    One broadcast of the data side, one window, one groupBy per call.
-    Past sizing.KNN_BRUTE_PAIR_BUDGET total query x data pairs the
-    neighbour search dispatches to the tiled+guard path instead of the
-    broadcast kernel (r7; exact either way — see knn_join's gate
-    rationale).
+    `data` is a DataFrame with `d_id`, lat, lon and `value_col`. The
+    neighbour search is knn_join at RESAMPLE_RES, so its one dispatch
+    rule picks brute, scan or tiled, all exact; the value column joins
+    back through sizing.broadcast_gated, and one weighted groupBy per
+    call finishes. An exact-distance-0 match always returns that
+    point's value (all kernels peak at 0).
+
+    Output: all query columns + `resampled`, ONE row per DISTINCT query
+    row: copies of a query row have the same neighbours, so they
+    resample to the same value and the groupBy folds them into one row
+    (70 rows with 10 repeats in, 60 out).
     """
     if method not in RESAMPLE_K:
         raise ValueError(f"unknown resample method {method!r}")
     k = RESAMPLE_K[method]
-    q_rows = sizing.footer_count(queries)
-    if not sizing.brute_pairs_ok(queries, len(data), q_rows):
-        # blowup-scale dispatch (r7): the broadcast kernel evaluates
-        # Q x N pairs no matter how fast the per-pair GEMM is (measured
-        # 79 s at 1.5e11 pairs), while the tiled+guard path is ~O(Q+N)
-        # and exact. Both bench/correctness scales stay under the
-        # budget (sf1.0 = 1.5e9 pairs), so the measured plan is
-        # untouched; only true-scale inputs reroute. The base res is
-        # coarse — knn_tiled's density-adaptive internal re-tile picks
-        # the working resolution from the data density. knn_tiled keys
-        # its ranking window on a synthetic unique id, so duplicate
-        # query points each get their own k neighbours.
-        from rios_spark.grid import cell_col
-
-        base_res = 3
-        had_cell = "cell" in queries.columns
-        qk = (
-            queries.withColumnRenamed("cell", "__cell_user")
-            if had_cell
-            else queries
-        )
-        qk = qk.withColumn("cell", cell_col(q_lat, q_lon, base_res))
-        dk = queries.sparkSession.createDataFrame(
-            data[[d_id, "lat", "lon"]]
-        ).withColumn("cell", cell_col("lat", "lon", base_res))
-        kn = knn_tiled(
-            qk, dk, k, base_res, d_id=d_id, q_lat=q_lat, q_lon=q_lon,
-        ).drop("cell")
-        if had_cell:
-            kn = kn.withColumnRenamed("__cell_user", "cell")
-    else:
-        # a single-file query table scans as ONE partition and would
-        # run the Arrow kernel on one core (the r3 knn_join lesson —
-        # this call site was missed); no-op at scale
-        kn = knn_bruteforce(
-            sizing.ensure_parallelism(queries, rows_hint=q_rows),
-            data, k, q_lat=q_lat, q_lon=q_lon, d_id=d_id,
-        )
-    vals = queries.sparkSession.createDataFrame(
-        data[[d_id, value_col]].rename(columns={d_id: "neighbor_id", value_col: "__v"})
-    )
-    j = kn.join(F.broadcast(vals), "neighbor_id")
-    qcols = [c for c in queries.columns]
+    kn = knn_join(queries, data, k, RESAMPLE_RES, q_lat=q_lat, q_lon=q_lon, d_id=d_id)
+    vals = data.select(F.col(d_id).alias("neighbor_id"), F.col(value_col).alias("__v"))
+    j = kn.join(sizing.broadcast_gated(vals, data), "neighbor_id")
+    qcols = queries.columns
     d = F.col("dist_km")
     if method == "near":
         w = F.lit(1.0)

@@ -1245,8 +1245,10 @@ def test_fan_out_widens_filtered_scan(spark, tmp_path):
 
 def test_sizing_streaming_frame_passes_through(spark, tmp_path):
     """Streaming frames cannot be counted or repartitioned: the fan-out
-    returns them untouched and the pair gate keeps the broadcast
-    kernel (no bounded count is attempted)."""
+    returns them untouched, and the kNN gate keeps them on the
+    broadcast brute kernel without a bounded count (the scan collects
+    its queries, the tiled phases persist and run actions), or refuses
+    a data side too large to broadcast."""
     from rios_spark.plans import sizing
 
     path = str(tmp_path / "src.parquet")
@@ -1254,6 +1256,7 @@ def test_sizing_streaming_frame_passes_through(spark, tmp_path):
     stream = spark.readStream.schema("id long").parquet(path)
     assert sizing.fan_out(stream) is stream
     assert sizing.ensure_parallelism(stream) is stream
-    assert sizing.brute_pairs_ok(stream, 10**9, None) is True
-    # knn_tiled's small-batch scan collects its queries: never a stream
-    assert sizing.knn_scan_rows(stream, 10**5) == (False, None)
+    assert sizing.knn_branch(stream, 10**5, 3) == ("brute", None)
+    assert sizing.knn_branch(stream, 10**5, 3, ring=1) == ("brute", None)
+    with pytest.raises(ValueError, match="KNN_BROADCAST_ROWS"):
+        sizing.knn_branch(stream, sizing.KNN_BROADCAST_ROWS + 1, 3)

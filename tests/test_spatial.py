@@ -152,7 +152,9 @@ def test_knn_bruteforce_exact(spark):
         {"id": np.arange(300), "lat": rng.uniform(-45, 45, 300), "lon": rng.uniform(-95, 95, 300)}
     )
     got = (
-        spatial.knn_bruteforce(spark.createDataFrame(qdf), ddf, 3, d_id="id")
+        spatial.knn_bruteforce(
+            spark.createDataFrame(qdf), spark.createDataFrame(ddf), 3, d_id="id"
+        )
         .toPandas()
         .sort_values(["qid", "rank"])
     )
@@ -259,9 +261,10 @@ def test_nn_resample_equals_array_shift(spark):
             "lon": cols.ravel() - 0.4,
         }
     )
+    data = spark.createDataFrame(ddf)
     got = (
         spatial.knn_bruteforce(
-            spark.createDataFrame(qdf), ddf, 1, metric="euclidean", d_id="id"
+            spark.createDataFrame(qdf), data, 1, metric="euclidean", d_id="id"
         )
         .toPandas()
         .sort_values("qid")
@@ -272,7 +275,7 @@ def test_nn_resample_equals_array_shift(spark):
     qdf2 = qdf.assign(lat=qdf["lat"] + 1.0)  # total +1.3 → rounds to row+1
     got2 = (
         spatial.knn_bruteforce(
-            spark.createDataFrame(qdf2), ddf, 1, metric="euclidean", d_id="id"
+            spark.createDataFrame(qdf2), data, 1, metric="euclidean", d_id="id"
         )
         .toPandas()
         .sort_values("qid")
@@ -296,7 +299,8 @@ def test_resample_bilinear(spark):
     qdf.loc[0, ["lat", "lon"]] = ddf.loc[7, ["lat", "lon"]].to_numpy()
     out = (
         spatial.resample_join(
-            spark.createDataFrame(qdf), ddf, "v", method="bilinear", d_id="id"
+            spark.createDataFrame(qdf), spark.createDataFrame(ddf), "v",
+            method="bilinear", d_id="id",
         )
         .toPandas().set_index("qid").sort_index()
     )
@@ -313,13 +317,12 @@ def test_resample_bilinear(spark):
 
 
 def test_resample_pair_budget_dispatch_exact(spark, monkeypatch, tmp_path):
-    """r7: past KNN_BRUTE_PAIR_BUDGET pairs resample_join's neighbour
-    search reroutes to the tiled+guard path (the broadcast kernel is
-    O(Q x N)); the resampled values must match the numpy IDW oracle on
-    both sides of the budget. Ten query rows are exact duplicates: the
-    tiled path must still give each copy its own 4 distinct
-    neighbours (a ranking window keyed on the query columns would fill
-    their top-k with repeated neighbours)."""
+    """resample_join is knn_join plus a weighting tail: on each of
+    knn_join's branches (scan, brute, tiled) the resampled values match
+    the numpy IDW oracle. Ten query rows are exact duplicates: every
+    branch answers each copy with its own 4 distinct neighbours, so the
+    copies resample to the same value and fold into one row per
+    distinct query row (70 rows in, 60 out)."""
     rng = np.random.default_rng(41)
     ddf = pd.DataFrame(
         {"id": np.arange(400), "lat": rng.uniform(-30, 30, 400),
@@ -333,35 +336,51 @@ def test_resample_pair_budget_dispatch_exact(spark, monkeypatch, tmp_path):
     spark.createDataFrame(pd.concat([qdf, qdf.iloc[:10]])).write.parquet(qpath)
     queries = spark.read.parquet(qpath)
 
-    d = spatial.haversine_km(
-        qdf["lat"].to_numpy()[:, None], qdf["lon"].to_numpy()[:, None],
-        ddf["lat"].to_numpy()[None, :], ddf["lon"].to_numpy()[None, :],
-    )
-    want = {}
-    for i, qid in enumerate(qdf["qid"]):
-        order = np.lexsort((ddf["id"].to_numpy(), d[i]))[:4]
-        w = 1.0 / d[i][order]
-        want[qid] = (w * ddf["v"].to_numpy()[order]).sum() / w.sum()
+    branches = []
+    knn_join = spatial.knn_join
 
-    def check():
+    def spy(*args, **kwargs):
+        counters: dict = {}
+        out = knn_join(*args, counters=counters, **kwargs)
+        branches.append(counters["branch"])
+        return out
+
+    monkeypatch.setattr(spatial, "knn_join", spy)
+
+    def check(ddf, branch):
         got = (
-            spatial.resample_join(queries, ddf, "v", method="bilinear", d_id="id")
+            spatial.resample_join(queries, spark.createDataFrame(ddf), "v",
+                                  method="bilinear", d_id="id")
             .toPandas().set_index("qid").sort_index()
         )
+        assert branches[-1] == branch
         assert len(got) == 60
-        for qid in qdf["qid"]:
-            assert got.loc[qid, "resampled"] == pytest.approx(want[qid], rel=1e-9)
+        d = spatial.haversine_km(
+            qdf["lat"].to_numpy()[:, None], qdf["lon"].to_numpy()[:, None],
+            ddf["lat"].to_numpy()[None, :], ddf["lon"].to_numpy()[None, :],
+        )
+        for i, qid in enumerate(qdf["qid"]):
+            order = np.lexsort((ddf["id"].to_numpy(), d[i]))[:4]
+            w = 1.0 / d[i][order]
+            want = (w * ddf["v"].to_numpy()[order]).sum() / w.sum()
+            assert got.loc[qid, "resampled"] == pytest.approx(want, rel=1e-9)
 
-    check()  # broadcast kernel: 70 * 400 pairs is far under the budget
-    monkeypatch.setattr(sizing, "KNN_BRUTE_PAIR_BUDGET", 100)  # 70*400 >> 100
-    check()
+    check(ddf, "scan")  # Q = 70 <= N = 400, 28k pairs
+    check(ddf.iloc[:50], "brute")  # Q = 70 > N = 50
+    monkeypatch.setattr(sizing, "KNN_SCAN_PAIR_BUDGET", 0)
+    monkeypatch.setattr(sizing, "KNN_BRUTE_PAIR_BUDGET", 0)
+    check(ddf, "tiled")
 
 
 def test_knn_join_unknown_query_count_fails_closed(spark, monkeypatch, tmp_path):
-    """A FILTERED query side has no parquet-footer count. The pair gate
-    must then size it with a bounded count instead of assuming it is
-    small: under a tiny pair budget knn_join takes the tiled path, and
-    its answer equals the brute one."""
+    """A FILTERED query side has no parquet-footer count. knn_join's
+    gate then sizes it with one bounded count instead of assuming it is
+    small: against a larger data side the scan runs exactly at the scan
+    pair budget and the tiled path one pair below it; against a smaller
+    data side the brute kernel runs exactly at the brute pair budget
+    and the tiled path one pair below. The count reads 40 each time
+    (exact, or cap + 1 = "more than 39"), and every answer equals the
+    brute-force oracle."""
     rng = np.random.default_rng(43)
     qdf = pd.DataFrame({"qid": np.arange(60), "lat": rng.uniform(-40, 40, 60),
                         "lon": rng.uniform(-40, 40, 60)})
@@ -371,30 +390,19 @@ def test_knn_join_unknown_query_count_fails_closed(spark, monkeypatch, tmp_path)
     spark.createDataFrame(qdf).write.parquet(qpath)
     queries = spark.read.parquet(qpath).filter("qid % 3 != 0")
     assert sizing.footer_count(queries) is None
-    data = spark.createDataFrame(ddf)
-
-    tiled_calls = []
-    knn_tiled = spatial.knn_tiled
-
-    def spy(*args, **kwargs):
-        tiled_calls.append(1)
-        return knn_tiled(*args, **kwargs)
-
-    monkeypatch.setattr(spatial, "knn_tiled", spy)
-    monkeypatch.setattr(sizing, "KNN_BRUTE_PAIR_BUDGET", 100)  # 40*200 >> 100
-    got = (
-        spatial.knn_join(queries, data, 3, 4, d_id="id", q_id="qid")
-        .toPandas().sort_values(["qid", "rank"])
-    )
-    assert tiled_calls
     kept = qdf[qdf["qid"] % 3 != 0].reset_index(drop=True)
-    want = _brute_oracle(kept, ddf, 3)
-    assert sorted(got["qid"].unique()) == sorted(want)
-    for qid, grp in got.groupby("qid"):
-        pairs = list(zip(grp["neighbor_id"], grp["dist_km"]))
-        for (gi, gd), (wi, wd) in zip(pairs, want[int(qid)]):
-            assert gi == wi, f"qid={qid}: {pairs} vs {want[int(qid)]}"
-            assert gd == pytest.approx(wd, rel=1e-9)
+
+    for n, budget in ((200, "KNN_SCAN_PAIR_BUDGET"), (20, "KNN_BRUTE_PAIR_BUDGET")):
+        data = spark.createDataFrame(ddf.iloc[:n])
+        for pairs, branch in ((40 * n, "scan" if n == 200 else "brute"),
+                              (40 * n - 1, "tiled")):
+            monkeypatch.setattr(sizing, budget, pairs)
+            counters: dict = {}
+            got = spatial.knn_join(queries, data, 3, 4, d_id="id", q_id="qid",
+                                   counters=counters).toPandas()
+            assert counters["branch"] == branch
+            assert counters["q_rows"] == 40
+            _assert_matches_oracle(got, kept, ddf.iloc[:n], 3)
 
 
 def test_asof_join_matches_pandas(spark):
@@ -425,16 +433,21 @@ def test_asof_join_matches_pandas(spark):
 
 
 def test_knn_join_auto_dispatch(spark):
-    """knn_join: small data -> broadcast brute; results identical to
-    the explicitly tiled path."""
+    """knn_join's gate on a small batch (Q=20 <= N=80): the auto ring
+    takes the scan, an explicit ring the tiled path, read from the
+    counters; both answers are identical."""
     rng = np.random.default_rng(41)
     qdf = pd.DataFrame({"qid": np.arange(20), "lat": rng.uniform(-40, 40, 20), "lon": rng.uniform(-40, 40, 20)})
     ddf = pd.DataFrame({"id": np.arange(80), "lat": rng.uniform(-45, 45, 80), "lon": rng.uniform(-45, 45, 80)})
-    q = spark.createDataFrame(qdf).withColumn("cell", cell_col("lat", "lon", 4))
-    d = spark.createDataFrame(ddf).withColumn("cell", cell_col("lat", "lon", 4))
-    auto = spatial.knn_join(q, d, 3, 4, d_id="id").toPandas().sort_values(["qid", "rank"])
-    tiled = spatial.knn_tiled(q, d, 3, 4, d_id="id", q_id="qid").toPandas().sort_values(["qid", "rank"])
-    assert auto["neighbor_id"].tolist() == tiled["neighbor_id"].tolist()
+    q = spark.createDataFrame(qdf)
+    d = spark.createDataFrame(ddf)
+    auto_c: dict = {}
+    tiled_c: dict = {}
+    auto = spatial.knn_join(q, d, 3, 4, d_id="id", counters=auto_c).toPandas()
+    tiled = spatial.knn_join(q, d, 3, 4, ring=1, d_id="id", q_id="qid",
+                             counters=tiled_c).toPandas()
+    assert auto_c["branch"] == "scan" and tiled_c["branch"] == "tiled"
+    _assert_same_knn(auto, tiled)
 
 
 def test_block_topk_chunking_invariant(monkeypatch):
@@ -566,8 +579,9 @@ def test_resample_cubic_k16_matches_numpy_kernel(spark):
     qdf = pd.DataFrame(
         {"qid": np.arange(25), "lat": rng.uniform(-25, 25, 25), "lon": rng.uniform(-55, 55, 25)}
     )
+    data = spark.createDataFrame(ddf)
     got = (
-        spatial.resample_join(spark.createDataFrame(qdf), ddf, "val", "cubic", d_id="id")
+        spatial.resample_join(spark.createDataFrame(qdf), data, "val", "cubic", d_id="id")
         .toPandas()
         .sort_values("qid")["resampled"]
         .to_numpy()
@@ -592,7 +606,7 @@ def test_resample_cubic_k16_matches_numpy_kernel(spark):
     )
     for mode in spatial.RESAMPLE_K:
         r = (
-            spatial.resample_join(q_exact, ddf, "val", mode, d_id="id")
+            spatial.resample_join(q_exact, data, "val", mode, d_id="id")
             .toPandas()
             .sort_values("qid")["resampled"]
             .to_numpy()
@@ -689,6 +703,8 @@ def test_knn_residual_scan_chunked_exact(spark, monkeypatch):
     queries = spark.createDataFrame(qdf).withColumn("cell", cell_col("lat", "lon", res))
     data = spark.createDataFrame(ddf).withColumn("cell", cell_col("lat", "lon", res))
     monkeypatch.setattr(spatial, "KNN_RESIDUAL_CHUNK", 7)  # forces >= 4 chunks
+    # Q = 25 > N = 12 would take the brute kernel: pin the tiled phases
+    monkeypatch.setattr(sizing, "KNN_BRUTE_PAIR_BUDGET", 0)
     counters = {}
     got = (
         spatial.knn_tiled(
@@ -697,6 +713,7 @@ def test_knn_residual_scan_chunked_exact(spark, monkeypatch):
         )
         .toPandas().sort_values(["qid", "rank"])
     )
+    assert counters["branch"] == "tiled"
     assert counters["residual_scan"] == 25  # the whole query set
     assert len(got) == 25 * 3
     want = _brute_oracle(qdf, ddf, 3)
@@ -922,6 +939,79 @@ def test_knn_tiled_duplicate_queries_without_qid(spark, monkeypatch):
     check("auto", "tiled")
 
 
+def _oracle_rows(qdf, ddf, k, quantize=None):
+    """Every query row, repeats included, x its k nearest data rows on
+    (distance, id), as knn_join's output columns."""
+    d = spatial.haversine_km(
+        qdf["lat"].to_numpy()[:, None], qdf["lon"].to_numpy()[:, None],
+        ddf["lat"].to_numpy()[None, :], ddf["lon"].to_numpy()[None, :],
+    )
+    if quantize is not None:
+        d = spatial._quantize_np(d, quantize)
+    ids = ddf["id"].to_numpy()
+    rows = [
+        (*qdf.iloc[i], int(ids[j]), d[i, j], r + 1)
+        for i in range(len(qdf))
+        for r, j in enumerate(np.lexsort((ids, d[i]))[:k])
+    ]
+    cols = [*qdf.columns, "neighbor_id", "dist_km", "rank"]
+    return pd.DataFrame(rows, columns=cols).astype({"dist_km": np.float64})
+
+
+def _branch_cases():
+    rng = np.random.default_rng(83)
+    ddf = pd.DataFrame({"id": rng.permutation(300), "lat": rng.uniform(-50, 50, 300),
+                        "lon": rng.uniform(-120, 120, 300)})
+    dup = pd.DataFrame({"lat": rng.uniform(-50, 50, 5), "lon": rng.uniform(-120, 120, 5)})
+    # a 0.1-degree lattice: every data point three times under distinct
+    # ids, queries on lattice points, so the 1e5-quantized distances
+    # tie within and across the k=4 boundary
+    lat = np.round(rng.uniform(-2, 2, 40), 1).repeat(3)
+    lon = np.round(rng.uniform(-2, 2, 40), 1).repeat(3)
+    lattice = pd.DataFrame({"id": rng.permutation(120), "lat": lat, "lon": lon})
+    one = pd.DataFrame({"qid": [0], "lat": [10.0], "lon": [20.0]})
+    # (queries, data, k, quantize, rows of the smaller data side)
+    return {
+        "duplicate_rows_no_qid": (pd.concat([dup, dup.iloc[:2]], ignore_index=True),
+                                  ddf, 3, None, 5),
+        "quantized_ties": (pd.DataFrame({"qid": np.arange(12), "lat": lat[:36:3],
+                                         "lon": lon[:36:3]}), lattice, 4, 1e5, 9),
+        "empty": (one.iloc[:0], ddf, 3, None, 3),
+        "one_row": (one, ddf, 3, None, 3),
+    }
+
+
+@pytest.mark.parametrize("case", list(_branch_cases()))
+def test_knn_join_same_answer_on_every_branch(spark, monkeypatch, case):
+    """One input through every branch of knn_join's gate, each forced by
+    the two pair budgets, and every answer equal to the brute-force
+    oracle. Against the full data side (Q <= N) the scan and the tiled
+    path run; against a smaller data side the brute kernel runs (Q > N
+    within the brute budget, or k >= N for the empty and one-row query
+    frames) and, where k < N, the tiled path too."""
+    qdf, ddf, k, quantize, n_small = _branch_cases()[case]
+    queries = spark.createDataFrame(qdf, schema=", ".join(
+        f"{c} {'long' if c == 'qid' else 'double'}" for c in qdf.columns))
+
+    def run(ddf, branch):
+        # a budget of -1 admits no batch at all, not even an empty one
+        for budget, own in (("KNN_SCAN_PAIR_BUDGET", "scan"),
+                            ("KNN_BRUTE_PAIR_BUDGET", "brute")):
+            monkeypatch.setattr(sizing, budget, 10**9 if branch == own else -1)
+        counters: dict = {}
+        got = spatial.knn_join(queries, spark.createDataFrame(ddf), k, 4, d_id="id",
+                               quantize=quantize, counters=counters).toPandas()
+        assert counters["branch"] == branch
+        _assert_same_knn(got, _oracle_rows(qdf, ddf, k, quantize))
+
+    run(ddf, "scan")
+    run(ddf, "tiled")
+    small = ddf.iloc[:n_small]
+    run(small, "brute")
+    if k < n_small:
+        run(small, "tiled")
+
+
 def test_knn_tiled_small_batch_scan_hot_tile_quantized(spark, monkeypatch):
     """The small-batch scan equals the tiled path row for row on
     hot-tile data under quantize=1e5 (ranking on the epsilon-floored
@@ -955,10 +1045,10 @@ def test_knn_tiled_small_batch_scan_hot_tile_quantized(spark, monkeypatch):
 
 def test_knn_tiled_small_batch_gate(spark, monkeypatch):
     """Both sides of the small-batch gate: the scan answers exactly
-    when Q <= N and Q x N fits sizing.KNN_SCAN_PAIR_BUDGET; k >= N
-    keeps the broadcast brute branch, Q > N and an explicit ring keep
-    the tiled path, and an empty query frame gives no rows. The
-    counters record branch, Q, N and pairs."""
+    when Q <= N and Q x N fits sizing.KNN_SCAN_PAIR_BUDGET; k >= N and
+    Q > N take the broadcast brute branch, an explicit ring the tiled
+    path, and an empty query frame gives no rows. The counters record
+    branch, Q, N and pairs."""
     res = 5
     rng = np.random.default_rng(67)
     ddf = pd.DataFrame({"id": np.arange(80), "lat": rng.uniform(-50, 50, 80),
@@ -997,42 +1087,13 @@ def test_knn_tiled_small_batch_gate(spark, monkeypatch):
     assert got.empty
     assert list(got.columns) == [*queries.columns, "neighbor_id", "dist_km", "rank"]
 
-    # Q > N: 120 queries against the 80 data rows stay tiled
+    # Q > N: 120 queries against the 80 data rows broadcast the data
     qbig = pd.DataFrame({"qid": np.arange(120), "lat": rng.uniform(-50, 50, 120),
                          "lon": rng.uniform(-100, 100, 120)})
     big, _ = _knn_frames(spark, qbig, ddf, res)
     got, c = run(big)
-    assert c["branch"] == "tiled" and c["q_rows"] > c["n_data"]
+    assert c["branch"] == "brute" and c["q_rows"] > c["n_data"]
     _assert_matches_oracle(got, qbig, ddf, 3)
-
-
-def test_knn_tiled_unknown_query_count_fails_closed(spark, monkeypatch, tmp_path):
-    """A filtered parquet query frame has no footer count. The
-    small-batch gate then decides from a bounded count: the scan when
-    the 40 surviving rows fit the budget, the tiled path as soon as
-    they do not (never assumed small), exact either way."""
-    res = 5
-    rng = np.random.default_rng(71)
-    qdf = pd.DataFrame({"qid": np.arange(60), "lat": rng.uniform(-40, 40, 60),
-                        "lon": rng.uniform(-40, 40, 60)})
-    ddf = pd.DataFrame({"id": np.arange(200), "lat": rng.uniform(-45, 45, 200),
-                        "lon": rng.uniform(-45, 45, 200)})
-    qpath = str(tmp_path / "queries.parquet")
-    spark.createDataFrame(qdf).write.parquet(qpath)
-    queries = (spark.read.parquet(qpath).filter("qid % 3 != 0")
-               .withColumn("cell", cell_col("lat", "lon", res)))
-    assert sizing.footer_count(queries) is None
-    data = spark.createDataFrame(ddf).withColumn("cell", cell_col("lat", "lon", res))
-    kept = qdf[qdf["qid"] % 3 != 0].reset_index(drop=True)
-
-    for budget, branch in ((40 * 200, "scan"), (39 * 200, "tiled")):
-        monkeypatch.setattr(sizing, "KNN_SCAN_PAIR_BUDGET", budget)
-        counters: dict = {}
-        got = spatial.knn_tiled(queries, data, 3, res, d_id="id", q_id="qid",
-                                counters=counters).toPandas()
-        assert counters["branch"] == branch
-        assert counters["q_rows"] == 40  # exact, or cap + 1 = "more than 39"
-        _assert_matches_oracle(got, kept, ddf, 3)
 
 
 def test_block_topk_gemm_path_bit_identical(monkeypatch):

@@ -8,9 +8,10 @@ column pruning, JVM-side expressions) the docs make.
 
 With ``--plans-dir DIR`` it instead writes the executed plan of every
 registry query (rios_spark.queries.QUERIES) to ``DIR/<query>.txt`` and
-leaves PLANS.md alone. Expression ids (``#N``) and node ids
-(``plan_id=N``) are normalised, so two trees can be compared with
-``diff -r``:
+leaves PLANS.md alone. Expression ids (``#N``), node ids
+(``plan_id=N``) and lambda variable ids (``x_N``) are normalised, and
+metadata strings are printed uncut, so two trees (or two registry
+orders of one tree) can be compared with ``diff -r``:
 
     python tools/dump_plans.py SF_DIR --plans-dir /tmp/plans_a   # tree A
     python tools/dump_plans.py SF_DIR --plans-dir /tmp/plans_b   # tree B
@@ -36,7 +37,7 @@ AUDIT = [
     ("margin_ring_counts", "k-ring explode BEFORE the shuffle (projection pruned to `cell`)"),
     ("zonal_rect_docs", "broadcast cover + geometry join, codegen'd rect checks, salted two-stage agg"),
     ("zonal_pentagon_docs", "pure half-plane SQL expression, zero Python"),
-    ("knn_tiled_cust_supp", "multi-phase union (pass-0 + escalation + residual); the expensive ranked top-k is PERSISTED and re-read via InMemoryTableScan, so the phase branches share one computation of the candidate join"),
+    ("knn_tiled_cust_supp", "Q > N: knn_join's gate broadcasts the supplier side to the Arrow brute kernel over the customer scan, the same plan as knn_cust_supp; ZERO shuffles"),
     ("resample_bilinear_cust", "broadcast kNN kernel + broadcast value join + one groupBy for the weighted quotient"),
     ("median_across_sources", "three partial aggs + full-outer align + per-row array median"),
     ("adaptive_split_docs", "fully distributed split decision: hot-cell semi-join, per-resolution window sums over the COUNT frame (never the data), broadcast re-key join"),
@@ -73,9 +74,11 @@ def count_distinct_nodes(plan: str, kind: str) -> int:
 
 def normalize_plan(plan: str) -> str:
     """Drop the per-session counters from a plan string: expression ids
-    (`#N`) and node ids (`plan_id=N`) differ between runs of the same
-    plan."""
+    (`#N`), node ids (`plan_id=N`) and lambda variable ids (`lambda
+    x_N`, numbered by a session-wide counter) differ between runs of
+    the same plan."""
     plan = re.sub(r"#\d+", "#N", plan)
+    plan = re.sub(r"\blambda ([a-z]+)_\d+", r"lambda \1_N", plan)
     return re.sub(r"plan_id=\d+", "plan_id=N", plan)
 
 
@@ -99,7 +102,13 @@ def main():
     sf_dir = args.sf_dir
     from rios_spark.queries import QUERIES
 
-    spark = get_spark("plan_audit", master="local[8]", shuffle_partitions=8)
+    # uncut metadata strings: Spark abbreviates long DataFilters /
+    # PushedFilters values BEFORE the ids are normalised, so the cut
+    # point would move with the digit count of earlier ids
+    spark = get_spark(
+        "plan_audit", master="local[8]", shuffle_partitions=8,
+        extra_conf={"spark.sql.maxMetadataStringLength": str(1 << 20)},
+    )
     if args.plans_dir:
         write_plans(spark, sf_dir, args.plans_dir)
         spark.stop()
