@@ -1096,6 +1096,35 @@ def test_knn_tiled_small_batch_gate(spark, monkeypatch):
     _assert_matches_oracle(got, qbig, ddf, 3)
 
 
+def test_knn_tiled_unknown_query_count_fails_closed(spark, monkeypatch, tmp_path):
+    """A filtered parquet query frame has no footer count. The
+    small-batch gate then decides from a bounded count: the scan when
+    the 40 surviving rows fit the budget, the tiled path as soon as
+    they do not (never assumed small), exact either way."""
+    res = 5
+    rng = np.random.default_rng(71)
+    qdf = pd.DataFrame({"qid": np.arange(60), "lat": rng.uniform(-40, 40, 60),
+                        "lon": rng.uniform(-40, 40, 60)})
+    ddf = pd.DataFrame({"id": np.arange(200), "lat": rng.uniform(-45, 45, 200),
+                        "lon": rng.uniform(-45, 45, 200)})
+    qpath = str(tmp_path / "queries.parquet")
+    spark.createDataFrame(qdf).write.parquet(qpath)
+    queries = (spark.read.parquet(qpath).filter("qid % 3 != 0")
+               .withColumn("cell", cell_col("lat", "lon", res)))
+    assert sizing.footer_count(queries) is None
+    data = spark.createDataFrame(ddf).withColumn("cell", cell_col("lat", "lon", res))
+    kept = qdf[qdf["qid"] % 3 != 0].reset_index(drop=True)
+
+    for budget, branch in ((40 * 200, "scan"), (39 * 200, "tiled")):
+        monkeypatch.setattr(sizing, "KNN_SCAN_PAIR_BUDGET", budget)
+        counters: dict = {}
+        got = spatial.knn_tiled(queries, data, 3, res, d_id="id", q_id="qid",
+                                counters=counters).toPandas()
+        assert counters["branch"] == branch
+        assert counters["q_rows"] == 40  # exact, or cap + 1 = "more than 39"
+        _assert_matches_oracle(got, kept, ddf, 3)
+
+
 def test_block_topk_gemm_path_bit_identical(monkeypatch):
     """The GEMM candidate path (dot-product selection + exact haversine
     on candidates + certified exclusion bound) must return BIT-identical
