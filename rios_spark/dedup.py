@@ -462,6 +462,53 @@ def pairs_f32_slack(dim: int) -> float:
     return max(1e-3, 2.0 * (dim + 2) * 2.0**-23)
 
 
+def _pairs_above(
+    ida: np.ndarray,
+    A: np.ndarray,
+    threshold: float,
+    idb: np.ndarray | None = None,
+    B: np.ndarray | None = None,
+) -> pd.DataFrame:
+    """Every pair with cosine >= threshold, as (id1 < id2, cosine):
+    between the rows of A and those of B, or, without B, within A (each
+    unordered pair once). Rows are unit vectors. The similarity matrix
+    is built in row chunks of at most sizing.GEMM_BUDGET elements (the
+    upper triangle only, within A) as an f32 shortlist
+    (pairs_f32_slack); an exact f64 per-pair dot then decides membership
+    and gives the emitted cosine. So memory stays bounded however many
+    rows one bucket or block holds."""
+    within = B is None
+    if within:
+        idb, B = ida, A
+    A32 = A.astype(np.float32)
+    B32 = A32 if within else B.astype(np.float32)
+    thr32 = threshold - pairs_f32_slack(A.shape[1])
+    outs = []
+    s = 0
+    while s < len(A):
+        c0 = s if within else 0  # within A, columns s: hold the upper triangle
+        e = min(len(A), s + max(1, sizing.GEMM_BUDGET // max(1, len(B) - c0)))
+        ii, jj = np.nonzero(A32[s:e] @ B32[c0:].T >= thr32)
+        ii, jj = ii + s, jj + c0
+        if within:
+            keep = ii < jj
+            ii, jj = ii[keep], jj[keep]
+        sim = np.einsum("ij,ij->i", A[ii], B[jj])
+        keep = sim >= threshold
+        ii, jj, sim = ii[keep], jj[keep], sim[keep]
+        outs.append(
+            pd.DataFrame(
+                {
+                    "id1": np.minimum(ida[ii], idb[jj]),
+                    "id2": np.maximum(ida[ii], idb[jj]),
+                    "cosine": sim,
+                }
+            )
+        )
+        s = e
+    return pd.concat(outs, ignore_index=True) if outs else _empty_pairs()
+
+
 def embedding_all_pairs_exact(
     df: DataFrame,
     emb_col: str,
@@ -516,58 +563,10 @@ def embedding_all_pairs_exact(
             return _empty_pairs()
         ids = pdf["id"].to_numpy(np.int64)
         mat = _norm_mat(pdf)
-        mat32 = mat.astype(np.float32)
-        thr32 = threshold - pairs_f32_slack(mat.shape[1])
-        outs = []
         if lo == hi:
-            step = max(1, sizing.GEMM_BUDGET // max(len(pdf), 1))
-            for s in range(0, len(pdf), step):
-                e = min(s + step, len(pdf))
-                sim32 = mat32[s:e] @ mat32.T
-                ii, jj = np.nonzero(sim32 >= thr32)
-                keep = (ii + s) < jj  # strict upper triangle, global idx
-                ii, jj = ii[keep], jj[keep]
-                # exact f64 verification decides membership and the
-                # emitted cosine (see pairs_f32_slack)
-                sim = np.einsum("ij,ij->i", mat[ii + s], mat[jj])
-                keep = sim >= threshold
-                ii, jj, sim = ii[keep], jj[keep], sim[keep]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "id1": np.minimum(ids[ii + s], ids[jj]),
-                            "id2": np.maximum(ids[ii + s], ids[jj]),
-                            "cosine": sim,
-                        }
-                    )
-                )
-        else:
-            a_m = (pdf["__b"].to_numpy() == lo)
-            A, B = mat[a_m], mat[~a_m]
-            A32, B32 = mat32[a_m], mat32[~a_m]
-            ida, idb = ids[a_m], ids[~a_m]
-            if len(A) == 0 or len(B) == 0:
-                return _empty_pairs()
-            step = max(1, sizing.GEMM_BUDGET // max(len(B), 1))
-            for s in range(0, len(A), step):
-                e = min(s + step, len(A))
-                sim32 = A32[s:e] @ B32.T
-                ii, jj = np.nonzero(sim32 >= thr32)
-                sim = np.einsum("ij,ij->i", A[ii + s], B[jj])
-                keep = sim >= threshold
-                ii, jj, sim = ii[keep], jj[keep], sim[keep]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "id1": np.minimum(ida[ii + s], idb[jj]),
-                            "id2": np.maximum(ida[ii + s], idb[jj]),
-                            "cosine": sim,
-                        }
-                    )
-                )
-        if not outs:
-            return _empty_pairs()
-        return pd.concat(outs, ignore_index=True)
+            return _pairs_above(ids, mat, threshold)
+        a_m = pdf["__b"].to_numpy() == lo
+        return _pairs_above(ids[a_m], mat[a_m], threshold, ids[~a_m], mat[~a_m])
 
     return tasked.groupBy("__task").applyInPandas(pairs_task, _PAIR_SCHEMA)
 
@@ -638,15 +637,7 @@ def embedding_near_dup(
     def pairs_in_bucket(key, pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
             return _empty_pairs()
-        mat = _norm_mat(pdf)
-        sim = mat @ mat.T
-        ids = pdf["id"].to_numpy()
-        iu = np.triu_indices(len(pdf), k=1)
-        keep = sim[iu] >= threshold
-        a, bdx = iu[0][keep], iu[1][keep]
-        lo = np.minimum(ids[a], ids[bdx])
-        hi = np.maximum(ids[a], ids[bdx])
-        return pd.DataFrame({"id1": lo, "id2": hi, "cosine": sim[iu][keep]})
+        return _pairs_above(pdf["id"].to_numpy(np.int64), _norm_mat(pdf), threshold)
 
     counts = bucketed.groupBy("bucket").count()
     hot = counts.filter(F.col("count") > max_bucket_rows).select("bucket")

@@ -172,31 +172,16 @@ def cell_y_col(cell: Column | str) -> Column:
 
 
 def kring_cells_col(cell: Column | str, res: int, k: int) -> Column:
-    """Array column of the k-ring of `cell` (cell at known `res`).
-
-    Built from explode-free array expressions: the margin join explodes
-    this array to produce (owner_cell, row) duplicates — the exact
-    Spark re-expression of RIOS's margin-padded block read
-    (rios/imagereader.py:94-121).
-    x wraps (antimeridian); y rows beyond the poles are dropped.
-    """
-    cell = F.col(cell) if isinstance(cell, str) else cell
-    n = 1 << res
-    rem = cell - F.lit(res * RES_MUL).cast("long")
-    y = F.shiftright(rem, 29)
-    x = rem - y * F.lit(Y_MUL).cast("long")
-    offs = [(dy, dx) for dy in range(-k, k + 1) for dx in range(-k, k + 1)]
-    cells = []
-    for dy, dx in offs:
-        ny = y + F.lit(dy)
-        nx = (x + F.lit(dx + n)) % F.lit(n)  # wrap
-        c = F.lit(res * RES_MUL).cast("long") + ny * F.lit(Y_MUL).cast("long") + nx
-        cells.append(F.when((ny >= 0) & (ny < n), c))
-    return F.array_compact(F.array(*cells))
+    """Array column of the k-ring of `cell` (cell at known `res`): the
+    cells the margin join explodes each row to — the Spark
+    re-expression of RIOS's margin-padded block read
+    (rios/imagereader.py:94-121). kring_cells_var_col at a literal
+    radius, one O(1)-size expression whatever k is."""
+    return kring_cells_var_col(cell, res, F.lit(k))
 
 
 def kring_cells_var_col(cell: Column | str, res: int, radius: Column) -> Column:
-    """kring_cells_col with a PER-ROW radius column: array of all cells
+    """The k-ring with a PER-ROW radius column: array of all cells
     within Chebyshev distance `radius` of `cell`. Built with
     sequence/transform higher-order expressions (JVM-side); x wraps,
     y rows beyond the poles drop. The caller must keep radius

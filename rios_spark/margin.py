@@ -21,27 +21,13 @@ margin-less path. AQE skew-join/partition coalescing applies as usual.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rios_spark.grid import kring_cells_col, kring_cells_var_col
+from rios_spark.grid import kring_cells_col
 
 OWNER = "__owner"
 IS_MARGIN = "__is_margin"
-
-# r6: the literal-unrolled ring ((2k+1)^2 Column expressions built
-# driver-side) measured SLOWER than the sequence/transform formulation
-# at EVERY radius, not just large ones — interleaved medians on the
-# kNN pass-0 shape: ring 1 lit ~1.0-5.0 s vs var 0.75-1.0; ring 2 lit
-# 1.2-1.4 vs var 0.70-0.74; ring 4 lit 2.7-3.0 vs var 1.0-1.15; ring 6
-# lit 1.6-6.2 vs var 0.70-0.84. The unrolled form pays expression-tree
-# planning plus a huge generated method (the JIT-cliff class) on every
-# fresh plan, and its evaluation is no faster. The literal spelling
-# remains available (kring_cells_col) for value-parity tests; the
-# operator path always takes the O(1)-expression form. (Supersedes the
-# ADVICE r2 threshold of 8, which assumed the literal form won below
-# it — measured false.)
-_LITERAL_RING_MAX = 0
 
 
 def with_margin(df: DataFrame, res: int, k: int, cell: str = "cell") -> DataFrame:
@@ -56,13 +42,8 @@ def with_margin(df: DataFrame, res: int, k: int, cell: str = "cell") -> DataFram
     """
     if k == 0:
         return df.withColumn(OWNER, F.col(cell)).withColumn(IS_MARGIN, F.lit(False))
-    ring: Column = (
-        kring_cells_col(F.col(cell), res, k)
-        if k <= _LITERAL_RING_MAX
-        else kring_cells_var_col(F.col(cell), res, F.lit(k))
-    )
     return (
-        df.withColumn(OWNER, F.explode(ring))
+        df.withColumn(OWNER, F.explode(kring_cells_col(F.col(cell), res, k)))
         .withColumn(IS_MARGIN, F.col(OWNER) != F.col(cell))
     )
 

@@ -22,7 +22,9 @@ the engine asks is answered here:
   broadcast kernel;
 - ``IVF_DRIVER_PROBE_ROWS``: the query-batch gate of the driver-side
   IVF probe;
-- ``GEMM_BUDGET``: the per-task distance / similarity matrix cap.
+- ``GEMM_BUDGET``: the per-task distance / similarity matrix cap;
+- ``PIP_EXPR_MAX_VERTICES``: the polygon-set size up to which the
+  point-in-polygon test is a JVM expression, not the Arrow kernel.
 
 One rule for a count the footers cannot prove: unknown never means
 small. The fan-out widens a narrow scan to full width, the kNN gate
@@ -122,6 +124,14 @@ IVF_DRIVER_PROBE_ROWS = 10_000
 # time.
 GEMM_BUDGET = 8_000_000
 
+# Total polygon vertices up to which spatial.pip_join runs the exact
+# ray cast as one JVM expression; past it the Arrow-batched numpy
+# kernel runs. Past the gate the kernel is the cheaper one: over 150k
+# pages on a 4-vCPU host (process-tree CPU seconds, same rows on both)
+# 4,000 vertices cost 1.9 on the kernel vs 2.5-3.2 as the expression,
+# and 20,000 vertices 1.3-1.5 vs 1.7-2.0.
+PIP_EXPR_MAX_VERTICES = 2048
+
 
 def footer_count(df: DataFrame) -> int | None:
     """Row count from parquet footers, or None when it cannot be proven
@@ -210,6 +220,12 @@ def broadcast_gated(df: DataFrame, base: DataFrame) -> DataFrame:
     return F.broadcast(df) if fast_count(base) <= BROADCAST_ROW_GATE else df
 
 
+# The largest bounded-count cap: DataFrame.limit takes a JVM int, so
+# cap + 1 must stay <= 2^31 - 1. A budget / N ratio at or past it (a
+# raised pair budget against a tiny data side) counts at most this far.
+_LIMIT_MAX = 2**31 - 2
+
+
 def knn_branch(
     queries: DataFrame, n_data: int, k: int, ring: int | str = "auto"
 ) -> tuple[str, int | None]:
@@ -225,8 +241,11 @@ def knn_branch(
 
     Q is the footer count of `queries`, else ONE bounded count
     queries.limit(cap + 1).count() with cap the largest Q any non-tiled
-    branch accepts, so it settles both budgets (cap + 1 then means
-    "more than cap"). The rows are None when no count was needed."""
+    branch accepts, so it settles both budgets. A count of cap + 1
+    means only "more than cap" and takes "tiled"; cap is clamped below
+    the JVM int DataFrame.limit takes (_LIMIT_MAX), where the clamped
+    count fails closed the same way. The rows are None when no count
+    was needed."""
     if queries.isStreaming:
         if n_data > KNN_BROADCAST_ROWS:
             raise ValueError(
@@ -245,7 +264,10 @@ def knn_branch(
     if q_rows is None:
         if cap == 0:
             return "tiled", None
+        cap = min(cap, _LIMIT_MAX)
         q_rows = queries.limit(cap + 1).count()
+        if q_rows > cap:
+            return "tiled", q_rows
     pairs = q_rows * n_data
     if q_rows <= n_data and pairs <= KNN_SCAN_PAIR_BUDGET:
         return "scan", q_rows

@@ -1,6 +1,7 @@
 """SparkSession factory.
 
-Defaults tuned for the sandbox (local[N], 128 GiB, 32 cores) but every
+Local defaults: `local[$SPARK_GRAFT_CPUS]` and a driver heap of
+$SPARK_DRIVER_MEM, else min(24g, half the host's RAM). Every other
 setting is the one we would ship to a 1000-executor cluster: AQE on
 (runtime skew-join splitting + partition coalescing), Arrow on (all
 kernels are vectorized pandas UDFs), shuffle partitions sized to cores
@@ -13,6 +14,20 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _driver_memory() -> str:
+    """The driver heap: $SPARK_DRIVER_MEM, else min(24g, half of the
+    host's physical RAM), so a local driver never asks for more heap
+    than the machine has."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (ValueError, OSError):
+        return "24g"
+    return f"{min(24 * 1024, ram_mb // 2)}m"
 
 
 def get_spark(
@@ -52,7 +67,7 @@ def get_spark(
         # plans.sizing fan-out (it saw a "wide" scan with every row in
         # one partition). Scan width here honestly equals row-
         # group count; per-row-heavy operators fan out explicitly.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

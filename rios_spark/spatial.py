@@ -121,11 +121,6 @@ def _is_axis_rect(xs: np.ndarray, ys: np.ndarray) -> bool:
     )
 
 
-# polygon sets up to this many total vertices run as pure JVM
-# expressions; larger sets use the Arrow-batched numpy kernel
-PIP_EXPR_MAX_VERTICES = 2048
-
-
 def pip_join(
     points: DataFrame,
     polygons: pd.DataFrame,
@@ -133,7 +128,6 @@ def pip_join(
     lat: str = "lat",
     lon: str = "lon",
     cell: str = "cell",
-    method: str = "auto",
 ) -> DataFrame:
     """Inner join: each point row x each polygon containing it.
 
@@ -142,11 +136,11 @@ def pip_join(
     yields m rows; points in no polygon are dropped (anti-join
     semantics preserved for the disjoint case, J9).
 
-    method='expr' (default for small polygon sets): the ray cast is
-    compiled into a CASE-dispatched Spark SQL expression — the whole
-    join is JVM-side, codegen'd, zero Python. method='arrow': the
-    vectorized numpy kernel (for polygon sets too large to compile
-    into an expression). Both produce identical results (tested).
+    The exact test runs where it is cheaper, by total vertex count
+    (sizing.PIP_EXPR_MAX_VERTICES): up to the gate the ray cast is one
+    Spark SQL expression — the whole join is JVM-side, codegen'd, zero
+    Python; past it the vectorized numpy kernel runs Arrow-batched.
+    Both give the same rows (test_pip_join_same_rows_on_both_kernels).
     """
     spark = points.sparkSession
     cover = polygon_cover(polygons, res)
@@ -154,10 +148,7 @@ def pip_join(
     cand = points.join(cover_df, on=cell, how="inner")
 
     total_vertices = int(sum(len(p["xs"]) for _, p in polygons.iterrows()))
-    if method == "auto":
-        method = "expr" if total_vertices <= PIP_EXPR_MAX_VERTICES else "arrow"
-
-    if method == "expr":
+    if total_vertices <= sizing.PIP_EXPR_MAX_VERTICES:
         # ONE pass of the big side, keyed by polygon id (round-1 folded
         # per-group scans into this). The predicate is generic across
         # polygons, so it stays one SMALL method regardless of polygon
@@ -222,6 +213,8 @@ def pip_join(
         for _, p in polygons.iterrows()
     }
     bc = spark.sparkContext.broadcast(rings)
+    # the expression path's column order: the join key leads
+    cand = cand.select("polygon_id", *[c for c in cand.columns if c != "polygon_id"])
     out_schema = cand.schema
 
     def exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -647,7 +640,7 @@ def _rank_and_prove(
     the quantized-metric top-k. The escalation-radius inversion keeps
     using __kth; its at-least-one-cell slack (km-scale) dwarfs the one
     grid step (1/quantize) the quantized kth can sit below raw, and the
-    re-checked guard keeps every round exact regardless."""
+    re-checked guard keeps the round exact regardless."""
     dist = _haversine_col(F.col(q_lat), F.col(q_lon), F.col("__dlat"), F.col("__dlon"))
     if quantize:
         dist = _quantize_col(dist, quantize)
@@ -701,28 +694,30 @@ def _knn_residual_scan(
     d_lat: str,
     d_lon: str,
     d_id: str,
-    chunk: int | None = None,
     quantize: float | None = None,
     n_residue_hint: int | None = None,
+    counters: dict | None = None,
 ) -> DataFrame:
     """Exact distributed brute force for a SMALL query set against an
     arbitrarily large data side: the residue queries are collected and
-    broadcast in chunks of at most `chunk` rows (driver memory bounded
-    by a constant), the data is scanned ONCE PER CHUNK with a
-    per-partition running top-k, and the tiny per-partition partials
+    broadcast in chunks of at most KNN_RESIDUAL_CHUNK rows (driver
+    memory bounded by a constant), the data is scanned ONCE PER CHUNK
+    with a per-partition running top-k, and the tiny per-partition partials
     (n_queries x k x n_partitions rows) merge in a final window.
     Replaces the round-1 `data.toPandas()` full collect of the
     by-construction-too-big-to-broadcast side (VERDICT #5); the chunk
     cap enforces the round-2 VERDICT #4 bound. `part_cols` key a query
     row; when they are every column of `bad_q`, the collected rows
     themselves become the output's query side (no join back), so
-    repeated rows each keep their own driver-assigned key."""
-    chunk = chunk or KNN_RESIDUAL_CHUNK
+    repeated rows each keep their own driver-assigned key.
+    `counters["residual_scan"]`, when given, records how many query
+    rows the scan answered."""
+    chunk = KNN_RESIDUAL_CHUNK
     key_cols = list(dict.fromkeys([*part_cols, q_lat, q_lon]))
     parts: list[DataFrame] = []
     # fast path (r6): when the caller can BOUND the residue below the
-    # chunk cap (knn_tiled knows n_residual arithmetically from the
-    # phase counters), one plain collect() fetches it in a single job —
+    # chunk cap (the tiled phases' pass-0 residue count bounds their
+    # scan), one plain collect() fetches it in a single job —
     # toLocalIterator pays sequential per-partition round-trips that
     # were a visible share of the sf0.01 wall, where the whole phase is
     # fixed job latency, and limit(chunk+1) was measured WORSE
@@ -731,6 +726,8 @@ def _knn_residual_scan(
     # iterator path's chunk + one partition.
     if n_residue_hint is not None and n_residue_hint <= chunk:
         rows = bad_q.select(*key_cols).collect()
+        if counters is not None:
+            counters["residual_scan"] = len(rows)
         if not rows:
             return _no_neighbours(bad_q)
         return _residual_scan_chunk(
@@ -738,10 +735,12 @@ def _knn_residual_scan(
             q_lat, q_lon, d_lat, d_lon, d_id, quantize=quantize,
         )
     buf: list = []
+    n_rows = 0
     # toLocalIterator streams one partition at a time to the driver —
     # the driver never holds more than (chunk + one partition) rows
     for row in bad_q.select(*key_cols).toLocalIterator(prefetchPartitions=True):
         buf.append(row)
+        n_rows += 1
         if len(buf) >= chunk:
             parts.append(
                 _residual_scan_chunk(
@@ -757,6 +756,8 @@ def _knn_residual_scan(
                 q_lat, q_lon, d_lat, d_lon, d_id, quantize=quantize,
             )
         )
+    if counters is not None:
+        counters["residual_scan"] = n_rows
     if not parts:
         return _no_neighbours(bad_q)
     return _union_all(parts)
@@ -846,7 +847,6 @@ def knn_join(
     d_lon: str = "lon",
     d_id: str = "id",
     q_id: str | None = None,
-    max_escalations: int = 2,
     counters: dict | None = None,
     quantize: float | None = None,
 ) -> DataFrame:
@@ -872,18 +872,24 @@ def knn_join(
       frame; exact by construction, so no guard, persist or
       escalation);
     - "tiled": every other input and every explicit `ring` — the
-      distributed k-ring candidate join, completeness guard,
-      escalation and residual scan (_knn_tiled).
+      distributed k-ring candidate join and completeness guard, at most
+      one escalation round, then the exact residual scan (_knn_tiled).
     An unknown query count is settled by one bounded count, never
-    assumed small. `counters` records branch, q_rows, n_data and pairs,
-    plus the tiled phases' counts.
+    assumed small. `counters` records branch, q_rows, n_data and pairs
+    (q_rows is cap + 1 when the bounded count stopped early: "more than
+    the largest Q a non-tiled branch takes"), plus the tiled phases'
+    counts: unproven_pass0, unproven_escalation_0 (an upper bound: the
+    keys the round escalated) and residual_scan (the query rows the
+    scan answered).
 
     `res` is the tiled phases' base resolution (ring="auto" may re-tile
     finer, never coarser); `q_id` keys their ranking window (a
-    synthetic unique key without it); `max_escalations` bounds their
-    escalation rounds; `quantize` ranks and emits distances on the
-    epsilon-floored 1/quantize grid on every branch.
+    synthetic unique key without it); `quantize` ranks and emits
+    distances on the epsilon-floored 1/quantize grid on every branch.
+    k < 1 raises ValueError.
     """
+    if k < 1:
+        raise ValueError(f"knn_join needs k >= 1, got {k}")
     n_data = sizing.fast_count(data)
     branch, q_rows = sizing.knn_branch(queries, n_data, k, ring)
     if counters is not None:
@@ -912,7 +918,7 @@ def knn_join(
     return _knn_tiled(
         queries, data, k, res, ring, n_data, q_lat=q_lat, q_lon=q_lon,
         d_lat=d_lat, d_lon=d_lon, d_id=d_id, q_id=q_id,
-        max_escalations=max_escalations, counters=counters, quantize=quantize,
+        counters=counters, quantize=quantize,
     )
 
 
@@ -934,7 +940,6 @@ def _knn_tiled(
     d_lon: str,
     d_id: str,
     q_id: str | None,
-    max_escalations: int,
     counters: dict | None,
     quantize: float | None,
 ) -> DataFrame:
@@ -952,20 +957,27 @@ def _knn_tiled(
     The guard is evaluated as window aggregates inside the SAME shuffle
     as the ranking — no extra agg job, no broadcast of the proven set.
 
-    Phase 3 — adaptive escalation: an unproven query with >= k found
+    Then straight-line phases, a fixed plan like RIOS's one read, one
+    kernel run and one write per block (one stats job decides them):
+
+    Phase 3 — ONE escalation round: an unproven query with >= k found
     candidates knows its k-th distance, hence EXACTLY how wide a ring
     certifies it — one variable-radius pass (per-row k-ring explode on
     the QUERY side: the residue is the small side, so the (2r+1)^2
-    duplication lands on it, not on the data) proves nearly all of the
-    residue at once. Escalation is a true LOOP of up to max_escalations
-    rounds with a doubling radius floor; in exact arithmetic the radius
-    inversion certifies every escalatable query in ONE round, so later
-    rounds are a floating-point-edge safety net, and a query whose
-    radius hits the wrap-safe cap goes to the scan instead of looping.
-    Anything still unproven (including < k found) finishes in
-    distributed data scans with the residue queries broadcast in
-    bounded chunks (_knn_residual_scan, <= KNN_RESIDUAL_CHUNK rows on
-    the driver per pass). The data side is NEVER collected.
+    duplication lands on it, not on the data). The radius is one cell
+    past the inverted k-th distance in latitude and in longitude, and
+    the k-th distance inside that ring can only shrink, so the guard
+    certifies every such query unless its radius hit the wrap-safe cap.
+    A query escalates only when its ring is cheaper than a data scan
+    (the ring-utility bound); there is no second round.
+
+    Phase 4 — the exact residual scan: the pass-0 residue that could
+    not escalate (< k found, radius cap, ring dearer than a scan) plus
+    whatever the round left unproven finishes in distributed data
+    scans with the residue queries broadcast in bounded chunks
+    (_knn_residual_scan, <= KNN_RESIDUAL_CHUNK rows on the driver per
+    pass); a second round's candidate join would cost that data pass
+    too. The data side is NEVER collected.
 
     ring="auto" sizes the first ring from the data density so the
     first pass can actually PROVE most top-k sets: a ring-1 pass
@@ -1087,7 +1099,6 @@ def _knn_tiled(
         .agg(
             F.max("__nfound").alias("__nf"),
             F.max("__kth").alias("__kd"),
-            F.max(F.lit(int(ring))).alias("__r"),
         )
         .persist()
     )
@@ -1100,8 +1111,9 @@ def _knn_tiled(
 
     n = 1 << res_i
     max_radius = max(1, (n - 1) // 2)  # wider would wrap-duplicate in x
-    # residue with no usable distance bound (< k candidates seen) or
-    # already probed at the radius cap goes straight to the final scan.
+    # residue with no usable distance bound (< k candidates seen), or
+    # whose pass-0 ring is already the radius cap, goes straight to the
+    # scan.
     # RING-UTILITY bound (r6 — the sf0.01 inverse-scaling fix): when
     # data is sparse relative to the k-th distance, the ring radius a
     # query NEEDS makes the (2r+1)^2 k-ring explosion cost at least a
@@ -1119,26 +1131,23 @@ def _knn_tiled(
             / F.lit(180.0 / n)
         )
         + 1,
-        F.col("__r") * 2,
+        F.lit(2 * ring),
     )
     esc_pred = (
         (F.col("__nf") >= k)
         & F.col("__kd").isNotNull()
-        & (F.col("__r") < max_radius)
+        & F.lit(ring < max_radius)
         & ((2 * _lb_radius + 1) * (2 * _lb_radius + 1) < F.lit(int(n_data)))
     )
 
-    # one agg = one job per phase for BOTH control decisions (is the
-    # residue empty? is any of it escalatable?) — the phase counters
-    # (the RIOS Timers/metrics analogue) come from the same row free
-    def _residue_stats(bk: DataFrame) -> tuple[int, int]:
-        row = bk.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(esc_pred.cast("int")), F.lit(0)).alias("ne"),
-        ).first()
-        return int(row["n"]), int(row["ne"])
-
-    n_bad, n_esc = _residue_stats(bad_keys)
+    # one agg = one job for BOTH control decisions (is the residue
+    # empty? is any of it escalatable?) — the phase counters (the RIOS
+    # Timers/metrics analogue) come from the same row free
+    stats = bad_keys.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.sum(esc_pred.cast("int")), F.lit(0)).alias("ne"),
+    ).first()
+    n_bad, n_esc = int(stats["n"]), int(stats["ne"])
     if counters is not None:
         counters["ring0"] = ring
         counters["res_internal"] = res_i
@@ -1146,26 +1155,14 @@ def _knn_tiled(
     if n_bad == 0:
         return _finish(_union_all(outs))
 
-    n_residual = 0
-    residual_parts: list[DataFrame] = []
-    d_plain = data.select(
-        F.col(cell_i).alias("__probe"),
-        F.col(d_id).alias("neighbor_id"),
-        F.col(d_lat).alias("__dlat"),
-        F.col(d_lon).alias("__dlon"),
-    )
-    # adaptive escalation LOOP (round-2 ADVICE: the parameter now means
-    # what it says). Each round proves the escalatable residue or grows
-    # the radius floor 2x, so progress is guaranteed until max_radius;
-    # the guard re-check keeps every round exact.
-    for i in range(max_escalations):
-        # residue with no usable bound can't escalate — stage it for the
-        # final scan and keep looping on the escalatable part only
-        residual_parts.append(bad_keys.filter(~esc_pred).select(*part_cols))
-        n_residual += n_bad - n_esc
-        if n_esc == 0:
-            bad_keys = None
-            break
+    # the residue that cannot escalate goes to the scan as it stands
+    residual_keys = bad_keys.filter(~esc_pred).select(*part_cols)
+    if n_esc:
+        # ONE escalation round. An escalatable query KNOWS its k-th
+        # distance, so the ring that certifies it is computed, not
+        # searched for: a per-row k-ring explode on the QUERY side (the
+        # residue is the small side, so the (2r+1)^2 duplication lands
+        # on it, not on the data).
         esc = queries_i.join(F.broadcast(bad_keys.filter(esc_pred)), part_cols, "inner")
         # kth distance -> ring radius in cells, inverting the guard's
         # exact spherical edge distances in closed form. Because the
@@ -1178,6 +1175,11 @@ def _knn_tiled(
         #        1, no dlam < 90 deg works — take dlam = 90 deg, whose
         #        guard term is the over-the-pole distance (proven or
         #        not, the guard re-checks; unproven goes to the scan)
+        # One cell past each bound puts the ring strictly beyond the
+        # k-th distance pass 0 measured, and the k-th distance inside
+        # the wider ring can only shrink, so the guard certifies every
+        # query whose radius is not clamped to max_radius; what it
+        # leaves (fp edges, clamped radii) the exact scan answers.
         cell_lat_deg = 180.0 / n
         cell_lon_deg = 360.0 / n
         kth_deg = F.col("__kd") / F.lit(EARTH_RADIUS_KM * np.pi / 180.0)
@@ -1189,16 +1191,20 @@ def _knn_tiled(
             F.degrees(F.asin(sin_arg))
         )
         r_lon = F.ceil(dlam_deg / F.lit(cell_lon_deg))
-        # the doubling floor (__r * 2) makes re-escalation of a query
-        # whose computed radius was too optimistic strictly wider each
-        # round — no same-radius stall
+        # never narrower than twice the pass-0 ring, which already failed
         radius = F.least(
-            F.greatest(r_lat + 1, r_lon + 1, F.col("__r") * 2),
+            F.greatest(r_lat + 1, r_lon + 1, F.lit(2 * ring)),
             F.lit(max_radius),
         ).cast("int")
         probe = esc.withColumn("__radius", radius).withColumn(
             "__probe",
             F.explode(kring_cells_var_col(F.col(cell_i), res_i, F.col("__radius"))),
+        )
+        d_plain = data.select(
+            F.col(cell_i).alias("__probe"),
+            F.col(d_id).alias("neighbor_id"),
+            F.col(d_lat).alias("__dlat"),
+            F.col(d_lon).alias("__dlon"),
         )
         cand_r = probe.join(d_plain, "__probe", "left").drop("__probe")
         ranked_r = _track(
@@ -1208,52 +1214,23 @@ def _knn_tiled(
             ).persist()
         )
         outs.append(ranked_r.filter(F.col("__proved")).select(*out_cols))
-        bad_keys = _track(
-            ranked_r.filter(~F.col("__proved"))
-            .groupBy(*part_cols)
-            .agg(
-                F.max("__nfound").alias("__nf"),
-                F.max("__kth").alias("__kd"),
-                F.max("__radius").alias("__r"),
-            )
-            .persist()
+        residual_keys = residual_keys.unionByName(
+            ranked_r.filter(~F.col("__proved")).select(*part_cols)
         )
-        if i == max_escalations - 1:
-            # LAST round (r6 fusion): everything still unproven goes to
-            # the scan regardless, so this round's control-stats job is
-            # pure fixed cost — skip it. The residue is bounded by
-            # n_esc (only escalated keys can remain unproven), which
-            # keeps the scan's driver collect bounded; the collect
-            # itself discovers the exact (possibly zero) count in the
-            # same job that fetches the rows.
-            if counters is not None:
-                counters[f"unproven_escalation_{i}"] = n_esc  # upper bound
-            n_bad = None
-            break
-        n_bad, n_esc = _residue_stats(bad_keys)
         if counters is not None:
-            counters[f"unproven_escalation_{i}"] = n_bad
-        if n_bad == 0:
-            bad_keys = None
-            break
-    if bad_keys is not None:
-        residual_parts.append(bad_keys.select(*part_cols))
-        n_residual += n_bad if n_bad is not None else n_esc
-    # a key either escalates or is staged for the scan exactly once, so
-    # the arithmetic total IS the residual count (an upper bound after
-    # a fused final round — the scan's empty-collect fast-out makes an
-    # over-count cost one tiny job, never a wrong result)
-    if counters is not None:
-        counters["residual_scan"] = n_residual
-    if n_residual == 0:
-        return _finish(_union_all(outs))
-    residual_keys = _union_all(residual_parts).distinct()
-    bad_q = queries.join(F.broadcast(residual_keys), part_cols, "left_semi")
-    fixed = _knn_residual_scan(
-        bad_q, data, k, part_cols, q_lat, q_lon, d_lat, d_lon, d_id,
-        quantize=quantize, n_residue_hint=n_residual,
-    ).select(*out_cols)
-    outs.append(fixed)
+            # no stats job here: an upper bound, only escalated keys
+            # can remain unproven
+            counters["unproven_escalation_0"] = n_esc
+    # the exact residual scan: the pass-0 residue bounds its keys, and
+    # its collect finds how many are left (possibly none) in the same
+    # job that fetches them
+    bad_q = queries.join(F.broadcast(residual_keys.distinct()), part_cols, "left_semi")
+    outs.append(
+        _knn_residual_scan(
+            bad_q, data, k, part_cols, q_lat, q_lon, d_lat, d_lon, d_id,
+            quantize=quantize, n_residue_hint=n_bad, counters=counters,
+        ).select(*out_cols)
+    )
     return _finish(_union_all(outs))
 
 

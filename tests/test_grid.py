@@ -259,33 +259,31 @@ def test_utm_ingest_to_cells_matches_direct(spark):
 
 
 def test_kring_var_radius_matches_fixed(spark):
-    """kring_cells_var_col(r) == kring_cells_col(k=r) for every row —
-    the per-row-radius variant used by adaptive kNN escalation."""
+    """kring_cells_var_col == the numpy oracle np_kring for every row,
+    at literal radii 1-3 and at a per-row radius column (the adaptive
+    kNN escalation's form), poles and the antimeridian included."""
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from rios_spark.grid import cell_col, kring_cells_col, kring_cells_var_col
+    from rios_spark.grid import cell_col, kring_cells_var_col
 
     rng = np.random.default_rng(2)
     pdf = pd.DataFrame(
-        {"lat": rng.uniform(-89, 89, 200), "lon": rng.uniform(-180, 180, 200),
+        {"lat": rng.uniform(-89.9, 89.9, 200), "lon": rng.uniform(-180, 180, 200),
          "r": rng.integers(1, 4, 200)}
     )
     df = spark.createDataFrame(pdf).withColumn("cell", cell_col("lat", "lon", 5))
     for r in (1, 2, 3):
-        sub = df.filter(F.col("r") == r)
-        got = sub.select(
-            F.array_sort(kring_cells_var_col(F.col("cell"), 5, F.lit(r))).alias("a"),
-            F.array_sort(kring_cells_col(F.col("cell"), 5, r)).alias("b"),
+        got = df.select(
+            "cell", F.array_sort(kring_cells_var_col(F.col("cell"), 5, F.lit(r))).alias("a"),
         ).toPandas()
-        for a, b in zip(got["a"], got["b"]):
-            assert list(a) == list(b)
-    # per-row radius in one pass
+        for cell, a in zip(got["cell"], got["a"]):
+            assert list(a) == sorted(grid.np_kring(int(cell), r).tolist())
     got = df.select(
-        F.array_sort(kring_cells_var_col(F.col("cell"), 5, F.col("r"))).alias("a"),
-        "r", "cell",
+        "cell", "r", F.array_sort(kring_cells_var_col(F.col("cell"), 5, F.col("r"))).alias("a"),
     ).toPandas()
-    assert all(len(a) <= (2 * r + 1) ** 2 for a, r in zip(got["a"], got["r"]))
+    for cell, r, a in zip(got["cell"], got["r"], got["a"]):
+        assert list(a) == sorted(grid.np_kring(int(cell), int(r)).tolist())
 
 
 def test_reproject_to_lonlat_dispatcher(spark):

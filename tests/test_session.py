@@ -1,5 +1,5 @@
 """Session factory: Python workers of a local master import rios_spark
-from any working directory."""
+from any working directory; the default driver heap fits the host."""
 
 from __future__ import annotations
 
@@ -38,3 +38,16 @@ def test_local_workers_import_package_outside_checkout(tmp_path):
         capture_output=True, text=True, timeout=300,
     )
     assert "WORKERS_OK" in proc.stdout, proc.stderr[-3000:]
+
+
+def test_driver_memory_default_fits_host(monkeypatch):
+    """$SPARK_DRIVER_MEM wins; unset, the heap is min(24g, RAM / 2)."""
+    from rios_spark.session import _driver_memory
+
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "3g")
+    assert _driver_memory() == "3g"
+    monkeypatch.delenv("SPARK_DRIVER_MEM")
+    with open("/proc/meminfo") as f:
+        total_mb = int(f.readline().split()[1]) // 1024
+    mb = int(_driver_memory().rstrip("m"))
+    assert abs(mb - min(24 * 1024, total_mb // 2)) <= 1

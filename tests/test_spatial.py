@@ -100,6 +100,53 @@ def test_pip_join_row_level(spark):
     assert (out["page_id"] == 0).all()
 
 
+def _star_polygons(centres, n_vertices, seed):
+    """Star-shaped rings (radius 2-6 degrees, wobbling) around `centres`."""
+    rng = np.random.default_rng(seed)
+    t = np.linspace(0.0, 2.0 * np.pi, n_vertices, endpoint=False)
+    rows = []
+    for i, (clat, clon) in enumerate(centres):
+        r = 4.0 + 2.0 * np.sin(7.0 * t + rng.uniform(0, np.pi))
+        rows.append({"polygon_id": 100 + i, "xs": list(clon + r * np.cos(t)),
+                     "ys": list(clat + 0.5 * r * np.sin(t))})
+    return pd.DataFrame(rows)
+
+
+def test_pip_join_same_rows_on_both_kernels(spark, monkeypatch):
+    """pip_join picks its exact test by total vertex count
+    (sizing.PIP_EXPR_MAX_VERTICES): the JVM expression up to the gate,
+    the Arrow numpy kernel past it. Both sides of the gate, forced by
+    the gate itself, give the same rows as the numpy ray-cast oracle —
+    on the fixture polygons and on a star set past the default gate."""
+    res = 5
+    df, pages = _pages_df(spark, 3000, res)
+    inner = pages[pages["lon"].abs() < 150]
+    centres = inner[["lat", "lon"]].to_numpy()[[0, 300, 600, 900]]
+    stars = _star_polygons(centres, 700, seed=3)
+    assert sum(len(x) for x in stars["xs"]) > sizing.PIP_EXPR_MAX_VERTICES
+    lon = pages["lon"].to_numpy()
+    lat = pages["lat"].to_numpy()
+    for polys in (datagen.gen_polygons()[["polygon_id", "xs", "ys"]], stars):
+        want = sorted(
+            (int(pid), int(page))
+            for _, p in polys.iterrows()
+            for pid, page in zip(
+                [p["polygon_id"]] * len(pages),
+                pages["page_id"].to_numpy()[spatial.ray_cast(
+                    lon, lat, np.asarray(p["xs"]), np.asarray(p["ys"]))],
+            )
+        )
+        assert want
+        columns = []
+        for gate in (10**9, 0):  # expression, then Arrow kernel
+            monkeypatch.setattr(sizing, "PIP_EXPR_MAX_VERTICES", gate)
+            out = spatial.pip_join(df, polys, res).toPandas()
+            columns.append(list(out.columns))
+            got = sorted(zip(out["polygon_id"].astype(int), out["page_id"].astype(int)))
+            assert got == want
+        assert columns[0] == columns[1]
+
+
 def _brute_oracle(qdf, ddf, k):
     d = spatial.haversine_km(
         qdf["lat"].to_numpy()[:, None],
@@ -616,14 +663,14 @@ def test_resample_cubic_k16_matches_numpy_kernel(spark):
 
 def test_knn_tiled_phase_counters(spark):
     """Observability: the counters dict reports how many queries each
-    phase resolved — and the adaptive escalation actually proves
-    queries that pass 0 could not (nfound >= k but kth >= guard)."""
+    phase resolved — and the escalation round actually proves queries
+    that pass 0 could not (nfound >= k but kth >= guard)."""
     res = 5
     rng = np.random.default_rng(55)
     # DENSE data with a deliberately-too-small first ring: ring-1 finds
     # candidates but often cannot certify them, and the data is dense
     # enough that the r6 ring-utility bound ((2*lb+1)^2 < n_data) says
-    # escalating beats scanning — so the escalation loop does real
+    # escalating beats scanning — so the escalation round does real
     # work. (A sparse fixture now correctly routes the residue straight
     # to the scan, which test_knn_tiled_sparse_goes_to_scan pins.)
     ddf = pd.DataFrame(
@@ -649,11 +696,48 @@ def test_knn_tiled_phase_counters(spark):
         ):
             assert gi == wi and gd == pytest.approx(wd, rel=1e-9)
     assert counters["unproven_pass0"] > 0
-    # the escalation loop ran and resolved some (or all) of the pass-0
+    # the escalation round ran and resolved some (or all) of the pass-0
     # residue; whatever is left went to the (chunked) residual scan
     assert "unproven_escalation_0" in counters
     assert counters["unproven_escalation_0"] <= counters["unproven_pass0"]
     assert counters["residual_scan"] <= counters["unproven_pass0"]
+
+
+def test_knn_tiled_round_leftovers_go_to_scan(spark, monkeypatch):
+    """There is one escalation round; what it leaves unproven goes to
+    the exact residual scan beside the pass-0 keys that could not
+    escalate. The round's guard is weakened for odd query ids, so half
+    its keys are left over: the answer still equals brute force, and
+    the counters show the scan took the leftovers."""
+    from pyspark.sql import functions as F
+
+    rank_and_prove = spatial._rank_and_prove
+
+    def weak_round(cand, part_cols, k, res, ring, *args, **kwargs):
+        out = rank_and_prove(cand, part_cols, k, res, ring, *args, **kwargs)
+        if isinstance(ring, int):  # pass 0
+            return out
+        return out.withColumn("__proved", F.col("__proved") & (F.col("qid") % 2 == 0))
+
+    monkeypatch.setattr(spatial, "_rank_and_prove", weak_round)
+    res = 5
+    rng = np.random.default_rng(55)
+    ddf = pd.DataFrame(
+        {"id": np.arange(400), "lat": rng.uniform(-60, 60, 400), "lon": rng.uniform(-170, 170, 400)}
+    )
+    qdf = pd.DataFrame(
+        {"qid": np.arange(60), "lat": rng.uniform(-60, 60, 60), "lon": rng.uniform(-170, 170, 60)}
+    )
+    queries, data = _knn_frames(spark, qdf, ddf, res)
+    counters = {}
+    got = spatial.knn_tiled(
+        queries, data, 3, res, ring=1, d_id="id", q_id="qid", counters=counters
+    ).toPandas()
+    _assert_matches_oracle(got, qdf, ddf, 3)
+    escalated = counters["unproven_escalation_0"]
+    not_escalated = counters["unproven_pass0"] - escalated
+    assert escalated >= 4
+    assert not_escalated < counters["residual_scan"] < counters["unproven_pass0"]
 
 
 def test_knn_tiled_polar_queries_exact(spark, monkeypatch):
@@ -707,10 +791,7 @@ def test_knn_residual_scan_chunked_exact(spark, monkeypatch):
     monkeypatch.setattr(sizing, "KNN_BRUTE_PAIR_BUDGET", 0)
     counters = {}
     got = (
-        spatial.knn_tiled(
-            queries, data, 3, res, d_id="id", q_id="qid",
-            max_escalations=0, counters=counters,
-        )
+        spatial.knn_tiled(queries, data, 3, res, d_id="id", q_id="qid", counters=counters)
         .toPandas().sort_values(["qid", "rank"])
     )
     assert counters["branch"] == "tiled"
@@ -858,7 +939,7 @@ def test_knn_tiled_registers_caches_incrementally(spark, monkeypatch):
 def test_knn_tiled_sparse_goes_to_scan(spark, monkeypatch):
     """r6 ring-utility bound: on SPARSE data the k-th distances are so
     large that any certifying ring's (2r+1)^2 explosion costs at least
-    a full data scan — the residue must skip the escalation loop
+    a full data scan — the residue must skip the escalation round
     entirely (measured 4.5x wall at sf0.01 when it didn't) and resolve
     exactly in the residual scan."""
     res = 5
@@ -1094,6 +1175,54 @@ def test_knn_tiled_small_batch_gate(spark, monkeypatch):
     got, c = run(big)
     assert c["branch"] == "brute" and c["q_rows"] > c["n_data"]
     _assert_matches_oracle(got, qbig, ddf, 3)
+
+
+def test_knn_join_bounded_count_cap_fits_jvm_int(spark, monkeypatch, tmp_path):
+    """A raised brute pair budget against a tiny data side puts the
+    bounded count's cap (budget // N = 2e11) past the JVM int that
+    DataFrame.limit takes. The cap is clamped, the 40-row query frame
+    without a footer count still takes the brute kernel, and the
+    answer equals the numpy oracle. k < 1 raises."""
+    monkeypatch.setattr(sizing, "KNN_BRUTE_PAIR_BUDGET", 10**12)
+    rng = np.random.default_rng(47)
+    qdf = pd.DataFrame({"qid": np.arange(60), "lat": rng.uniform(-40, 40, 60),
+                        "lon": rng.uniform(-40, 40, 60)})
+    ddf = pd.DataFrame({"id": np.arange(5), "lat": rng.uniform(-45, 45, 5),
+                        "lon": rng.uniform(-45, 45, 5)})
+    qpath = str(tmp_path / "queries.parquet")
+    spark.createDataFrame(qdf).write.parquet(qpath)
+    queries = spark.read.parquet(qpath).filter("qid % 3 != 0")
+    assert sizing.footer_count(queries) is None
+    data = spark.createDataFrame(ddf)
+    counters: dict = {}
+    got = spatial.knn_join(queries, data, 3, 4, d_id="id", q_id="qid",
+                           counters=counters).toPandas()
+    assert counters["branch"] == "brute" and counters["q_rows"] == 40
+    _assert_matches_oracle(got, qdf[qdf["qid"] % 3 != 0].reset_index(drop=True), ddf, 3)
+    with pytest.raises(ValueError, match="k >= 1"):
+        spatial.knn_join(queries, data, 0, 4, d_id="id")
+
+
+def test_knn_branch_clamped_count_fails_closed(monkeypatch):
+    """A bounded count that reaches the clamped cap proves only "more
+    than the cap", so the gate takes the tiled path."""
+
+    class Rows:
+        isStreaming = False
+
+        def limit(self, n):
+            assert n <= 2**31 - 1
+            self.n = n
+            return self
+
+        def count(self):
+            return self.n  # the frame is at least as long as the limit
+
+    monkeypatch.setattr(sizing, "footer_count", lambda df: None)
+    monkeypatch.setattr(sizing, "KNN_BRUTE_PAIR_BUDGET", 10**12)
+    rows = Rows()
+    assert sizing.knn_branch(rows, 5, 3) == ("tiled", 2**31 - 1)
+    assert rows.n == 2**31 - 1
 
 
 def test_knn_tiled_unknown_query_count_fails_closed(spark, monkeypatch, tmp_path):

@@ -325,6 +325,50 @@ def test_embedding_near_dup(spark, embs):
     assert planted <= found
 
 
+def test_embedding_near_dup_bucket_pairs_bounded(spark, monkeypatch):
+    """The within-bucket pair kernel (shared with the exact mode's
+    within-block tasks) builds its similarity matrix in chunks of at
+    most sizing.GEMM_BUDGET elements. With a 400-element budget, buckets
+    wider than sqrt(400) = 20 rows still give every same-bucket pair at
+    or above the threshold (the numpy all-pairs oracle on the same
+    hyperplane keys), each once, with the f64 cosine."""
+    from rios_spark.plans import sizing
+
+    monkeypatch.setattr(sizing, "GEMM_BUDGET", 400)
+    rng = np.random.default_rng(17)
+    dim, planes, thr = 8, 2, 0.95
+    centres = rng.normal(size=(3, dim))
+    embs = np.concatenate(
+        [c + rng.normal(scale=0.02, size=(30, dim)) for c in centres]
+        + [rng.normal(size=(30, dim))]
+    ).astype(np.float32)  # what Spark stores
+    ids = rng.permutation(len(embs)).astype(np.int64)
+    mat = embs.astype(np.float64)
+    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+    sim = mat @ mat.T
+    # the same hyperplanes embedding_near_dup draws from its seed
+    keys = dedup._hyperplane_keys(mat, np.random.default_rng(42).normal(size=(dim, planes)))
+    assert np.bincount(np.unique(keys, return_inverse=True)[1]).max() > 20
+    iu = np.triu_indices(len(embs), k=1)
+    assert np.abs(sim[iu] - thr).min() > 1e-6  # no pair on the threshold
+    hit = (sim[iu] >= thr) & (keys[iu[0]] == keys[iu[1]])
+    want = {
+        (min(ids[i], ids[j]), max(ids[i], ids[j])): sim[i, j]
+        for i, j in zip(iu[0][hit], iu[1][hit])
+    }
+    assert len(want) >= 100
+
+    pdf = pd.DataFrame({"vec_id": ids, "embedding": list(embs)})
+    got = dedup.embedding_near_dup(
+        spark.createDataFrame(pdf), "embedding", "vec_id", threshold=thr,
+        planes=planes, seed=42,
+    ).toPandas()
+    pairs = list(zip(got["id1"], got["id2"]))
+    assert len(pairs) == len(set(pairs)) and set(pairs) == set(want)
+    for a, b, c in zip(got["id1"], got["id2"], got["cosine"]):
+        assert c == pytest.approx(want[(a, b)], abs=1e-12)
+
+
 def _brute_cosine_oracle(qdf, ddf, k):
     qm = np.stack(qdf["embedding"].map(np.asarray)).astype(np.float64)
     dm = np.stack(ddf["embedding"].map(np.asarray)).astype(np.float64)
