@@ -640,12 +640,15 @@ def _encode_and_write(
         # one kernel pass feeding every write: the shuffled frame is
         # persisted so later writes replay cached partitions
         frame = frame.persist()
-    for table, col in writes:
-        frame.select("list_id", d_id, col).write.mode(mode).partitionBy(
-            "list_id"
-        ).parquet(f"{path}/{table}")
-    if len(writes) > 1:
-        frame.unpersist(blocking=False)
+    try:
+        for table, col in writes:
+            frame.select("list_id", d_id, col).write.mode(mode).partitionBy(
+                "list_id"
+            ).parquet(f"{path}/{table}")
+    finally:
+        if len(writes) > 1:
+            # released on failure too, so a failed write strands nothing
+            frame.unpersist(blocking=False)
     got = obs.get
     n = int(got["n"])
     return (float(got["acos"]) if n else float("nan")), n
@@ -958,20 +961,21 @@ def _probe_frame(
 
 
 def _probe(
-    spark, op: str, queries: DataFrame, centroids: np.ndarray, nprobe: int, shards: int,
+    spark, queries: DataFrame, centroids: np.ndarray, nprobe: int, shards: int,
     q_id: str, q_emb: str, q_rows_hint: int | None,
 ) -> tuple[DataFrame, list[int]]:
     """Probe step of the persisted-index searches: (probe frame, the
     distinct probed list ids the caller pushes into its table read as a
-    list_id partition filter). `op` is the session cache-registry key.
+    list_id partition filter).
     Cheapest first: a batch of <= sizing.IVF_DRIVER_PROBE_ROWS
     (q_rows_hint) is probed driver-side from one collect (one Spark job
     per search instead of three); nprobe >= n_centroids probes every
-    list, so the ids need no job and the frame no persist; otherwise
-    the frame is persisted (registered so the next plan-distinct call
-    frees it, ADVICE r3) and its distinct list ids collected."""
-    from rios_spark.session import track_caches
-
+    list, so the ids need no job and the frame no checkpoint; otherwise
+    the frame is local-checkpointed and its distinct list ids
+    collected. The checkpoint belongs to the returned frame's lineage
+    (Spark's ContextCleaner frees it once the search result is dropped;
+    no session state holds it); a block lost with an executor fails
+    the reading job instead of being recomputed."""
     if q_rows_hint is not None and 0 < q_rows_hint <= sizing.IVF_DRIVER_PROBE_ROWS:
         rep = _probe_rows(
             queries.select(q_id, q_emb).toPandas(), centroids, nprobe, shards, q_id, q_emb
@@ -979,14 +983,11 @@ def _probe(
         probed = spark.createDataFrame(
             rep, schema=f"{q_id} long, {q_emb} array<float>, list_id int"
         )
-        track_caches(spark, op, [])
         return probed, [int(x) for x in np.unique(rep["list_id"])]
     probed = _probe_frame(queries, centroids, nprobe, shards, q_id, q_emb)
     if nprobe >= len(centroids):
-        track_caches(spark, op, [])
         return probed, list(range(len(centroids) * shards))
-    probed = probed.persist()
-    track_caches(spark, op, [probed])
+    probed = probed.localCheckpoint(eager=False)
     return probed, [int(r[0]) for r in probed.select("list_id").distinct().collect()]
 
 
@@ -1019,7 +1020,7 @@ def ivf_search(
             "with ivf_build_index(pq=True) for both tables"
         )
     probed, probe_ids = _probe(
-        spark, "ivf_search", queries, centroids, nprobe, int(meta["list_shards"]),
+        spark, queries, centroids, nprobe, int(meta["list_shards"]),
         q_id, q_emb, q_rows_hint,
     )
     pruned = spark.read.parquet(f"{path}/assigned").filter(
@@ -1237,7 +1238,7 @@ def ivf_pq_search(
     residual = str(meta.get("pq_encoding", "raw")) == "residual"
     bc = spark.sparkContext.broadcast((coarse, codebooks))
     probed, probe_ids = _probe(
-        spark, "ivf_pq_search", queries, coarse, nprobe, shards, q_id, q_emb, None
+        spark, queries, coarse, nprobe, shards, q_id, q_emb, None
     )
     pruned = codes.filter(F.col("list_id").isin(probe_ids))
 

@@ -556,7 +556,7 @@ def embedding_all_pairs_exact(
         (F.least("__b", "__o") * nblocks + F.greatest("__b", "__o")).cast("long"),
     )
 
-    def pairs_task(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pairs_task(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         task = int(key[0])
         lo, hi = task // nblocks, task % nblocks
         if len(pdf) < 2:
@@ -634,7 +634,7 @@ def embedding_near_dup(
         bucketize, "id long, bucket long, emb array<float>"
     )
 
-    def pairs_in_bucket(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pairs_in_bucket(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
             return _empty_pairs()
         return _pairs_above(pdf["id"].to_numpy(np.int64), _norm_mat(pdf), threshold)
@@ -687,7 +687,7 @@ def embedding_near_dup(
         .drop("__ns")
     )
 
-    def star_in_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def star_in_shard(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
             return _empty_pairs()
         ids = pdf["id"].to_numpy(np.int64)

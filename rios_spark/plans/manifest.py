@@ -93,34 +93,37 @@ class Manifest:
         run_id = uuid.uuid4().hex[:12]
         all_cells = df.select(F.col(cell).alias("cell")).distinct()
         pending = self.pending_cells(all_cells, job_id, stage).cache()
-        n_total = all_cells.count()
-        n_pending = pending.count()
-        if n_pending == 0:
-            return {"cells_total": n_total, "cells_pending": 0, "rows_written": 0}
+        # released on every exit: nothing pending, a failed write, or done
+        try:
+            n_total = all_cells.count()
+            n_pending = pending.count()
+            if n_pending == 0:
+                return {"cells_total": n_total, "cells_pending": 0, "rows_written": 0}
 
-        subset = df.join(F.broadcast(pending), df[cell] == pending["cell"], "left_semi")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        subset.write.mode("overwrite").partitionBy(cell).parquet(out_path)
+            subset = df.join(F.broadcast(pending), df[cell] == pending["cell"], "left_semi")
+            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+            subset.write.mode("overwrite").partitionBy(cell).parquet(out_path)
 
-        nbytes = (
-            F.sum(F.octet_length(F.col(payload_col))) if payload_col else F.lit(8) * F.count("*")
-        )
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        metrics = (
-            subset.groupBy(F.col(cell).alias("cell"))
-            .agg(F.count("*").alias("n_rows"), nbytes.cast("long").alias("n_bytes"))
-            .select(
-                F.lit(job_id).alias("job_id"),
-                F.lit(stage).alias("stage"),
-                "cell",
-                "n_rows",
-                "n_bytes",
-                F.lit(wall_ms).alias("wall_ms"),
-                F.lit("done").alias("status"),
-                F.lit(run_id).alias("run_id"),
+            nbytes = (
+                F.sum(F.octet_length(F.col(payload_col))) if payload_col else F.lit(8) * F.count("*")
             )
-        )
-        self.append(metrics)
-        rows = subset.count()
-        pending.unpersist()
-        return {"cells_total": n_total, "cells_pending": n_pending, "rows_written": rows}
+            wall_ms = int((time.monotonic() - t0) * 1000)
+            metrics = (
+                subset.groupBy(F.col(cell).alias("cell"))
+                .agg(F.count("*").alias("n_rows"), nbytes.cast("long").alias("n_bytes"))
+                .select(
+                    F.lit(job_id).alias("job_id"),
+                    F.lit(stage).alias("stage"),
+                    "cell",
+                    "n_rows",
+                    "n_bytes",
+                    F.lit(wall_ms).alias("wall_ms"),
+                    F.lit("done").alias("status"),
+                    F.lit(run_id).alias("run_id"),
+                )
+            )
+            self.append(metrics)
+            rows = subset.count()
+            return {"cells_total": n_total, "cells_pending": n_pending, "rows_written": rows}
+        finally:
+            pending.unpersist()

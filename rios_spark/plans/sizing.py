@@ -98,7 +98,7 @@ KNN_SCAN_PAIR_BUDGET = 100_000_000
 # Data-side row bound of a STREAMING query side: 2M rows x 3 float64
 # (id, lat, lon) = ~48 MB per executor. A stream can only map through
 # the broadcast brute kernel (the scan collects its queries, the tiled
-# phases persist and run actions), so above this bound knn_branch
+# phases checkpoint and run actions), so above this bound knn_branch
 # raises instead of planning a broadcast it cannot afford. Batch
 # frames never read it: KNN_BRUTE_PAIR_BUDGET already bounds their
 # broadcast data side.
@@ -111,7 +111,7 @@ ANN_BROADCAST_ROWS = 500_000
 
 # Query-batch size up to which the IVF searches probe driver-side from
 # ONE bounded collect (rows x dim x 4 B — 10k x 128d = ~5 MB) instead of
-# a distributed probe stage + persist + pruning-collect job. The
+# a distributed probe stage + checkpoint + pruning-collect job. The
 # steady-state micro-batch serving shape.
 IVF_DRIVER_PROBE_ROWS = 10_000
 

@@ -869,11 +869,14 @@ def knn_join(
     - "scan": Q <= N and Q x N fits sizing.KNN_SCAN_PAIR_BUDGET — the
       queries are broadcast and the data streams once through the
       exact per-task top-k (_knn_residual_scan over the whole query
-      frame; exact by construction, so no guard, persist or
+      frame; exact by construction, so no guard, checkpoint or
       escalation);
     - "tiled": every other input and every explicit `ring` — the
       distributed k-ring candidate join and completeness guard, at most
       one escalation round, then the exact residual scan (_knn_tiled).
+      Its intermediates are local checkpoints owned by the returned
+      DataFrame and freed with it; one lost to an executor failure
+      fails the reading job rather than being recomputed.
     An unknown query count is settled by one bounded count, never
     assumed small. `counters` records branch, q_rows, n_data and pairs
     (q_rows is cap + 1 when the bounded count stopped early: "more than
@@ -995,7 +998,18 @@ def _knn_tiled(
     through to the output untouched. Without `q_id`, a synthetic
     unique key stands in, so repeated query rows each get their own k
     neighbours. Streaming frames never reach here (sizing.knn_branch):
-    the phases persist frames and run actions.
+    the phases checkpoint frames and run actions.
+
+    Lifetime: the synthetic-id frame, the pass-0 and round top-k frames
+    and the bad-key frame are local checkpoints (localCheckpoint(eager=
+    False)), not cache entries. Their blocks belong to the returned
+    DataFrame's lineage: no session state holds them, an exception
+    between phases strands nothing, and Spark's ContextCleaner frees
+    them once the caller drops the result and the JVM collects it. A
+    result read again later gives the rows of its first read, the
+    synthetic ids included. The trade: a local checkpoint is not
+    recomputed after executor loss, so a job reading a lost block
+    fails instead of renumbering the queries.
     """
     import math
 
@@ -1027,37 +1041,19 @@ def _knn_tiled(
         width = math.sqrt(need / max(density, 1e-12))
         ring = max(1, min(int((width - 1) / 2) + 1, KNN_AUTO_RING_MAX))
 
-    # every persisted intermediate is registered with the session cache
-    # registry THE MOMENT it is persisted (ADVICE r4: registration only
-    # on the return paths left frames persisted-but-untracked if an
-    # action raised mid-operator — unfreeable even by release_caches).
-    # Registration never releases; _finish hands the COMPLETE new
-    # generation to track_caches, which releases only the previous
-    # generation's plan-distinct frames (ADVICE r3 — and releasing
-    # per-registration instead was itself a measured ~25% regression,
-    # see session.register_caches).
-    from rios_spark.session import register_caches, track_caches
-
-    cached: list[DataFrame] = []
-
-    def _track(df: DataFrame) -> DataFrame:
-        cached.append(df)
-        register_caches(queries.sparkSession, "knn_tiled", [df])
-        return df
-
     # the ranking window and every later join are keyed on ONE unique
     # query id. Without a caller id, a synthetic one: keying on the
     # query columns would merge duplicate query rows into one window
     # partition and fill their top-k with repeated neighbours. It is
-    # persisted so the escalation and residual joins see the ids pass 0
-    # ranked (a recomputed monotonically_increasing_id need not repeat
-    # over a shuffled input).
+    # checkpointed so the escalation and residual joins see the ids
+    # pass 0 ranked (a recomputed monotonically_increasing_id need not
+    # repeat over a shuffled input).
     base_queries = queries
     if q_id is None:
         q_id = "__q_id"
-        queries = _track(
-            queries.withColumn(q_id, F.monotonically_increasing_id()).persist()
-        )
+        queries = queries.withColumn(
+            q_id, F.monotonically_increasing_id()
+        ).localCheckpoint(eager=False)
     part_cols = [q_id]
     # the working cells at res_i, in a private column so a caller's
     # `cell` values pass through to the output untouched
@@ -1078,36 +1074,28 @@ def _knn_tiled(
         F.col(d_lon).alias("__dlon"),
     )
     cand = queries_i.join(d_exp, cell_i, "left")
-    # persist the top-k frame (queries x k rows — tiny next to the
+    # checkpoint the top-k frame (queries x k rows — tiny next to the
     # candidate join producing it): the completeness check below and the
     # final output would otherwise EACH re-execute the join+window
     # (actions do not share shuffle stages across jobs)
-    ranked = _track(
-        _rank_and_prove(
-            cand, part_cols, k, res_i, ring, q_lat, q_lon, quantize=quantize,
-            cell=cell_i,
-        ).persist()
-    )
+    ranked = _rank_and_prove(
+        cand, part_cols, k, res_i, ring, q_lat, q_lon, quantize=quantize,
+        cell=cell_i,
+    ).localCheckpoint(eager=False)
     outs = [ranked.filter(F.col("__proved")).select(*out_cols)]
     # per-query escalation plan: an unproven query with >= k candidates
     # KNOWS its k-th distance, hence exactly how wide a ring certifies
     # it; queries with < k candidates seen have no bound and go straight
     # to the residual scan
-    bad_keys = _track(
+    bad_keys = (
         ranked.filter(~F.col("__proved"))
         .groupBy(*part_cols)
         .agg(
             F.max("__nfound").alias("__nf"),
             F.max("__kth").alias("__kd"),
         )
-        .persist()
+        .localCheckpoint(eager=False)
     )
-
-    def _finish(df: DataFrame) -> DataFrame:
-        # the generation is complete: release everything registered
-        # under this key that the new generation's plans don't share
-        track_caches(queries.sparkSession, "knn_tiled", cached)
-        return df
 
     n = 1 << res_i
     max_radius = max(1, (n - 1) // 2)  # wider would wrap-duplicate in x
@@ -1153,7 +1141,7 @@ def _knn_tiled(
         counters["res_internal"] = res_i
         counters["unproven_pass0"] = n_bad
     if n_bad == 0:
-        return _finish(_union_all(outs))
+        return _union_all(outs)
 
     # the residue that cannot escalate goes to the scan as it stands
     residual_keys = bad_keys.filter(~esc_pred).select(*part_cols)
@@ -1207,12 +1195,10 @@ def _knn_tiled(
             F.col(d_lon).alias("__dlon"),
         )
         cand_r = probe.join(d_plain, "__probe", "left").drop("__probe")
-        ranked_r = _track(
-            _rank_and_prove(
-                cand_r, part_cols, k, res_i, F.col("__radius"), q_lat, q_lon,
-                quantize=quantize, cell=cell_i,
-            ).persist()
-        )
+        ranked_r = _rank_and_prove(
+            cand_r, part_cols, k, res_i, F.col("__radius"), q_lat, q_lon,
+            quantize=quantize, cell=cell_i,
+        ).localCheckpoint(eager=False)
         outs.append(ranked_r.filter(F.col("__proved")).select(*out_cols))
         residual_keys = residual_keys.unionByName(
             ranked_r.filter(~F.col("__proved")).select(*part_cols)
@@ -1231,7 +1217,7 @@ def _knn_tiled(
             quantize=quantize, n_residue_hint=n_bad, counters=counters,
         ).select(*out_cols)
     )
-    return _finish(_union_all(outs))
+    return _union_all(outs)
 
 
 def _union_all(dfs: list[DataFrame]) -> DataFrame:

@@ -122,6 +122,33 @@ def test_manifest_resume(spark, pages, tmp_path):
     assert (m["n_bytes"] > 0).all()
 
 
+def test_manifest_run_stage_releases_pending(spark, tmp_path, monkeypatch):
+    """run_stage caches the pending-cell frame for its own jobs only: it
+    is released after a stage that writes, after one with nothing
+    pending, and after one whose write raises."""
+    from pyspark.sql import DataFrameWriter
+
+    spark.catalog.clearCache()
+    man = Manifest(spark, str(tmp_path / "manifest"))
+    out = str(tmp_path / "out")
+    df = spark.createDataFrame(
+        pd.DataFrame({"cell": np.arange(12) % 4, "page_id": np.arange(12), "url": ["u"] * 12})
+    )
+    empty = spark._jsparkSession.sharedState().cacheManager().isEmpty
+    assert man.run_stage("job", "s1", df, out, payload_col="url")["cells_pending"] == 4
+    assert empty()
+    assert man.run_stage("job", "s1", df, out, payload_col="url")["cells_pending"] == 0
+    assert empty()
+
+    def boom(self, *args, **kwargs):
+        raise RuntimeError("injected write failure")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        man.run_stage("job", "s2", df, str(tmp_path / "out2"), payload_col="url")
+    assert empty()
+
+
 def test_write_read_tiled_partition_pruning(spark, pages, tmp_path):
     path = str(tmp_path / "tiled")
     sources.write_tiled(pages, path, RES)

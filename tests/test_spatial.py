@@ -865,75 +865,95 @@ def test_knn_tiled_antimeridian_exact(spark, monkeypatch):
             assert gi == wi and gd == pytest.approx(wd, rel=1e-9)
 
 
-def test_track_caches_preserves_cross_key_shared_plan(spark):
-    """ADVICE r4: Spark's CacheManager keys cache entries by
-    canonicalized PLAN, so a plan-identical frame registered under a
-    DIFFERENT operator key shares the entry. Rolling one key's
-    generation must not evict an entry another key's live frame still
-    backs — only plans no longer referenced anywhere in the registry
-    may be released."""
-    from rios_spark.session import release_caches, track_caches
-
-    df_a = spark.range(100).selectExpr("id", "id * 2 AS v").persist()
-    df_a.count()
-    track_caches(spark, "op_a", [df_a])
-    # same canonical plan, registered under a second key
-    df_b = spark.range(100).selectExpr("id", "id * 2 AS v").persist()
-    df_b.count()
-    track_caches(spark, "op_b", [df_b])
-    assert df_b.storageLevel.useMemory
-
-    # roll op_a to a NEW plan: the old op_a frame's plan is still live
-    # under op_b and must survive the rollover
-    df_a2 = spark.range(50).selectExpr("id", "id * 3 AS v").persist()
-    df_a2.count()
-    track_caches(spark, "op_a", [df_a2])
-    assert df_b.storageLevel.useMemory, "shared-plan cache evicted by other key"
-
-    # once op_b also rolls to a new plan, the shared plan has no live
-    # holder left and IS released
-    df_b2 = spark.range(60).selectExpr("id", "id * 5 AS v").persist()
-    df_b2.count()
-    track_caches(spark, "op_b", [df_b2])
-    assert not df_b.storageLevel.useMemory
-    release_caches(spark)
-    assert not df_a2.storageLevel.useMemory and not df_b2.storageLevel.useMemory
+def _cache_manager_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_knn_tiled_registers_caches_incrementally(spark, monkeypatch):
-    """ADVICE r4: knn_tiled's persisted control frames enter the
-    session cache registry AS they are persisted, so an exception
-    between a persist and the return cannot strand unfreeable executor
-    cache. After a normal call every registered frame is persisted and
-    release_caches frees them all."""
-    from rios_spark import session as rs_session
-    from rios_spark.session import release_caches
+def _persistent_rdd_ids(spark) -> set[int]:
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
 
-    rng = np.random.default_rng(7)
-    res = 4
-    qpdf = pd.DataFrame(
-        {"qid": range(40), "lat": rng.uniform(-60, 60, 40), "lon": rng.uniform(-170, 170, 40)}
+
+def _escalating_frames(spark, qid=True):
+    """Dense data against ring 1: pass 0 leaves a residue the
+    escalation round proves (the test_knn_tiled_phase_counters input)."""
+    rng = np.random.default_rng(55)
+    ddf = pd.DataFrame(
+        {"id": np.arange(400), "lat": rng.uniform(-60, 60, 400), "lon": rng.uniform(-170, 170, 400)}
     )
-    dpdf = pd.DataFrame(
-        {"id": range(200), "lat": rng.uniform(-60, 60, 200), "lon": rng.uniform(-170, 170, 200)}
+    qdf = pd.DataFrame(
+        {"qid": np.arange(60), "lat": rng.uniform(-60, 60, 60), "lon": rng.uniform(-170, 170, 60)}
     )
-    q = spark.createDataFrame(qpdf).withColumn("cell", cell_col("lat", "lon", res))
-    d = spark.createDataFrame(dpdf).withColumn("cell", cell_col("lat", "lon", res))
-    frames = []
+    if not qid:
+        # repeated rows and no key: the synthetic ids are in play
+        qdf = pd.concat([qdf, qdf.iloc[:5]], ignore_index=True).drop(columns="qid")
+    return qdf, ddf, *_knn_frames(spark, qdf, ddf, 5)
 
-    def run(counters):
-        out = spatial.knn_tiled(q, d, 3, res, d_id="id", q_id="qid", counters=counters)
-        out.count()
-        if counters.get("branch") == "tiled":
-            reg = getattr(spark, rs_session._CACHE_REGISTRY_ATTR, {})
-            frames.extend(reg.get("knn_tiled", []))
-            assert len(frames) >= 2
-            assert all(f.storageLevel.useMemory for f in frames)
-        return out.toPandas()
 
-    _tiled_and_default(monkeypatch, run)
-    release_caches(spark, "knn_tiled")
-    assert all(not f.storageLevel.useMemory for f in frames)
+@pytest.mark.parametrize("qid", [True, False], ids=["q_id", "synthetic_id"])
+def test_knn_tiled_leaves_no_cache_entry(spark, qid):
+    """The tiled phases own their intermediates: after a result with an
+    escalation round is collected, the session CacheManager holds
+    nothing (the checkpoints live in the result's lineage)."""
+    spark.catalog.clearCache()
+    qdf, ddf, queries, data = _escalating_frames(spark, qid)
+    counters: dict = {}
+    got = spatial.knn_join(
+        queries, data, 3, 5, ring=1, d_id="id", q_id="qid" if qid else None,
+        counters=counters,
+    ).toPandas()
+    assert counters["branch"] == "tiled" and counters["unproven_escalation_0"] > 0
+    assert len(got) == 3 * len(qdf)
+    assert _cache_manager_empty(spark)
+
+
+def test_knn_tiled_failure_after_pass0_strands_nothing(spark, monkeypatch):
+    """A phase that raises after pass 0 leaves no cache entry behind."""
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected after pass 0")
+
+    monkeypatch.setattr(spatial, "_knn_residual_scan", boom)
+    spark.catalog.clearCache()
+    _, _, queries, data = _escalating_frames(spark, qid=False)
+    counters: dict = {}
+    with pytest.raises(RuntimeError, match="injected"):
+        spatial.knn_join(queries, data, 3, 5, ring=1, d_id="id", counters=counters)
+    assert counters["unproven_pass0"] > 0
+    assert _cache_manager_empty(spark)
+
+
+def test_knn_tiled_dropped_result_frees_its_blocks(spark):
+    """The checkpoint blocks of a tiled result are Spark RDDs held by
+    the result's lineage alone: once the caller drops the result and
+    the JVM collects it, ContextCleaner removes them."""
+    import gc
+    import time
+
+    _, _, queries, data = _escalating_frames(spark, qid=False)
+    before = _persistent_rdd_ids(spark)
+    out = spatial.knn_join(queries, data, 3, 5, ring=1, d_id="id")
+    out.collect()
+    ours = _persistent_rdd_ids(spark) - before
+    assert ours
+    del out
+    deadline = time.monotonic() + 30
+    while ours & _persistent_rdd_ids(spark) and time.monotonic() < deadline:
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.5)
+    assert not ours & _persistent_rdd_ids(spark)
+
+
+def test_knn_tiled_result_stable_across_later_calls(spark):
+    """A tiled result read again after a later, plan-distinct call gives
+    the rows of its first read: its synthetic ids are frozen in its own
+    checkpoint, which no later call can release."""
+    qdf, ddf, queries, data = _escalating_frames(spark, qid=False)
+    out = spatial.knn_join(queries, data, 3, 5, ring=1, d_id="id")
+    first = out.toPandas()
+    spatial.knn_join(queries.limit(20), data, 2, 5, ring=1, d_id="id").collect()
+    _assert_same_knn(out.toPandas(), first)
+    _assert_same_knn(first.drop(columns="cell"), _oracle_rows(qdf, ddf, 3))
 
 
 def test_knn_tiled_sparse_goes_to_scan(spark, monkeypatch):

@@ -457,6 +457,31 @@ def test_embedding_near_dup_hot_cluster_sparsified(spark):
     assert len(roots) == 1, f"cluster split into {len(roots)} components"
 
 
+def test_embedding_pair_kernels_fully_type_hinted(spark):
+    """Every grouped pair kernel carries full type hints, so planning the
+    exact all-pairs tasks and the LSH near-dup down to its star stage
+    raises no PySpark 'cannot infer the eval type' warning."""
+    import warnings
+
+    rng = np.random.default_rng(3)
+    base = rng.normal(size=8)
+    cluster = base + rng.normal(scale=1e-5, size=(40, 8))
+    vecs = np.concatenate([cluster, rng.normal(size=(10, 8))]).astype(np.float32)
+    df = spark.createDataFrame(
+        pd.DataFrame({"vec_id": np.arange(len(vecs), dtype=np.int64), "embedding": list(vecs)})
+    )
+    with warnings.catch_warnings():
+        warnings.filterwarnings("error", message=".*TYPE_HINT_SHOULD_BE_SPECIFIED")
+        exact = dedup.embedding_all_pairs_exact(df, "embedding", "vec_id", 0.9, block_rows=16)
+        lsh = dedup.embedding_near_dup(
+            df, "embedding", "vec_id", threshold=0.999, planes=4, sub_planes=2,
+            max_bucket_rows=10,
+        )
+    assert "FlatMapGroupsInPandas" in exact._jdf.queryExecution().executedPlan().toString()
+    # the star stage ran: its shard kernel groups on (bucket, __shard)
+    assert "__shard" in lsh._jdf.queryExecution().analyzed().toString()
+
+
 def test_cosine_topk_ivf_shard_invariance(spark, embs):
     """list_shards splits hot inverted lists across cogroup tasks; the
     result must be IDENTICAL to the unsharded run (each shard emits a
@@ -738,15 +763,30 @@ def test_ivf_pq_compressed_search(spark, embs, tmp_path):
     a = got_all.sort_values(["qid", "rank"]).reset_index(drop=True)
     b = again.sort_values(["qid", "rank"]).reset_index(drop=True)
     assert a.equals(b)
-    # the shared probe step: probing every list needs no persisted
+    # the shared probe step: probing every list needs no checkpointed
     # probe frame (the list ids are known without a job); a pruning
-    # nprobe persists it for the list-id collect
+    # nprobe checkpoints it for the list-id collect
     def plan(nprobe):
         df = ann.ivf_pq_search(spark, path, queries, 10, nprobe=nprobe, q_id="qid")
         return df._jdf.queryExecution().executedPlan().toString()
 
-    assert "InMemoryTableScan" not in plan(8)
-    assert "InMemoryTableScan" in plan(1)
+    assert "ExistingRDD" not in plan(8)
+    assert "ExistingRDD" in plan(1)
+
+
+def test_ivf_searches_leave_no_cache_entry(spark, tmp_path):
+    """The distributed probe step owns its frame: after a pruning
+    ivf_search with no q_rows_hint and an ivf_pq_search are collected,
+    the session CacheManager holds nothing."""
+    spark.catalog.clearCache()
+    vecs = spark.read.parquet(f"{SF}/embeddings.parquet")
+    path = str(tmp_path / "ivf_lifetime")
+    ann.ivf_build_index(vecs, path, n_centroids=8, list_shards=2, seed=42, pq=True, m=8)
+    queries = vecs.limit(12).withColumnRenamed("vec_id", "qid")
+    assert ann.ivf_search(spark, path, queries, 5, nprobe=3, q_id="qid").count() == 60
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert ann.ivf_pq_search(spark, path, queries, 5, nprobe=3, q_id="qid").count() == 60
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_ivf_index_append_exact(spark, embs, tmp_path):

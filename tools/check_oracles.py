@@ -1,7 +1,9 @@
 """Self-check harness mirroring the driver's CORRECTNESS gate:
 run every queries()[name] on Spark and oracle_sql()[name] on DuckDB
 at the given scale factor; compare row count, column-name sets, and
-order-insensitive values.
+order-insensitive values. A query that leaves an entry in the
+session's CacheManager after it is collected also FAILs: operators
+own their intermediates, so nothing may outlive the call.
 
 Usage: python tools/check_oracles.py [sf_dir] [name ...]
 """
@@ -79,6 +81,7 @@ def main():
     from rios_spark.queries import ORACLES, QUERIES
 
     spark = get_spark("check_oracles", master="local[8]", shuffle_partitions=8)
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
@@ -91,6 +94,11 @@ def main():
             got = fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark raised {type(e).__name__}: {str(e)[:200]}")
+            n_bad += 1
+            continue
+        if not cache_manager.isEmpty():
+            print(f"FAIL  {name}: left an entry in the session CacheManager")
+            spark.catalog.clearCache()
             n_bad += 1
             continue
         if name not in ORACLES:
