@@ -19,9 +19,11 @@ Run (local):
 
 Prints one JSON line:
   {"cells_total": N, "cells_phase1": A, "cells_resumed": B,
-   "resume_exact": true, "output_cells": N, "output_rows": R}
-where resume_exact asserts B == N - A AND the resumed set is exactly
-the pending set (verified cell-by-cell, not by count).
+   "rows_resumed": W, "resume_exact": true, "output_cells": N,
+   "output_rows": R}
+where resume_exact asserts B == N - A, the resumed set is exactly the
+pending set (verified cell-by-cell, not by count) AND the restart
+reports W == the rows of those pending cells.
 """
 
 from __future__ import annotations
@@ -79,6 +81,7 @@ def main() -> None:
             pages.select("cell").distinct(), job_id, stage
         ).collect()
     }
+    rows_pending = pages.join(F.broadcast(p1_df), "cell", "left_anti").count()
     s2 = manifest.run_stage(job_id, stage, pages, out_data, payload_col="url")
     done_after = {
         r["cell"] for r in manifest.completed_cells(job_id, stage).collect()
@@ -90,10 +93,12 @@ def main() -> None:
         "cells_total": len(all_cells),
         "cells_phase1": s1["cells_pending"],
         "cells_resumed": s2["cells_pending"],
+        "rows_resumed": s2["rows_written"],
         "resume_exact": (
             resumed == pending_before
             and pending_before == set(all_cells) - phase1_cells
             and s2["cells_pending"] == len(all_cells) - n_kill
+            and s2["rows_written"] == rows_pending
         ),
         "output_cells": out_df.select("cell").distinct().count(),
         "output_rows": out_df.count(),

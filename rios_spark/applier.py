@@ -23,7 +23,8 @@ Spark-first design:
   distinct-cell sets (broadcast semi-join): INTERSECTION keeps cells
   present in every input (empty → error, matching
   rios/pixelgrid.py:158-160), UNION keeps all, REFERENCE keeps the
-  reference input's cells.
+  reference input's cells. A single input is its own footprint in
+  every mode and skips this pass (empty in → empty out).
 - The kernel runs via ``groupBy(owner).applyInPandas`` — one Arrow
   batch per tile, vectorized numpy inside, zero per-row Python.
 - TileInfo (ReaderInfo analogue) is rebuilt per tile from the owner
@@ -100,20 +101,22 @@ def _footprint_cells(
 ) -> DataFrame | None:
     """Distinct-cell set implementing the working-grid footprint.
 
-    Returns None for UNION (no filtering needed — the row-level
-    full-outer join already realizes the union footprint).
+    Returns None when no filtering is needed: for UNION (the row-level
+    full-outer join already realizes the union footprint) and for a
+    single input, whose own cell set every mode equals.
     """
-    if footprint == UNION:
+    if footprint not in (INTERSECTION, UNION, BOUNDS_FROM_REFERENCE):
+        raise ValueError(f"unknown footprint {footprint!r}")
+    if reference is None:
+        reference = next(iter(inputs))
+    if footprint == BOUNDS_FROM_REFERENCE and reference not in inputs:
+        raise ValueError(f"reference {reference!r} names no input")
+    if footprint == UNION or len(inputs) == 1:
         return None
     if footprint == BOUNDS_FROM_REFERENCE:
-        if reference is None:
-            reference = next(iter(inputs))
         return inputs[reference].select("cell").distinct()
-    if footprint == INTERSECTION:
-        sets = [df.select("cell").distinct() for df in inputs.values()]
-        cells = reduce(lambda a, b: a.join(b, "cell", "inner"), sets)
-        return cells
-    raise ValueError(f"unknown footprint {footprint!r}")
+    sets = [df.select("cell").distinct() for df in inputs.values()]
+    return reduce(lambda a, b: a.join(b, "cell", "inner"), sets)
 
 
 def _bbox_surrounds(a: tuple, b: tuple) -> bool:

@@ -14,14 +14,16 @@ join+recompute loops are both slower and harder for the optimizer):
 1. one partial+final count at the base resolution   (small aggregate)
 2. one filtered count at the finest resolution, restricted to rows in
    hot base cells                                   (small aggregate)
-3. driver-side quadtree recursion over those counts → a lookup table
+3. one window sum per candidate resolution over those counts and a
+   CASE picking the shallowest level that fits → a lookup table
    finest_cell -> final_cell (only for hot subtrees)
 4. one broadcast join + coalesce assigns every row its final cell
 
 The data is never shuffled by this operator at all — both aggregates
-are map-side partial + tiny final, and step 4 is a broadcast hash
-join. The expensive shuffle (the caller's groupBy/write on `cell`)
-then runs on the balanced key, which is the whole point.
+are map-side partial + tiny final, the windows shuffle only the count
+frame, and step 4 is a broadcast hash join. The expensive shuffle (the
+caller's groupBy/write on `cell`) then runs on the balanced key, which
+is the whole point.
 """
 
 from __future__ import annotations
@@ -31,11 +33,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from rios_spark.grid import cell_col, parent_col
-
-
-def cell_load(df: DataFrame, cell: str = "cell") -> DataFrame:
-    """(cell, n_rows) — the load profile used for split decisions."""
-    return df.groupBy(cell).count()
 
 
 def adaptive_split(

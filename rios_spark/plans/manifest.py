@@ -6,13 +6,14 @@ SURVEY.md §2.9). The north rule requires tile-granular resume, so this
 module adds it:
 
 - every stage records, per cell: row count, byte count, wall clock,
-  and a status, appended to a manifest table;
+  and a status, appended to a manifest table — taken from the stage's
+  one per-cell aggregate (single-pass statistics), never a re-scan;
 - a restarted job anti-joins its cell list against the manifest and
   processes ONLY pending cells;
 - output is written partitioned by cell with dynamic partition
-  overwrite, so re-processing a cell (crash between data write and
-  manifest append) is idempotent — the partition is replaced, never
-  duplicated. On a real deployment both writes are one Iceberg
+  overwrite (an option of that write, never session conf), so
+  re-processing a cell (crash between data write and manifest append)
+  is idempotent — the partition is replaced, never duplicated. On a real deployment both writes are one Iceberg
   transaction (snapshot commit == RIOS closeOutfiles,
   rios/imagewriter.py:123-193); with plain parquet the manifest-after-
   data ordering gives at-least-once processing with exactly-once
@@ -25,6 +26,7 @@ import os
 import time
 import uuid
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,7 +50,7 @@ class Manifest:
 
     def read(self) -> DataFrame:
         if not self._exists():
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+            return self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), MANIFEST_SCHEMA)
         return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
 
     def completed_cells(self, job_id: str, stage: str) -> DataFrame:
@@ -81,49 +83,43 @@ class Manifest:
         payload_col: str | None = None,
         cell: str = "cell",
     ) -> dict:
-        """Process-and-checkpoint one stage: write the pending subset of
-        `df` to `out_path` partitioned by cell (dynamic overwrite →
-        idempotent per-cell replace), then append per-cell lineage rows.
+        """Process-and-checkpoint one stage in two reads of `df`: one
+        per-cell aggregate (collected; the lineage rows), then one write
+        of the pending rows to `out_path` partitioned by cell (dynamic
+        overwrite → idempotent per-cell replace). Null-cell rows count
+        as one cell in the totals but are never written nor recorded.
 
         Returns {'cells_total', 'cells_pending', 'rows_written'}.
         `payload_col`: column whose octet_length approximates bytes
         (defaults to 8 bytes/row if None).
         """
         t0 = time.monotonic()
-        run_id = uuid.uuid4().hex[:12]
-        all_cells = df.select(F.col(cell).alias("cell")).distinct()
-        pending = self.pending_cells(all_cells, job_id, stage).cache()
-        # released on every exit: nothing pending, a failed write, or done
-        try:
-            n_total = all_cells.count()
-            n_pending = pending.count()
-            if n_pending == 0:
-                return {"cells_total": n_total, "cells_pending": 0, "rows_written": 0}
-
-            subset = df.join(F.broadcast(pending), df[cell] == pending["cell"], "left_semi")
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            subset.write.mode("overwrite").partitionBy(cell).parquet(out_path)
-
-            nbytes = (
-                F.sum(F.octet_length(F.col(payload_col))) if payload_col else F.lit(8) * F.count("*")
+        done = self.completed_cells(job_id, stage)
+        nbytes = (
+            F.sum(F.octet_length(F.col(payload_col))) if payload_col else F.lit(8) * F.count("*")
+        )
+        per_cell = (
+            df.groupBy(F.col(cell).alias("cell"))
+            .agg(F.count("*").alias("n_rows"), nbytes.cast("long").alias("n_bytes"))
+            .join(F.broadcast(done.withColumn("done", F.lit(True))), "cell", "left")
+            .collect()
+        )
+        pending = [r for r in per_cell if not r["done"]]
+        written = [r for r in pending if r["cell"] is not None]
+        if written:
+            todo = df.filter(F.col(cell).isNotNull()).join(
+                F.broadcast(done), df[cell] == done["cell"], "left_anti")
+            w = todo.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            w.partitionBy(cell).parquet(out_path)
+            wall_ms, run_id = int((time.monotonic() - t0) * 1000), uuid.uuid4().hex[:12]
+            lineage = pd.DataFrame(
+                [(job_id, stage, r["cell"], r["n_rows"], r["n_bytes"], wall_ms, "done", run_id)
+                 for r in written],
+                dtype=object,  # keeps a null n_bytes None, not NaN
             )
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            metrics = (
-                subset.groupBy(F.col(cell).alias("cell"))
-                .agg(F.count("*").alias("n_rows"), nbytes.cast("long").alias("n_bytes"))
-                .select(
-                    F.lit(job_id).alias("job_id"),
-                    F.lit(stage).alias("stage"),
-                    "cell",
-                    "n_rows",
-                    "n_bytes",
-                    F.lit(wall_ms).alias("wall_ms"),
-                    F.lit("done").alias("status"),
-                    F.lit(run_id).alias("run_id"),
-                )
-            )
-            self.append(metrics)
-            rows = subset.count()
-            return {"cells_total": n_total, "cells_pending": n_pending, "rows_written": rows}
-        finally:
-            pending.unpersist()
+            self.append(self.spark.createDataFrame(lineage, MANIFEST_SCHEMA))
+        return {
+            "cells_total": len(per_cell),
+            "cells_pending": len(pending),
+            "rows_written": sum(r["n_rows"] for r in written),
+        }

@@ -17,4 +17,24 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def counted_reads(spark):
+    """wrap(df) -> (df behind an identity mapInPandas, accumulator): the
+    accumulator sums the rows read from df over every job that scans
+    it, so a test can assert how many times an operator reads its
+    input."""
+
+    def wrap(df):
+        reads = spark.sparkContext.accumulator(0)
+
+        def ident(batches):
+            for b in batches:
+                reads.add(len(b))
+                yield b
+
+        return df.mapInPandas(ident, df.schema), reads
+
+    return wrap
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

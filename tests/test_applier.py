@@ -202,6 +202,54 @@ def test_disjoint_intersection_raises(spark):
         )
 
 
+def test_single_input_apply_reads_input_once(spark, tmp_path, counted_reads):
+    """One input is its own footprint: apply with a margin plus the
+    tiled write scan the input once, with no distinct-cell pass and no
+    emptiness probe."""
+    from rios_spark import sources
+    from rios_spark.grid import cell_col
+
+    pages = spark.createDataFrame(datagen.gen_pages(3000)).select(
+        cell_col("lat", "lon", 6).alias("cell"), "page_id", "lat"
+    )
+    counted, reads = counted_reads(pages)
+
+    def kernel(info, tile):
+        return tile[["page_id", "__is_margin"]]
+
+    out = applier.apply(kernel, {"p": counted}, "cell long, page_id long", margin=1, res=6)
+    sources.write_tiled(out, str(tmp_path / "tiles"), 6)
+    assert reads.value == 3000
+    back = spark.read.parquet(str(tmp_path / "tiles"))
+    assert back.count() == 3000 and back.select("page_id").distinct().count() == 3000
+
+
+def test_single_input_footprints(spark):
+    """Every footprint of one input is that input's cell set; a single
+    EMPTY input yields an empty frame, not the "do not intersect" error
+    (that rule is about two grids that do not meet); an unknown mode or
+    a reference naming no input still raises."""
+    a = spark.createDataFrame(datagen.gen_ramp(50, 50, TILE, RES))
+    ident = lambda info, tile: tile[["cell", "row", "col"]]  # noqa: E731
+    for mode in (applier.INTERSECTION, applier.UNION, applier.BOUNDS_FROM_REFERENCE):
+        got = applier.apply(ident, {"a": a}, "cell long, row int, col int",
+                            align_keys=["row", "col"], footprint=mode)
+        assert _tileset(got) == _tileset(a)
+        assert got.count() == 50 * 50
+
+    empty = a.limit(0)
+    got = applier.apply(ident, {"a": empty}, "cell long, row int, col int",
+                        align_keys=["row", "col"], footprint=applier.INTERSECTION)
+    assert got.count() == 0
+
+    with pytest.raises(ValueError, match="unknown footprint"):
+        applier.apply(ident, {"a": a}, "cell long", align_keys=["row", "col"],
+                      footprint="NEAREST")
+    with pytest.raises(ValueError, match="names no input"):
+        applier.apply(ident, {"a": a}, "cell long", align_keys=["row", "col"],
+                      footprint=applier.BOUNDS_FROM_REFERENCE, reference="b")
+
+
 def test_tileinfo_fields(spark):
     """testreaderinfo analogue: TileInfo must self-describe the tile."""
     cellid = 10 * RES_MUL + 7 * Y_MUL + 3

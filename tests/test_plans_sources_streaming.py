@@ -101,10 +101,12 @@ def test_manifest_resume(spark, pages, tmp_path):
     r1 = man.run_stage("job1", "tile", df.filter(F.col("cell").isin(list(half))), out, payload_col="url")
     assert r1["cells_pending"] == len(half)
 
-    # run 2 (the resume): full input; only the other half is pending
+    # run 2 (the resume): full input; only the other half is pending,
+    # and rows_written counts exactly that half's rows
     r2 = man.run_stage("job1", "tile", df, out, payload_col="url")
     assert r2["cells_total"] == len(cells)
     assert r2["cells_pending"] == len(cells) - len(half)
+    assert r2["rows_written"] == df.filter(~F.col("cell").isin(list(half))).count()
 
     # run 3: nothing pending — a no-op
     r3 = man.run_stage("job1", "tile", df, out, payload_col="url")
@@ -123,9 +125,9 @@ def test_manifest_resume(spark, pages, tmp_path):
 
 
 def test_manifest_run_stage_releases_pending(spark, tmp_path, monkeypatch):
-    """run_stage caches the pending-cell frame for its own jobs only: it
-    is released after a stage that writes, after one with nothing
-    pending, and after one whose write raises."""
+    """run_stage leaves nothing in the session cache: not after a stage
+    that writes, nor after one with nothing pending, nor after one
+    whose write raises."""
     from pyspark.sql import DataFrameWriter
 
     spark.catalog.clearCache()
@@ -147,6 +149,59 @@ def test_manifest_run_stage_releases_pending(spark, tmp_path, monkeypatch):
     with pytest.raises(RuntimeError, match="injected"):
         man.run_stage("job", "s2", df, str(tmp_path / "out2"), payload_col="url")
     assert empty()
+
+
+def test_manifest_run_stage_reads_input_twice(spark, pages, tmp_path, counted_reads):
+    """One per-cell aggregate plus one write: run_stage reads its input
+    2N rows, whatever the number of cells; the lineage comes from the
+    aggregate, not from a re-read."""
+    counted, reads = counted_reads(pages.select("cell", "page_id", "url"))
+    man = Manifest(spark, str(tmp_path / "manifest"))
+    r = man.run_stage("job", "s", counted, str(tmp_path / "out"), payload_col="url")
+    assert r["rows_written"] == 20000
+    assert reads.value == 2 * 20000
+    want = pages.groupBy("cell").agg(
+        F.count("*").alias("n_rows"), F.sum(F.octet_length("url")).alias("n_bytes")
+    ).toPandas().sort_values("cell").reset_index(drop=True)
+    got = man.read().toPandas()[["cell", "n_rows", "n_bytes"]]
+    got = got.sort_values("cell").reset_index(drop=True)
+    assert (got.to_numpy() == want.to_numpy()).all()
+
+
+def test_manifest_run_stage_leaves_session_conf(spark, tmp_path):
+    """Dynamic partition overwrite is an option of run_stage's own
+    write: the session conf is unchanged afterwards, so a later plain
+    overwrite still replaces the whole table."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    df = spark.createDataFrame(
+        pd.DataFrame({"cell": np.arange(12) % 4, "page_id": np.arange(12), "url": ["u"] * 12})
+    )
+    out = str(tmp_path / "out")
+    Manifest(spark, str(tmp_path / "manifest")).run_stage("job", "s", df, out, payload_col="url")
+    assert spark.conf.get(key) == before
+    df.filter("cell = 0").write.mode("overwrite").partitionBy("cell").parquet(out)
+    assert [r["cell"] for r in spark.read.parquet(out).select("cell").distinct().collect()] == [0]
+
+
+def test_manifest_null_cells_are_counted_never_written(spark, tmp_path):
+    """Rows with a null cell count as one cell in cells_total and
+    cells_pending, are never written and get no lineage row."""
+    pdf = pd.DataFrame({
+        "cell": pd.array([0, 0, 1, None, None], "Int64"),
+        "page_id": np.arange(5),
+        "url": ["a", "bb", "ccc", "d", "e"],
+    })
+    df = spark.createDataFrame(pdf)
+    man = Manifest(spark, str(tmp_path / "manifest"))
+    out = str(tmp_path / "out")
+    r = man.run_stage("job", "s", df, out, payload_col="url")
+    assert r == {"cells_total": 3, "cells_pending": 3, "rows_written": 3}
+    back = spark.read.parquet(out).toPandas()
+    assert sorted(back["page_id"]) == [0, 1, 2]
+    m = man.read().toPandas().sort_values("cell")
+    assert list(m["cell"]) == [0, 1]
+    assert list(m["n_rows"]) == [2, 1] and list(m["n_bytes"]) == [3, 3]
 
 
 def test_write_read_tiled_partition_pruning(spark, pages, tmp_path):
