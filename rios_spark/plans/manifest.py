@@ -22,7 +22,6 @@ module adds it:
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
 
@@ -44,9 +43,13 @@ class Manifest:
         self.path = path
 
     def _exists(self) -> bool:
-        return os.path.exists(self.path) and any(
-            f.endswith(".parquet") for _, _, fs in os.walk(self.path) for f in fs
-        )
+        """Whether the manifest directory exists, asked of Hadoop's
+        FileSystem (no Spark job), so a URI manifest (file://, hdfs://,
+        s3a://) is found like a bare local path. A directory with no
+        committed file yet reads as empty under the explicit schema."""
+        path = self.spark._jvm.org.apache.hadoop.fs.Path(self.path)
+        fs = path.getFileSystem(self.spark._jsparkSession.sessionState().newHadoopConf())
+        return fs.exists(path)
 
     def read(self) -> DataFrame:
         if not self._exists():
@@ -86,10 +89,12 @@ class Manifest:
         """Process-and-checkpoint one stage in two reads of `df`: one
         per-cell aggregate (collected; the lineage rows), then one write
         of the pending rows to `out_path` partitioned by cell (dynamic
-        overwrite → idempotent per-cell replace). Null-cell rows count
-        as one cell in the totals but are never written nor recorded.
+        overwrite → idempotent per-cell replace). Null-cell rows are
+        never written nor recorded, so they stay out of the cell counts
+        and are reported as `null_cell_rows`.
 
-        Returns {'cells_total', 'cells_pending', 'rows_written'}.
+        Returns {'cells_total', 'cells_pending', 'rows_written',
+        'null_cell_rows'}.
         `payload_col`: column whose octet_length approximates bytes
         (defaults to 8 bytes/row if None).
         """
@@ -104,9 +109,9 @@ class Manifest:
             .join(F.broadcast(done.withColumn("done", F.lit(True))), "cell", "left")
             .collect()
         )
-        pending = [r for r in per_cell if not r["done"]]
-        written = [r for r in pending if r["cell"] is not None]
-        if written:
+        cells = [r for r in per_cell if r["cell"] is not None]
+        pending = [r for r in cells if not r["done"]]
+        if pending:
             todo = df.filter(F.col(cell).isNotNull()).join(
                 F.broadcast(done), df[cell] == done["cell"], "left_anti")
             w = todo.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
@@ -114,12 +119,13 @@ class Manifest:
             wall_ms, run_id = int((time.monotonic() - t0) * 1000), uuid.uuid4().hex[:12]
             lineage = pd.DataFrame(
                 [(job_id, stage, r["cell"], r["n_rows"], r["n_bytes"], wall_ms, "done", run_id)
-                 for r in written],
+                 for r in pending],
                 dtype=object,  # keeps a null n_bytes None, not NaN
             )
             self.append(self.spark.createDataFrame(lineage, MANIFEST_SCHEMA))
         return {
-            "cells_total": len(per_cell),
+            "cells_total": len(cells),
             "cells_pending": len(pending),
-            "rows_written": sum(r["n_rows"] for r in written),
+            "rows_written": sum(r["n_rows"] for r in pending),
+            "null_cell_rows": sum(r["n_rows"] for r in per_cell if r["cell"] is None),
         }

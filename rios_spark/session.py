@@ -8,6 +8,11 @@ kernels are vectorized pandas UDFs), shuffle partitions sized to cores
 locally (on a real cluster: 2-3x total executor cores, or leave AQE's
 coalescing to shrink an intentionally high number).
 
+The codegen cache holds 1000 generated classes instead of Spark's 100:
+the applier model runs the same per-tile plans over and over, so each
+generated class is compiled (and warmed by the JIT) once per session,
+not again on every call.
+
 The session holds no engine state. An operator that must reuse an
 intermediate across its own jobs (the tiled kNN phases, the IVF probe)
 local-checkpoints it into the lineage of the DataFrame it returns, and
@@ -73,6 +78,16 @@ def get_spark(
         # plans.sizing fan-out (it saw a "wide" scan with every row in
         # one partition). Scan width here honestly equals row-
         # group count; per-row-heavy operators fan out explicitly.
+        # Spark caches compiled generated classes by their source text,
+        # 100 by default: fewer than one pages_scale round uses, so each
+        # round compiled 127 of them again in Janino and the JIT warmed
+        # them up from scratch. Measured working set, one session under
+        # an unbounded cache: 620 distinct classes (perfbench pages_scale
+        # 138, query_mix +73, the 52 registry queries at sf0.01 +342 and
+        # sf0.1 +34, one tiled kNN call +33); tools/check_oracles.py
+        # prints a registry pass's count. A static conf: it takes effect
+        # only in a session this builder creates.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

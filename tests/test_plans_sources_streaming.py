@@ -185,8 +185,9 @@ def test_manifest_run_stage_leaves_session_conf(spark, tmp_path):
 
 
 def test_manifest_null_cells_are_counted_never_written(spark, tmp_path):
-    """Rows with a null cell count as one cell in cells_total and
-    cells_pending, are never written and get no lineage row."""
+    """Rows with a null cell are counted under null_cell_rows, stay out
+    of cells_total and cells_pending, are never written and get no
+    lineage row, so a finished stage reports nothing pending."""
     pdf = pd.DataFrame({
         "cell": pd.array([0, 0, 1, None, None], "Int64"),
         "page_id": np.arange(5),
@@ -196,12 +197,28 @@ def test_manifest_null_cells_are_counted_never_written(spark, tmp_path):
     man = Manifest(spark, str(tmp_path / "manifest"))
     out = str(tmp_path / "out")
     r = man.run_stage("job", "s", df, out, payload_col="url")
-    assert r == {"cells_total": 3, "cells_pending": 3, "rows_written": 3}
+    assert r == {"cells_total": 2, "cells_pending": 2, "rows_written": 3, "null_cell_rows": 2}
     back = spark.read.parquet(out).toPandas()
     assert sorted(back["page_id"]) == [0, 1, 2]
     m = man.read().toPandas().sort_values("cell")
     assert list(m["cell"]) == [0, 1]
     assert list(m["n_rows"]) == [2, 1] and list(m["n_bytes"]) == [3, 3]
+    r = man.run_stage("job", "s", df, out, payload_col="url")
+    assert r == {"cells_total": 2, "cells_pending": 0, "rows_written": 0, "null_cell_rows": 2}
+
+
+def test_manifest_resume_at_file_uri(spark, tmp_path):
+    """A manifest named by a file:// URI is found again: the second
+    run_stage skips every cell and the manifest keeps one row per cell."""
+    df = spark.createDataFrame(
+        pd.DataFrame({"cell": np.arange(12) % 4, "page_id": np.arange(12), "url": ["u"] * 12})
+    )
+    man = Manifest(spark, (tmp_path / "manifest").as_uri())
+    out = (tmp_path / "out").as_uri()
+    assert man.run_stage("job", "s", df, out, payload_col="url")["cells_pending"] == 4
+    r = man.run_stage("job", "s", df, out, payload_col="url")
+    assert r["cells_pending"] == 0 and r["rows_written"] == 0
+    assert man.read().count() == 4
 
 
 def test_write_read_tiled_partition_pruning(spark, pages, tmp_path):

@@ -3,7 +3,8 @@ run every queries()[name] on Spark and oracle_sql()[name] on DuckDB
 at the given scale factor; compare row count, column-name sets, and
 order-insensitive values. A query that leaves an entry in the
 session's CacheManager after it is collected also FAILs: operators
-own their intermediates, so nothing may outlive the call.
+own their intermediates, so nothing may outlive the call. The last
+line is the session's Janino compile count over the pass.
 
 Usage: python tools/check_oracles.py [sf_dir] [name ...]
 """
@@ -120,6 +121,10 @@ def main():
             print(f"ok    {name}: {len(got)} rows match")
             n_ok += 1
     print(f"\n{n_ok} ok, {n_weak} rows-only, {n_bad} FAILED")
+    # the generated classes of the pass; a count near the codegen cache
+    # size set in session.py means the cache no longer holds them all
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    print(f"janino compiles: {compiles.getCount()}")
     spark.stop()
     sys.exit(1 if n_bad else 0)
 
