@@ -21,7 +21,7 @@ applier   the RIOS `applier.apply` analogue: co-partitioned multi-input
 margin    k-ring overlap-margin join (RIOS setOverlap analogue)
 stats     single-pass statistics + RIOS-exact histogram binning,
           median/mode from histogram, pyramid rollups
-spatial   point-in-polygon join, zonal aggregation (salted), kNN join
+spatial   point-in-polygon join, zonal aggregation, kNN join
 textops   deterministic html→text extraction, language id, quality
           scoring, token counts, fingerprints
 dedup     exact / minhash-LSH / simhash / n-gram-jaccard / embedding
@@ -32,7 +32,7 @@ streaming watermarked windowed aggs, stateful dedup (TTL-evicted) and
           gap sessionization (event-time state)
 rat       category tables: chunk apply, color ramps, external RAT store
 cmdline   rios_spark_calcstats / rios_spark_printstats console scripts
-plans     adaptive split, salted aggregation, the resume manifest, and
+plans     adaptive split, the resume manifest, and
           sizing: the one home of every input-size decision (footer
           counts, fan-out width, broadcast and pair gates, GEMM budget)
 """

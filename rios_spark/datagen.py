@@ -5,7 +5,7 @@ Three fixture families (FIXTURES.md):
 - ``gen_pages``    — the north-rule input table: Common-Crawl-style web
   pages (url, warc_ts, html, text, lang) + derived geocodes (lat, lon).
   Host popularity is Zipf-skewed so a few hosts dominate → hot tiles,
-  exercising the salted aggregation + adaptive-split paths. The html is
+  exercising the partial aggregation + adaptive-split paths. The html is
   a deterministic template embedding the text; ``extract_text`` must
   return the text byte-for-byte (the driver `input_hint` invariant).
 - ``gen_polygons`` — PIP/zonal fixtures: small squares, one polygon

@@ -35,7 +35,7 @@ from rios_spark.grid import (
     parent_col,
 )
 from rios_spark.margin import OWNER, with_margin
-from rios_spark.plans import adaptive_split, salted_agg, sizing
+from rios_spark.plans import adaptive_split, sizing
 
 # resolutions used throughout the inventory
 DOC_RES = 6
@@ -88,19 +88,13 @@ FROM documents GROUP BY 1
 
 
 def q_tile_stats_customers(spark, sf_dir):
-    """Per-tile stats with the SALTED two-stage aggregation (A14)."""
+    """Per-tile stats (A14): one groupBy, whose map-side partial
+    aggregate bounds a hot tile's reducer input."""
     cust = _geo(_t(spark, sf_dir, "customer"), "c_custkey", CUST_RES)
-    out = salted_agg(
-        cust,
-        ["cell"],
-        [("c_acctbal", "count", "n"), ("c_acctbal", "sum", "s"), ("c_acctbal", "mean", "m")],
-        salt=8,
+    out = cust.groupBy("cell").agg(
+        F.count("c_acctbal").alias("n"), F.round(F.sum("c_acctbal"), 4).alias("acctbal_sum")
     )
-    return out.select(
-        "cell",
-        F.col("n").cast("long").alias("n"),
-        F.round("s", 4).alias("acctbal_sum"),
-    ).withColumn("acctbal_mean", _f6(F.col("acctbal_sum") / F.col("n")))
+    return out.withColumn("acctbal_mean", _f6(F.col("acctbal_sum") / F.col("n")))
 
 
 O_TILE_STATS_CUSTOMERS = f"""

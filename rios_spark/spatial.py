@@ -7,8 +7,8 @@ Reference semantics being re-expressed (NOT ported):
   (broadcast) + an exact vectorized point-in-polygon kernel — the PIP
   join (SURVEY.md J6, the engine's flagship join).
 - Zonal statistics (rios/riostests/testvector.py:99-152): PIP join →
-  groupBy(polygon_id) agg, with SALTED two-stage aggregation for hot
-  tiles (the north-rule skew requirement).
+  groupBy(polygon_id) agg; Catalyst's partial aggregation bounds a hot
+  polygon's reducer input (the north-rule skew requirement).
 - Disjoint polygon → empty join → no stats row (testvector.py:76-83).
 - Nearest-neighbour resample join (rios/applier.py:655-661,
   rios/riostests/testresample.py:86-117) generalized to kNN (J7/J8):
@@ -30,7 +30,7 @@ once, like RIOS memoizes one rasterization per vector file per process
 (rios/structures.py:1074-1096). Points never leave the executors; the
 prefilter is a broadcast hash join on the cell key; the exact test is
 Arrow-batched numpy. The only shuffle in zonal stats is the partial
-aggregation's, and salting splits hot polygons across reducers.
+aggregation's: at most one row per polygon per map task.
 """
 
 from __future__ import annotations
@@ -236,7 +236,7 @@ def pip_join(
 
 
 # ---------------------------------------------------------------------------
-# zonal aggregation (salted two-stage)
+# zonal aggregation
 # ---------------------------------------------------------------------------
 
 
@@ -248,43 +248,30 @@ def zonal_stats(
     lat: str = "lat",
     lon: str = "lon",
     cell: str = "cell",
-    salt: int = 16,
 ) -> DataFrame:
     """Per-polygon count/sum/mean/min/max of `value_col` over contained
     points — the zonal-statistics composite (SURVEY.md A14).
 
-    Skew handling: stage 1 aggregates by (polygon_id, salt) — a hot
-    polygon (continent-sized, or over a dense-host tile) is split
-    across `salt` reducers — stage 2 combines the partials. The salt is
-    `spark_partition_id() % salt` — NOT a function of the row, and it
-    varies with input partitioning; the OUTPUT is invariant to it
-    because every stage-1 statistic is algebraic (count/sum/min/max
-    recombine exactly in stage 2). A row-hash salt would send an
-    entire hot cell to one reducer — no split at all. Polygons with
-    zero contained points produce no row (testvector disjoint
-    contract).
+    One groupBy(polygon_id): Catalyst's map-side partial aggregate sends
+    at most one row per polygon per map task, so a hot polygon's reducer
+    input is bounded by the map-task count, however skewed the cells.
+    A NaN value counts as no value, as in `stats.basic_stats`; a polygon
+    whose contained points hold no valid value gets `count 0` and null
+    stats. Polygons with zero contained points produce no row
+    (testvector disjoint contract).
     """
     joined = pip_join(points, polygons, res, lat=lat, lon=lon, cell=cell)
-    v = F.col(value_col).cast("double")
-    # Salt on the INPUT PARTITION, not a hash of the cell: the north-rule
-    # skew model is a hot tile, and hashing the cell sends every row of
-    # that one hot cell to the same (polygon, salt) reducer — no split at
-    # all. spark_partition_id() spreads a hot cell across however many
-    # input partitions it spans; output is unchanged (all ops algebraic).
-    s = F.pmod(F.spark_partition_id(), F.lit(salt))
-    partial = joined.groupBy("polygon_id", s.alias("__salt")).agg(
-        F.count(v).alias("c"),
-        F.sum(v).alias("s"),
-        F.min(v).alias("mn"),
-        F.max(v).alias("mx"),
-    )
+    v = F.col(value_col)
+    if dict(points.dtypes)[value_col] in ("float", "double"):
+        v = F.when(~F.isnan(v), v)
+    v = v.cast("double")
     return (
-        partial.groupBy("polygon_id")
+        joined.groupBy("polygon_id")
         .agg(
-            F.sum("c").alias("count"),
-            F.sum("s").alias("sum"),
-            F.min("mn").alias("minval"),
-            F.max("mx").alias("maxval"),
+            F.count(v).alias("count"),
+            F.sum(v).alias("sum"),
+            F.min(v).alias("minval"),
+            F.max(v).alias("maxval"),
         )
         .withColumn("mean", F.col("sum") / F.col("count"))
     )

@@ -1,4 +1,4 @@
-"""Skew handling (adaptive split, salted agg), resume manifest,
+"""Skew handling (adaptive split), resume manifest,
 tiled table IO with partition pruning, and streaming/batch parity."""
 
 from __future__ import annotations
@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from rios_spark import datagen, sources
 from rios_spark.grid import RES_MUL, cell_col, np_parent
-from rios_spark.plans import Manifest, adaptive_split, salted_agg
+from rios_spark.plans import Manifest, adaptive_split
 from rios_spark.streaming import stream_tile_counts
 
 RES = 5
@@ -47,44 +47,6 @@ def test_adaptive_split_bounds_cell_load(spark, pages):
     par = np_parent(fine["cell"].to_numpy(np.int64), RES)
     want_coarse = np_cell(fine["lat"].to_numpy(), fine["lon"].to_numpy(), RES)
     assert (par == want_coarse).all()
-
-
-def test_salted_agg_matches_plain(spark, pages):
-    plain = (
-        pages.groupBy("cell")
-        .agg(
-            F.count("page_id").alias("n"),
-            F.sum("page_id").alias("s"),
-            F.min("lat").alias("mn"),
-            F.max("lat").alias("mx"),
-            F.avg("page_id").alias("m"),
-        )
-        .toPandas()
-        .set_index("cell")
-        .sort_index()
-    )
-    salted = (
-        salted_agg(
-            pages,
-            ["cell"],
-            [
-                ("page_id", "count", "n"),
-                ("page_id", "sum", "s"),
-                ("lat", "min", "mn"),
-                ("lat", "max", "mx"),
-                ("page_id", "mean", "m"),
-            ],
-            salt=8,
-        )
-        .toPandas()
-        .set_index("cell")
-        .sort_index()
-    )
-    assert (plain["n"] == salted["n"]).all()
-    assert np.allclose(plain["s"], salted["s"])
-    assert np.allclose(plain["mn"], salted["mn"])
-    assert np.allclose(plain["mx"], salted["mx"])
-    assert np.allclose(plain["m"], salted["m"])
 
 
 def test_manifest_resume(spark, pages, tmp_path):

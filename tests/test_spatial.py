@@ -15,10 +15,12 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from rios_spark import datagen, spatial
 from rios_spark.grid import cell_col, np_cell
 from rios_spark.plans import sizing
+from rios_spark.stats import basic_stats
 
 
 def _pages_df(spark, n=8000, res=5):
@@ -545,14 +547,29 @@ def test_knn_tiled_residual_scan_no_driver_collect(spark):
             assert gd == pytest.approx(wd, rel=1e-9)
 
 
-def test_zonal_salt_uses_partition_id(spark):
-    """Skew contract: the zonal stage-1 salt must split a HOT CELL, so
-    it cannot be a function of the cell value (round-1 bug: xxhash64 of
-    the cell gave every row of a hot tile the same salt). The physical
-    plan must salt on SPARK_PARTITION_ID, and results stay exact."""
+def _zonal_exchange_records(df) -> list[int]:
+    """Rows each executed `Exchange hashpartitioning(polygon_id…)`
+    wrote, read from the final AQE plan's shuffle-write metrics."""
+    todo, rows = [df._jdf.queryExecution().executedPlan().executedPlan()], []
+    while todo:
+        node = todo.pop()
+        if node.getClass().getSimpleName().endswith("QueryStageExec"):
+            node = node.plan()
+            if node.outputPartitioning().toString().startswith("hashpartitioning(polygon_id"):
+                rows.append(node.metrics().apply("shuffleRecordsWritten").value())
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return rows
+
+
+def test_zonal_hot_cell_one_partial_exchange(spark):
+    """Skew contract: every point sits in ONE hot cell spread over 8
+    input partitions. zonal_stats is one groupBy(polygon_id), so the
+    final AQE plan holds exactly one polygon_id exchange, fed directly
+    by a partial HashAggregate: the hot polygon's reducer reads at most
+    one row per map task (8), not the 4000 points. Stats stay exact."""
     rng = np.random.default_rng(41)
-    n = 4000
-    # every point in one hot cell (one dense web host tile)
+    n, parts = 4000, 8
     pdf = pd.DataFrame(
         {
             "page_id": np.arange(n),
@@ -563,19 +580,87 @@ def test_zonal_salt_uses_partition_id(spark):
     )
     pts = (
         spark.createDataFrame(pdf)
-        .repartition(8)
+        .repartition(parts)
         .withColumn("cell", cell_col("lat", "lon", 5))
     )
     polys = pd.DataFrame(
         [{"polygon_id": 0, "xs": [0.0, 40.0, 40.0, 0.0], "ys": [0.0, 0.0, 40.0, 40.0]}]
     )
     out = spatial.zonal_stats(pts, polys, 5, "v")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "SPARK_PARTITION_ID" in plan
     row = out.toPandas().iloc[0]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0].splitlines()
+    at = [i for i, line in enumerate(final) if "Exchange hashpartitioning(polygon_id" in line]
+    assert len(at) == 1
+    child = final[at[0] + 1]
+    assert "HashAggregate" in child and "partial_count" in child and "partial_sum" in child
+    assert 0 < _zonal_exchange_records(out)[0] <= parts
     assert row["count"] == n
-    assert row["sum"] == pytest.approx(pdf["v"].sum())
-    assert row["mean"] == pytest.approx(pdf["v"].mean())
+    assert row["sum"] == pdf["v"].sum()
+    assert row["minval"] == pdf["v"].min() and row["maxval"] == pdf["v"].max()
+    assert row["mean"] == pytest.approx(pdf["v"].mean(), rel=1e-12)
+
+
+_ZONAL_RECTS = pd.DataFrame(
+    {
+        "polygon_id": [0, 1],
+        "xs": [[0.0, 10.0, 10.0, 0.0], [20.0, 30.0, 30.0, 20.0]],
+        "ys": [[0.0, 0.0, 10.0, 10.0], [20.0, 20.0, 30.0, 30.0]],
+    }
+)
+_NAN = "nan"  # a value slot that holds NaN (createDataFrame would make it null)
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        # polygon 0 over [0, NaN, 2, NULL]; polygon 1 holds no valid value
+        [(5, 5, 0.0), (5, 6, _NAN), (6, 5, 2.0), (6, 6, None), (25, 25, _NAN), (26, 25, None)],
+        [],
+        [(5, 5, 3.0)],
+        # duplicate rows, one on the rectangle's closed corner, one on its open edge
+        [(5, 5, 1.0), (5, 5, 1.0), (0, 0, 4.0), (0, 0, 4.0), (10, 5, 9.0), (25, 25, 7.0)],
+    ],
+    ids=["nan_as_null", "empty", "one_row", "duplicates"],
+)
+def test_zonal_awkward_inputs_match_pandas(spark, rows):
+    """zonal_stats against a pandas oracle over the same half-open
+    rectangles. NaN is no value, as in stats.basic_stats (pandas skips
+    NaN and None alike); a polygon whose points hold no valid value
+    keeps its row with count 0 and null stats."""
+    res = 4
+    pdf = pd.DataFrame(
+        [(float(la), float(lo), None if v == _NAN else v, v == _NAN) for la, lo, v in rows],
+        columns=["lat", "lon", "v", "is_nan"],
+    )
+    pts = (
+        spark.createDataFrame(pdf, "lat double, lon double, v double, is_nan boolean")
+        .withColumn("v", F.when(F.col("is_nan"), F.lit(float("nan"))).otherwise(F.col("v")))
+        .withColumn("cell", cell_col("lat", "lon", res))
+    )
+    out = spatial.zonal_stats(pts, _ZONAL_RECTS, res, "v")
+    cols = ["polygon_id", "count", "sum", "minval", "maxval", "mean"]
+    assert out.columns == cols
+    got = out.toPandas().sort_values("polygon_id").reset_index(drop=True)
+
+    hits = []
+    for _, p in _ZONAL_RECTS.iterrows():
+        (x0, x1), (y0, y1) = (min(p["xs"]), max(p["xs"])), (min(p["ys"]), max(p["ys"]))
+        inside = pdf[(pdf["lon"] >= x0) & (pdf["lon"] < x1) & (pdf["lat"] >= y0) & (pdf["lat"] < y1)]
+        hits.append(inside.assign(polygon_id=p["polygon_id"]))
+    g = pd.concat(hits).groupby("polygon_id")["v"]
+    want = pd.DataFrame(
+        {"count": g.count(), "sum": g.sum(min_count=1), "minval": g.min(), "maxval": g.max()}
+    ).reset_index()
+    want["mean"] = want["sum"] / want["count"].where(want["count"] > 0)
+    pd.testing.assert_frame_equal(got, want[cols], check_dtype=False)
+
+    if pdf["is_nan"].any():
+        joined = spatial.pip_join(pts, _ZONAL_RECTS, res).filter("polygon_id = 0")
+        ref = basic_stats(joined, "v").collect()[0]
+        assert (ref["count"], ref["maxval"], ref["mean"]) == (2, 2.0, 1.0)
+        assert got.loc[0, ["count", "maxval", "mean"]].tolist() == [2, 2.0, 1.0]
 
 
 def test_asof_join_null_payload_from_matched_row(spark):

@@ -799,7 +799,9 @@ def test_ivf_index_append_exact(spark, embs, tmp_path):
     first = spark.createDataFrame(pdf.iloc[:half])
     rest = spark.createDataFrame(pdf.iloc[half:])
     ann.ivf_build_index(first, path, n_centroids=8, list_shards=2, seed=42)
-    ann.ivf_index_append(rest, path)
+    # the second half's assignment cosine sits below the build baseline
+    with pytest.warns(UserWarning, match="drifted"):
+        ann.ivf_index_append(rest, path)
 
     qdf = pdf.head(12)
     queries = spark.createDataFrame(qdf).withColumnRenamed("vec_id", "qid")
@@ -916,7 +918,8 @@ def test_ivf_combined_build_inplace_rerank(spark, embs, tmp_path):
         spark.createDataFrame(pdf.iloc[:half]), grow,
         n_centroids=8, list_shards=2, seed=42, pq=True, m=8,
     )
-    ann.ivf_index_append(spark.createDataFrame(pdf.iloc[half:]), grow)
+    with pytest.warns(UserWarning, match="drifted"):
+        ann.ivf_index_append(spark.createDataFrame(pdf.iloc[half:]), grow)
     n_codes = spark.read.parquet(f"{grow}/codes").count()
     n_full = spark.read.parquet(f"{grow}/assigned").count()
     assert n_codes == len(pdf) and n_full == len(pdf)

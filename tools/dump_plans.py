@@ -35,7 +35,7 @@ from rios_spark.session import get_spark  # noqa: E402
 AUDIT = [
     ("tile_counts_docs", "tile assign + count: map-side partial agg, one shuffle"),
     ("margin_ring_counts", "k-ring explode BEFORE the shuffle (projection pruned to `cell`)"),
-    ("zonal_rect_docs", "broadcast cover + geometry join, codegen'd rect checks, salted two-stage agg"),
+    ("zonal_rect_docs", "broadcast cover + geometry join, codegen'd rect checks, one partial+final agg"),
     ("zonal_pentagon_docs", "pure half-plane SQL expression, zero Python"),
     ("knn_tiled_cust_supp", "Q > N: knn_join's gate broadcasts the supplier side to the Arrow brute kernel over the customer scan, the same plan as knn_cust_supp; ZERO shuffles"),
     ("resample_bilinear_cust", "broadcast kNN kernel + broadcast value join + one groupBy for the weighted quotient"),
