@@ -59,12 +59,12 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from rios_spark import ann
+    from rios_spark import ann, sources
     from rios_spark.session import get_spark
 
     spark = get_spark("ann_index_job")
     if args.vectors:
-        vecs = spark.read.parquet(args.vectors)
+        vecs = sources.table(spark, args.vectors)
     else:
         from rios_spark.datagen import gen_embeddings_spark
 

@@ -49,14 +49,14 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from rios_spark import datagen, spatial
+    from rios_spark import datagen, sources, spatial
     from rios_spark.grid import cell_col, mercator_cols, reproject_to_lonlat
     from rios_spark.plans import Manifest, adaptive_split
 
     spark = SparkSession.builder.appName("rios_spark_tile_job").getOrCreate()
 
     if args.pages:
-        pages = spark.read.parquet(args.pages)
+        pages = sources.table(spark, args.pages)
     else:
         pages = datagen.gen_pages_spark(spark, args.n_pages)
         if args.src_crs:

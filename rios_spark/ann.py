@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from rios_spark import sources
 from rios_spark.plans import sizing
 
 
@@ -210,7 +211,7 @@ def _read_index_meta(spark, path: str) -> dict:
     silent-recall-collapse the hard error exists to prevent (ADVICE
     r5)."""
     try:
-        row = spark.read.parquet(f"{path}/meta").first()
+        row = sources.table(spark, f"{path}/meta").first()
     except AnalysisException as exc:
         if _missing_path(exc):
             return {}
@@ -264,7 +265,7 @@ def ivf_write_meta(
         "centroid_sig": _centroid_sig(cen_mat),
     }
     try:
-        cb = spark.read.parquet(f"{path}/codebooks")
+        cb = sources.table(spark, f"{path}/codebooks")
         agg = cb.agg(F.max("m_idx"), F.max("entry")).first()
         meta["m"] = int(agg[0]) + 1
         meta["ksub"] = int(agg[1]) + 1
@@ -415,7 +416,7 @@ def _centroid_sig(centroids: np.ndarray) -> str:
 def _read_centroids(spark, path: str) -> np.ndarray:
     """`{path}/centroids` as an (n_centroids, dim) float64 matrix in
     centroid_id order."""
-    cen_pdf = spark.read.parquet(f"{path}/centroids").toPandas()
+    cen_pdf = sources.table(spark, f"{path}/centroids").toPandas()
     order = np.argsort(cen_pdf["centroid_id"].to_numpy())
     return np.stack(cen_pdf["vec"].iloc[order].map(np.asarray).to_list()).astype(
         np.float64
@@ -460,7 +461,7 @@ def _train_sq8_params(smat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
 def _read_sq8_params(spark, path: str) -> tuple[np.ndarray, np.ndarray]:
     """Load the sq8_params side table back as (dmin, scale) arrays."""
-    pdf = spark.read.parquet(f"{path}/sq8_params").toPandas().sort_values("dim")
+    pdf = sources.table(spark, f"{path}/sq8_params").toPandas().sort_values("dim")
     return (
         pdf["dmin"].to_numpy(np.float64),
         pdf["scale"].to_numpy(np.float64),
@@ -483,33 +484,14 @@ def _sq8_decode(codes: np.ndarray, dmin: np.ndarray, scale: np.ndarray) -> np.nd
 # (meta, centroids) are IMMUTABLE once a build completes — appends
 # touch only assigned/codes/sq8 and the append_log; only a REBUILD
 # rewrites them, and a rebuild replaces the files (new sizes/mtimes).
-# A per-process memo keyed by those file stats removes two driver
-# parquet reads + an md5 verify from every search on the serving hot
-# path (continuous streaming, repeated-query sessions, foreachBatch)
-# while staying exactly as safe as reloading: any change to either
-# table's file listing misses the memo and goes through the verified
-# load again (code-review r6 #4).
-_HANDLE_CACHE: dict[str, tuple[str, dict, np.ndarray]] = {}
-
-
-def _local_fs_sig(path: str) -> str | None:
-    """File-stats signature of {path}/meta + {path}/centroids for the
-    handle memo; None (= never cache) for non-local paths, where cheap
-    listing/mtime semantics are not guaranteed."""
-    import os
-
-    if "://" in path:
-        return None
-    parts = []
-    for sub in ("meta", "centroids"):
-        d = os.path.join(path, sub)
-        if not os.path.isdir(d):
-            return None
-        for f in sorted(os.listdir(d)):
-            st = os.stat(os.path.join(d, f))
-            parts.append(f"{sub}/{f}:{st.st_size}:{st.st_mtime_ns}")
-    return "|".join(parts)
-
+# A per-process memo keyed by the two tables' file listings
+# (sources.listing_sig) removes two driver parquet reads + an md5
+# verify from every search on the serving hot path (continuous
+# streaming, repeated-query sessions, foreachBatch) while staying
+# exactly as safe as reloading: any change to either table's file
+# listing misses the memo and goes through the verified load again
+# (code-review r6 #4). Non-local paths never cache.
+_HANDLE_CACHE: dict[str, tuple[tuple, dict, np.ndarray]] = {}
 
 # Cached handles kept per process: each is ~n_centroids x dim floats
 # (KBs); the bound only matters for pathological many-index sessions.
@@ -525,15 +507,16 @@ def _index_handle(spark, path: str) -> tuple[dict, np.ndarray]:
     Callers needing a mutable copy take .copy() explicitly. The cache
     itself is bounded FIFO (oldest path evicted past _HANDLE_CACHE_MAX)
     so long sessions over many index paths cannot grow it unboundedly."""
-    sig = _local_fs_sig(path)
-    if sig is not None:
+    sig = tuple(sources.listing_sig(f"{path}/{sub}") for sub in ("meta", "centroids"))
+    cacheable = None not in sig
+    if cacheable:
         hit = _HANDLE_CACHE.get(path)
         if hit is not None and hit[0] == sig:
             return dict(hit[1]), hit[2]
     meta = _require_index_meta(spark, path)
     centroids = _load_centroids_verified(spark, path, meta)
     centroids.setflags(write=False)
-    if sig is not None:
+    if cacheable:
         while len(_HANDLE_CACHE) >= _HANDLE_CACHE_MAX:
             _HANDLE_CACHE.pop(next(iter(_HANDLE_CACHE)))
         _HANDLE_CACHE[path] = (sig, meta, centroids)
@@ -917,7 +900,7 @@ def ivf_index_status(spark, path: str) -> dict:
 
 def _read_codebooks(spark, path: str) -> np.ndarray:
     """Load the PQ codebooks table back into (m, ksub, dsub)."""
-    cb_pdf = spark.read.parquet(f"{path}/codebooks").toPandas()
+    cb_pdf = sources.table(spark, f"{path}/codebooks").toPandas()
     m = int(cb_pdf["m_idx"].max()) + 1
     ksub = int(cb_pdf["entry"].max()) + 1
     dsub = len(cb_pdf["vec"].iloc[0])

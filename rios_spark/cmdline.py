@@ -21,7 +21,7 @@ import argparse
 import datetime
 import sys
 
-from rios_spark import stats
+from rios_spark import sources, stats
 from rios_spark.session import get_spark
 
 
@@ -52,7 +52,7 @@ def calcstats_main(argv: list[str] | None = None) -> int:
     from pyspark.sql import functions as F
 
     for path in args.table:
-        df = spark.read.parquet(path)
+        df = sources.table(spark, path)
         cols = (
             [c.strip() for c in args.columns.split(",")]
             if args.columns

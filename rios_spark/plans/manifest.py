@@ -75,7 +75,10 @@ class Manifest:
         return all_cells.join(F.broadcast(done), "cell", "left_anti")
 
     def append(self, entries: DataFrame) -> None:
-        entries.write.mode("append").parquet(self.path)
+        """Append lineage rows as one file: the rows are few, and a local
+        frame would otherwise be written as one file per default
+        partition."""
+        entries.coalesce(1).write.mode("append").parquet(self.path)
 
     def run_stage(
         self,

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from rios_spark import spatial, textops
+from rios_spark import sources, spatial, textops
 from rios_spark.dedup import MERSENNE61, fingerprint_near_dup_sql
 from rios_spark.grid import (
     RES_MUL,
@@ -51,7 +51,7 @@ def _f6(c):
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return sources.table(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _geo(df: DataFrame, key: str, res: int) -> DataFrame:
@@ -1151,12 +1151,15 @@ def q_doc_lang_scores(spark, sf_dir):
     language, so duplicate-counting semantics match the per-language
     filters exactly. (The previous form ran one interpreted HOF filter
     lambda per token per language — measured ~3x slower.)"""
+    import pandas as pd
+
     docs = sizing.fan_out(_t(spark, sf_dir, "documents")).select(
         "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("tok")
     )
-    vocab = [
-        (w, lang) for lang, words in _LANGS_SQL.items() for w in words
-    ]
+    vocab = pd.DataFrame(
+        [(w, lang) for lang, words in _LANGS_SQL.items() for w in words],
+        columns=["tok", "lang"],
+    )
     vdf = F.broadcast(spark.createDataFrame(vocab, "tok string, lang string"))
     j = docs.join(vdf, "tok", "left")
     aggs = [

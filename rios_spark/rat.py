@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rios_spark import sources
+
 
 def rat_apply(
     df: DataFrame, fn: Callable[[pd.DataFrame], pd.DataFrame], out_schema: str
@@ -188,7 +190,7 @@ def read_rat(spark, path: str) -> DataFrame:
     """Read an external RAT table back (the RatZarrHandle read side).
     Category tables are small by definition — callers broadcast-join
     them onto pixel/cell frames."""
-    return spark.read.parquet(path)
+    return sources.table(spark, path)
 
 
 # --- row-count modes (E1) -----------------------------------------------------

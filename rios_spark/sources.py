@@ -11,6 +11,17 @@ RIOS analogues re-expressed (SURVEY.md §2.1):
   filter that prunes partitions at plan time.
 - ImageInfo metadata scan (rios/fileinfo.py:35-108) → ``table_info``.
 
+Table handles: ``table`` resolves a read-mostly table once per session.
+``spark.read.parquet`` lists the files and infers the schema from the
+footers on every call; ``table`` returns the DataFrame it resolved
+before for the same session and path while the path's file listing
+(names, sizes, mtimes) is unchanged, the way a catalog pins a snapshot.
+A rewritten table changes its listing and is read again. A path that
+cannot be stat'ed locally (a URI, a glob) is read fresh every time.
+Paths that a job writes and then reads back (manifests, stats stores,
+fresh tile outputs) use ``spark.read`` directly: their listing changes
+on every call.
+
 Deployment note: on a production cluster this module targets Iceberg
 (`df.writeTo(t).partitionedBy(bucket(N, cell))`, snapshot commit ==
 RIOS's close); this container has no Iceberg jars, so the same layout
@@ -19,12 +30,72 @@ is realized as hive-partitioned parquet. The API is format-agnostic.
 
 from __future__ import annotations
 
+import os
+import stat
+import threading
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rios_spark.grid import RES_MUL, parent_col
+
+
+# resolved tables kept per session; bounded FIFO (oldest evicted first)
+_TABLE_MEMO_MAX = 64
+# guards the memo's evict-and-insert (streaming callbacks run on their own
+# threads); the read itself runs outside it
+_TABLE_MEMO_LOCK = threading.Lock()
+
+
+def listing_sig(path: str) -> tuple | None:
+    """The file listing of a local table, as (relative name, size,
+    mtime_ns) per file, sorted; a single-file table is its one file.
+    None (never cache) for a path that cannot be stat'ed as a local file
+    or directory, which includes every URI (file://, s3a://, hdfs://)."""
+
+    def fail(err):
+        raise err
+
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (("", st.st_size, st.st_mtime_ns),)
+        sig = []
+        for root, dirs, files in os.walk(path, onerror=fail):
+            dirs.sort()
+            for f in sorted(files):
+                full = os.path.join(root, f)
+                fst = os.stat(full)
+                sig.append((os.path.relpath(full, path), fst.st_size, fst.st_mtime_ns))
+        return tuple(sig)
+    except OSError:
+        return None
+
+
+def table(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)`, resolved once per session while the
+    path's file listing is unchanged (see the module docstring). The memo
+    lives on the session object, so it dies with the session and a new
+    session starts empty. Two calls may return the same DataFrame; Spark
+    deduplicates the relation when a plan joins it with itself, and a
+    `df[col]` reference it cannot place on one side of such a join
+    raises (spark.sql.analyzer.failAmbiguousSelfJoin) rather than
+    answering wrongly: name the sides with `df.alias`."""
+    sig = listing_sig(path)
+    if sig is None:
+        return spark.read.parquet(path)
+    memo = spark.__dict__.setdefault("_rios_tables", {})
+    hit = memo.get(path)
+    if hit is not None and hit[0] == sig:
+        return hit[1]
+    df = spark.read.parquet(path)
+    with _TABLE_MEMO_LOCK:
+        memo.pop(path, None)
+        while len(memo) >= _TABLE_MEMO_MAX:
+            memo.pop(next(iter(memo)))
+        memo[path] = (sig, df)
+    return df
 
 
 def write_tiled(

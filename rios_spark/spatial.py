@@ -182,9 +182,13 @@ def pip_join(
                 geo_rows.append(
                     (int(p["polygon_id"]), False, 0.0, 0.0, 0.0, 0.0, edges)
                 )
+        # a pandas frame takes the Arrow path and plans as a local
+        # relation; a list of rows would go through a Python RDD, one
+        # Python-worker task per default partition on every call
+        helper = ["__is_rect", "__x0", "__y0", "__x1", "__y1", "__edges"]
         geo_df = F.broadcast(
             spark.createDataFrame(
-                geo_rows,
+                pd.DataFrame(geo_rows, columns=["polygon_id", *helper]),
                 "polygon_id long, __is_rect boolean, __x0 double, __y0 double,"
                 " __x1 double, __y1 double,"
                 " __edges array<struct<xi:double,yi:double,xj:double,yj:double>>",
@@ -202,7 +206,6 @@ def pip_join(
             (px >= F.col("__x0")) & (px < F.col("__x1"))
             & (py >= F.col("__y0")) & (py < F.col("__y1")),
         ).otherwise(F.aggregate(F.col("__edges"), F.lit(0), cross) % 2 == 1)
-        helper = ["__is_rect", "__x0", "__y0", "__x1", "__y1", "__edges"]
         return cand2.filter(inside).drop(*helper)
 
     rings = {

@@ -86,6 +86,31 @@ def test_manifest_resume(spark, pages, tmp_path):
     assert (m["n_bytes"] > 0).all()
 
 
+def test_manifest_stage_appends_one_file(spark, tmp_path):
+    """Each run_stage that records cells adds exactly one lineage file to
+    the manifest, however many default partitions the session has; the
+    resume still skips the done cells, and a no-op stage adds none."""
+    import os
+
+    def parts():
+        return sorted(f for f in os.listdir(tmp_path / "manifest") if f.endswith(".parquet"))
+
+    df = spark.createDataFrame(
+        pd.DataFrame({"cell": np.arange(33) % 11, "page_id": np.arange(33), "url": ["u"] * 33})
+    )
+    man = Manifest(spark, str(tmp_path / "manifest"))
+    out = str(tmp_path / "out")
+    first = df.filter(F.col("cell") < 5)
+    assert man.run_stage("job", "s", first, out, payload_col="url")["cells_pending"] == 5
+    assert len(parts()) == 1
+    r = man.run_stage("job", "s", df, out, payload_col="url")
+    assert r["cells_total"] == 11 and r["cells_pending"] == 6 and r["rows_written"] == 18
+    assert len(parts()) == 2
+    assert man.run_stage("job", "s", df, out, payload_col="url")["cells_pending"] == 0
+    assert len(parts()) == 2
+    assert sorted(r["cell"] for r in man.read().collect()) == list(range(11))
+
+
 def test_manifest_run_stage_releases_pending(spark, tmp_path, monkeypatch):
     """run_stage leaves nothing in the session cache: not after a stage
     that writes, nor after one with nothing pending, nor after one

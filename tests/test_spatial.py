@@ -149,6 +149,25 @@ def test_pip_join_same_rows_on_both_kernels(spark, monkeypatch):
         assert columns[0] == columns[1]
 
 
+def test_pip_join_and_zonal_build_no_python_rdd(spark, monkeypatch):
+    """The polygon side (cover and geometry frames) is planned as a
+    local relation on both kernels: no `Scan ExistingRDD`, i.e. no
+    Python RDD and no Python-worker task per call to build it."""
+    res = 5
+    df, _ = _pages_df(spark, 2000, res)
+    polys = datagen.gen_polygons()[["polygon_id", "xs", "ys"]]
+    rows = []
+    for gate in (10**9, 0):  # expression, then Arrow kernel
+        monkeypatch.setattr(sizing, "PIP_EXPR_MAX_VERTICES", gate)
+        pip = spatial.pip_join(df, polys, res)
+        zonal = spatial.zonal_stats(df, polys, res, "page_id")
+        for out in (pip, zonal):
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "ExistingRDD" not in plan, plan
+        rows.append(sorted(map(tuple, pip.select("polygon_id", "page_id").collect())))
+    assert rows[0] and rows[0] == rows[1]
+
+
 def _brute_oracle(qdf, ddf, k):
     d = spatial.haversine_km(
         qdf["lat"].to_numpy()[:, None],

@@ -4,13 +4,15 @@ embeddings tables at sf0.001."""
 
 from __future__ import annotations
 
+import pathlib
+
 import duckdb
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from rios_spark import ann, datagen, dedup, textops
+from rios_spark import ann, datagen, dedup, sources, textops
 
 SF = "/root/testdata/sf0.001"
 
@@ -1615,9 +1617,15 @@ def test_index_handle_memo(spark, tmp_path, monkeypatch):
     )
     ann.ivf_search(spark, path, qs, 3, nprobe=4, q_id="qid").toPandas()
     assert calls["n"] == 2
-    sig_now = ann._local_fs_sig(path)
+    sig_now = tuple(sources.listing_sig(f"{path}/{sub}") for sub in ("meta", "centroids"))
     assert ann._HANDLE_CACHE[path][0] == sig_now
 
-    # non-local paths are never cached
-    assert ann._local_fs_sig("s3://bucket/idx") is None
-    assert ann._local_fs_sig(str(tmp_path / "missing")) is None
+    # non-local and missing paths are never cached
+    assert sources.listing_sig("s3://bucket/idx/meta") is None
+    assert sources.listing_sig(str(tmp_path / "missing" / "meta")) is None
+    ann._HANDLE_CACHE.clear()
+    ann.ivf_search(spark, path, qs, 3, nprobe=4, q_id="qid").toPandas()
+    uri = pathlib.Path(path).as_uri()
+    ann.ivf_search(spark, uri, qs, 3, nprobe=4, q_id="qid").toPandas()
+    ann.ivf_search(spark, uri, qs, 3, nprobe=4, q_id="qid").toPandas()
+    assert calls["n"] == 5 and list(ann._HANDLE_CACHE) == [path]
